@@ -1,5 +1,8 @@
 package graft.core
 
+import com.esotericsoftware.kryo.{Kryo, KryoSerializable}
+import com.esotericsoftware.kryo.io.{Input, Output}
+
 /** Element dtypes supported by the cube engine, mirroring the dtype surface
   * the reference exercises (float64/int64/int32 data, datetime64[ns] time,
   * float32 for promotion tests — aggregation.py:135-136, FIXTURES.md §1).
@@ -81,11 +84,55 @@ object DType {
   * The heavy ops the pipeline needs — rectangular slice (ds.isel) and
   * block assignment (xr.combine_nested's concat) — are implemented as
   * System.arraycopy runs over the innermost dimension.
+  *
+  * A [[NDArray.deferred]] array knows its dtype and shape up front and
+  * loads its data on the first `data` access, at most once; metadata-only
+  * readers (the schema pass) never trigger the load. Serializing a deferred
+  * array (Kryo or Java) loads it first, so the loader never leaves the JVM
+  * that built it.
   */
-final class NDArray(val dtype: DType, val shape: Vector[Int], val data: AnyRef)
-    extends Serializable {
-  require(NDArray.sizeOf(shape) == java.lang.reflect.Array.getLength(data),
-    s"shape $shape does not match data length ${java.lang.reflect.Array.getLength(data)}")
+final class NDArray private (private var _dtype: DType,
+                             private var _shape: Vector[Int],
+                             @volatile private var _data: AnyRef,
+                             @transient private var load: () => AnyRef)
+    extends Serializable with KryoSerializable {
+
+  def this(dtype: DType, shape: Vector[Int], data: AnyRef) =
+    this(dtype, shape, NDArray.checked(shape, data), null)
+
+  def dtype: DType = _dtype
+  def shape: Vector[Int] = _shape
+
+  /** The primitive backing array, loaded here if the array is deferred. */
+  def data: AnyRef = {
+    val d = _data
+    if (d != null) d
+    else synchronized {
+      if (_data == null) {
+        _data = NDArray.checked(_shape, load())
+        load = null
+      }
+      _data
+    }
+  }
+
+  def write(kryo: Kryo, out: Output): Unit = {
+    out.writeString(_dtype.name)
+    out.writeInt(_shape.length, true)
+    _shape.foreach(out.writeInt(_, true))
+    kryo.writeClassAndObject(out, data)
+  }
+
+  def read(kryo: Kryo, in: Input): Unit = {
+    _dtype = DType.fromName(in.readString())
+    _shape = Vector.fill(in.readInt(true))(in.readInt(true))
+    _data = NDArray.checked(_shape, kryo.readClassAndObject(in))
+  }
+
+  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
+    data
+    out.defaultWriteObject()
+  }
 
   def size: Int = NDArray.sizeOf(shape)
   def ndim: Int = shape.length
@@ -195,6 +242,17 @@ final class NDArray(val dtype: DType, val shape: Vector[Int], val data: AnyRef)
 
 object NDArray {
   def sizeOf(shape: Vector[Int]): Int = shape.product
+
+  /** `data`, after checking that its length matches `shape`. */
+  private def checked(shape: Vector[Int], data: AnyRef): AnyRef = {
+    val n = java.lang.reflect.Array.getLength(data)
+    require(sizeOf(shape) == n, s"shape $shape does not match data length $n")
+    data
+  }
+
+  /** An array whose data `load` produces on the first `data` access. */
+  def deferred(dtype: DType, shape: Vector[Int])(load: => AnyRef): NDArray =
+    new NDArray(dtype, shape, null, () => load)
 
   def alloc(dtype: DType, n: Int): AnyRef = dtype match {
     case DType.I4 | DType.U4 => new Array[Int](n)

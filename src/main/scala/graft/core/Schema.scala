@@ -20,7 +20,10 @@ final case class CubeSchema(attrs: Attrs,
 object CubeSchema {
 
   /** Metadata-only schema of a fragment (dataset_to_schema,
-    * aggregation.py:20-37; data is never touched). */
+    * aggregation.py:20-37). It reads dims, shapes, dtypes and attrs and
+    * never an array's data, so a fragment of [[NDArray.deferred]] arrays
+    * is not loaded; an opener that decodes eagerly has read its data
+    * before this runs. */
   def fromFragment(f: Fragment): CubeSchema = {
     def spec(v: Variable): VarSpec =
       VarSpec(v.dims, v.shape, v.dtype, v.attrs,

@@ -17,6 +17,36 @@ object Rechunking {
   def groupKeyString(k: GroupKey): String =
     k.map { case (d, i) => s"$d=$i" }.mkString("|")
 
+  /** Whether every target chunk of the write `grain` gets pieces from
+    * exactly one fragment, decided from metadata alone: the per-position
+    * lengths of each concat combine dim (`schema.chunks`), the grain and the
+    * append offset. When it holds, the groupByKey after `splitFragment`
+    * would regroup nothing, so each piece can be written by the task that
+    * split it.
+    *
+    * Along a concat dim, two neighbouring fragments share a chunk unless
+    * the boundary between them lies on a chunk boundary. The grid is the
+    * one `splitFragment` builds: a concat dim whose target chunk spans the
+    * whole dim is left out of it, so all of that dim's fragments land in
+    * one chunk. Merge dims never share (they are part of the group key) and
+    * other dims are whole in every fragment. A zero-length or missing
+    * position is reported as shared, which keeps the shuffle path. */
+  def everyChunkOwned(schema: CubeSchema, grain: Map[String, Int],
+                      combineDims: Seq[Dimension], appendOffset: Int = 0): Boolean = {
+    val grid = CubeSchema.determineTargetChunks(schema, grain, includeAllDims = false)
+    combineDims.filter(_.operation == CombineOp.Concat).forall { d =>
+      schema.chunks.get(d.name).exists { byPos =>
+        val lens = (0 until byPos.size).map(byPos.getOrElse(_, 0))
+        lens.nonEmpty && lens.forall(_ > 0) && (grid.get(d.name) match {
+          case None => lens.size == 1
+          case Some(c) =>
+            val boundaries = lens.init.scanLeft(appendOffset)(_ + _).tail
+            boundaries.forall(_ % c == 0)
+        })
+      }
+    }
+  }
+
   /** rechunking.py:23-129 */
   def splitFragment(index: Index, ds: Fragment,
                     targetChunksSpec: Option[Map[String, Int]] = None,

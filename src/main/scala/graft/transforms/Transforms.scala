@@ -24,18 +24,22 @@ final class FragmentExceedsSerializerBufferException(
 
 /** The user-facing pipeline composites, re-expressed on typed Datasets.
   *
-  * Shape (SURVEY §3.1): createDataset(pattern.items) → map(open) →
+  * Shape (SURVEY §3.1): parallelize(pattern.items) → map(open) →
   * schema reduction (partial per-partition fold + tiny driver merge) →
   * broadcast schema → map(reindex) → flatMap(split) → groupByKey →
-  * mapGroups(combine) → map(write region) — two shuffles, one broadcast,
-  * exactly the reference's physical shape minus Beam.
+  * mapGroups(combine) → map(write region) — the reference's physical shape
+  * minus Beam. When no target chunk gathers pieces of two fragments
+  * ([[graft.rechunking.Rechunking.everyChunkOwned]], decided from the
+  * schema alone), the groupByKey would regroup nothing and `storeToZarr`
+  * writes each piece in the task that split it: no shuffle at all.
   *
   * Scale notes: fragment payloads move through Kryo-encoded binary columns;
   * the only all-to-one step is the schema merge, which is metadata-sized
-  * (~1 KB per input file). The rechunk groupByKey — the reference's
-  * acknowledged hotspot (transforms.py:414) — shuffles each fragment byte
-  * exactly once, keyed by disjoint target-chunk groups, so writes need no
-  * locks and parallelism equals the number of target chunk groups.
+  * (~1 KB per input file). When chunks are shared, the rechunk groupByKey —
+  * the reference's acknowledged hotspot (transforms.py:414) — shuffles each
+  * fragment byte exactly once, keyed by disjoint target-chunk groups; on
+  * either path writes need no locks, because each storage object is
+  * written by exactly one task.
   */
 object Pipelines {
 
@@ -46,9 +50,8 @@ object Pipelines {
     val items = pattern.items.toSeq
     val n = if (numSlices > 0) numSlices
       else math.min(items.size, spark.sparkContext.defaultParallelism)
-    spark.createDataset(items)(
+    spark.createDataset(spark.sparkContext.parallelize(items, math.max(n, 1)))(
       Encoders.kryo[(Index, String)])
-      .repartition(math.max(n, 1))
   }
 
   /** OpenWithXarray analog: URL → Fragment via the FileType registry. */
@@ -105,10 +108,13 @@ object Pipelines {
 
   /** Distributed scan of ONE existing Zarr store along `dim` — the
     * rechunk-an-existing-store source (examples/feedstock/gpcp_rechunk.py:
-    * 16-36). The driver reads only store metadata to plan slab boundaries;
-    * each task then range-reads its own slab's chunks (readFragmentRegion),
-    * so a 100 TB store scans with zero driver data movement and parallelism
-    * = number of slabs. The returned items carry IndexedPositions and flow
+    * 16-36). The driver reads only store metadata to plan slab boundaries
+    * and spreads the slab list without a shuffle; each task then range-reads
+    * its own slab's chunks (readFragmentRegion), so a 100 TB store scans
+    * with zero driver data movement and parallelism = number of slabs.
+    * Slab arrays are deferred: a pass that looks only at metadata (the
+    * schema pass of storeToZarr) reads each slab's `zarr.json` documents
+    * and no chunk. The returned items carry ordinal positions and flow
     * straight into rechunk/storeToZarr. */
   def scanZarrStore(spark: SparkSession, storePath: String, dim: String,
                     itemsPerFragment: Int): Dataset[(Index, Fragment)] = {
@@ -130,10 +136,10 @@ object Pipelines {
         (Index.of(d -> Pos(i)), Slc(lo, hi))
       }
     val n = math.max(1, math.min(slabs.size, spark.sparkContext.defaultParallelism))
-    spark.createDataset(slabs)(Encoders.kryo[(Index, Slc)])
-      .repartition(n)
+    spark.createDataset(spark.sparkContext.parallelize(slabs, n))(
+      Encoders.kryo[(Index, Slc)])
       .map { case (idx, sl) =>
-        (idx, ZarrGroup(storePath).readFragmentRegion(Map(dim -> sl)))
+        (idx, ZarrGroup(storePath).readFragmentRegion(Map(dim -> sl), deferred = true))
       }(Encoders.kryo[(Index, Fragment)])
   }
 
@@ -199,33 +205,53 @@ object Pipelines {
   }
 
   /** Rechunk (transforms.py:401-417): flatMap(split) → groupByKey →
-    * mapGroups(combine). One shuffle, keyed by target-chunk group.
-    *
-    * Deploy-time guard (SCALE_r6 finding #1): every split fragment rides
-    * the shuffle through the kryo serializer, whose write buffer is capped
-    * at `spark.kryoserializer.buffer.max` (64m default) — an oversized
-    * slab used to die in an opaque `KryoException: Buffer overflow` deep
-    * in the shuffle writer. Check the array mass up front and fail with
-    * the fragment's index, its size, and both remedies instead. */
+    * mapGroups(combine). One shuffle, keyed by target-chunk group; it runs
+    * whether or not the groups regroup anything (`storeToZarr` skips it
+    * when they would not). */
   def rechunk(frags: Dataset[(Index, Fragment)],
               targetChunks: Option[Map[String, Int]],
               schema: Option[CubeSchema]): Dataset[(Index, Fragment)] = {
-    val bufferMax = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-      frags.sparkSession.conf.get("spark.kryoserializer.buffer.max", "64m"))
+    val split = guardedSplit(frags.sparkSession, targetChunks, schema)
     frags
       .flatMap { case (idx, ds) =>
-        Rechunking.splitFragment(idx, ds, targetChunks, schema)
-          .map { case (k, v) =>
-            val est = v._2.approxBytes
-            if (est > bufferMax)
-              throw new FragmentExceedsSerializerBufferException(v._1, est, bufferMax)
-            (Rechunking.groupKeyString(k), v)
-          }
+        split(idx, ds).map { case (k, v) => (Rechunking.groupKeyString(k), v) }
       }(Encoders.kryo[(String, (Index, Fragment))])
       .groupByKey(_._1)(Encoders.STRING)
       .mapGroups { (_, it) =>
         Rechunking.combineFragments(it.map(_._2).toSeq)
       }(Encoders.kryo[(Index, Fragment)])
+  }
+
+  /** `Rechunking.splitFragment` with a deploy-time guard (SCALE_r6 finding
+    * #1): a split fragment rides the shuffle through the kryo serializer,
+    * whose write buffer is capped at `spark.kryoserializer.buffer.max`
+    * (64m default) — an oversized slab used to die in an opaque
+    * `KryoException: Buffer overflow` deep in the shuffle writer. Check the
+    * array mass up front and fail with the fragment's index, its size, and
+    * both remedies instead. The shuffle-free write path keeps the same
+    * limit, so a slab size valid on one path is valid on the other. */
+  private def guardedSplit(spark: SparkSession,
+                           targetChunks: Option[Map[String, Int]],
+                           schema: Option[CubeSchema])
+      : (Index, Fragment) => Iterator[(Rechunking.GroupKey, (Index, Fragment))] = {
+    val bufferMax = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      spark.conf.get("spark.kryoserializer.buffer.max", "64m"))
+    (idx, ds) => Rechunking.splitFragment(idx, ds, targetChunks, schema).map {
+      case kv @ (_, (pieceIdx, piece)) =>
+        val est = piece.approxBytes
+        if (est > bufferMax)
+          throw new FragmentExceedsSerializerBufferException(pieceIdx, est, bufferMax)
+        kv
+    }
+  }
+
+  /** Run `body` with `label` as the description of the Spark jobs it
+    * starts, then restore the caller's description. */
+  private def labelled[T](spark: SparkSession, label: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prior = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(label)
+    try body finally sc.setJobDescription(prior)
   }
 
   /** Per-variable output encoding — the StoreToZarr `encoding=` kwarg
@@ -393,7 +419,10 @@ object Pipelines {
       case None => 0
     }
 
-    val schema = determineSchema(items, combineDims)
+    val spark = items.sparkSession
+    val schema = labelled(spark, "storeToZarr: schema") {
+      determineSchema(items, combineDims)
+    }
     val indexed = indexItems(items, schema, appendOffset)
     val chunks = dynamicChunkingFn match {
       case Some(fn) =>
@@ -404,14 +433,26 @@ object Pipelines {
     // fragments must align with the WRITE granularity: whole shards when
     // sharding (one executor write = one storage object, no write conflicts)
     val writeGrain = chunks ++ targetShards
-    val rechunked = rechunk(indexed, Some(writeGrain), Some(schema))
     val target = prepareZarrTarget(schema, storePath, chunks, attrs, appendDim,
       gzipLevel, targetShards, encoding, zarrFormat)
     // parallel region writes from executors (local FS here; an object store
     // or shared FS in cluster deployments)
-    rechunked.foreachPartition { (it: Iterator[(Index, Fragment)]) =>
+    def writeAll(it: Iterator[(Index, Fragment)]): Unit = {
       val g = ZarrGroup(storePath)
       it.foreach { case (idx, frag) => storeFragment(idx, frag, g) }
+    }
+    if (Rechunking.everyChunkOwned(schema, writeGrain, combineDims, appendOffset)) {
+      // each target chunk's pieces come from one fragment: write them in the
+      // task that split it, with no shuffle
+      val split = guardedSplit(spark, Some(writeGrain), Some(schema))
+      labelled(spark, "storeToZarr: write (no shuffle)") {
+        indexed.foreachPartition { (it: Iterator[(Index, Fragment)]) =>
+          writeAll(it.flatMap { case (idx, frag) => split(idx, frag).map(_._2) })
+        }
+      }
+    } else labelled(spark, "storeToZarr: rechunk shuffle + write") {
+      rechunk(indexed, Some(writeGrain), Some(schema))
+        .foreachPartition((it: Iterator[(Index, Fragment)]) => writeAll(it))
     }
     // Record the applied batch tag AFTER the data lands (a failed job
     // leaves no tag, so a retry is not spuriously refused). KNOWN CRASH

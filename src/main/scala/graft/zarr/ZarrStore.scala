@@ -1531,9 +1531,12 @@ final class ZarrGroup(val root: String,
   def readFragment(): Fragment = readFragmentRegion(Map.empty)
 
   /** Read a sub-region of the group as a Fragment: `sel` maps dim name ->
-    * element slice; unselected dims are read whole. The distributed scan
-    * (Pipelines.scanZarrStore) calls this per slab. */
-  def readFragmentRegion(sel: Map[String, Slc]): Fragment = {
+    * element slice; unselected dims are read whole. With `deferred` only
+    * the metadata is read now and each variable's region is read on its
+    * first data access ([[NDArray.deferred]]); the distributed scan
+    * (Pipelines.scanZarrStore) reads its slabs this way. */
+  def readFragmentRegion(sel: Map[String, Slc],
+                         deferred: Boolean = false): Fragment = {
     val names = arrayNames
     val metas = names.map(n => n -> arrayMeta(n)).toMap
     val fullDims: Map[String, Int] = metas.values.flatMap(m =>
@@ -1549,7 +1552,10 @@ final class ZarrGroup(val root: String,
       val starts = m.dimensionNames.map(d => sel.get(d).map(_.start).getOrElse(0))
       val shape = m.dimensionNames.zip(m.shape).map { case (d, full) =>
         sel.get(d).map(_.length).getOrElse(full) }
-      Variable(m.dimensionNames, readRegion(n, starts, shape), m.attrs)
+      val data =
+        if (deferred) NDArray.deferred(m.dtype, shape)(readRegion(n, starts, shape).data)
+        else readRegion(n, starts, shape)
+      Variable(m.dimensionNames, data, m.attrs)
     }
     Fragment(
       dims = dims,

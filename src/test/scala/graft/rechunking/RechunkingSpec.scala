@@ -140,4 +140,109 @@ class RechunkingSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](
       Rechunking.splitFragment(Index.of(timeDim -> Pos.indexed(0, 4)), full).toVector)
   }
+
+  // ---- everyChunkOwned: the metadata rule that lets storeToZarr skip the
+  // rechunk shuffle, checked against what splitFragment actually groups ----
+
+  /** Fragments laid out by per-position lengths along each concat dim,
+    * `merge` positions along a merge dim, and whole `other` dims. */
+  private final case class Layout(concat: Map[String, Seq[Int]],
+                                  other: Map[String, Int] = Map("lat" -> 4),
+                                  merge: Int = 0) {
+    val schema: CubeSchema = CubeSchema(Attrs.empty, Map.empty, Map.empty,
+      dims = concat.map { case (d, ls) => d -> ls.sum } ++ other,
+      chunks = concat.map { case (d, ls) => d -> ls.indices.map(i => i -> ls(i)).toMap })
+    def dims: Vector[Dimension] =
+      concat.keys.toVector.sorted.map(Dimension(_, CombineOp.Concat)) ++
+        (if (merge > 0) Vector(Dimension("variable", CombineOp.Merge)) else Vector.empty)
+
+    /** Ground truth: split every fragment and see whether any group key
+      * collects pieces of two fragments. */
+    def shared(grain: Map[String, Int], appendOffset: Int): Boolean = {
+      val names = concat.keys.toVector.sorted
+      val cells = names.foldLeft(Vector(Map.empty[String, Int])) { (acc, d) =>
+        acc.flatMap(c => concat(d).indices.map(i => c + (d -> i))) }
+      val withMerge = cells.flatMap(c =>
+        if (merge > 0) (0 until merge).map(m => (c, Some(m))) else Vector((c, None)))
+      val keyOwners = withMerge.zipWithIndex.flatMap { case ((cell, m), id) =>
+        val entries = names.map { d =>
+          val ls = concat(d)
+          Dimension(d, CombineOp.Concat) ->
+            Pos.indexed(appendOffset + ls.take(cell(d)).sum, appendOffset + ls.sum)
+        } ++ m.map(Dimension("variable", CombineOp.Merge) -> Pos(_))
+        val sizes = names.map(d => d -> concat(d)(cell(d))).toMap ++ other
+        val dimOrder = names ++ other.keys.toVector.sorted
+        val frag = Fragment(sizes, Map.empty, Map("v" -> Variable(dimOrder,
+          NDArray.zeros(DType.F8, dimOrder.map(sizes)))))
+        Rechunking.splitFragment(Index(entries.toMap), frag, Some(grain), Some(schema))
+          .map(kv => (kv._1, id))
+      }
+      keyOwners.groupBy(_._1).values.exists(_.map(_._2).distinct.size > 1)
+    }
+
+    def owned(grain: Map[String, Int], appendOffset: Int = 0): Boolean = {
+      val rule = Rechunking.everyChunkOwned(schema, grain, dims, appendOffset)
+      assert(rule == !shared(grain, appendOffset),
+        s"rule says owned=$rule but splitFragment disagrees for $this grain $grain")
+      rule
+    }
+  }
+
+  test("ownership: slab 16 onto chunk 16 is owned") {
+    assert(Layout(Map("time" -> Seq(16, 16, 16, 16))).owned(Map("time" -> 16)))
+  }
+
+  test("ownership: slab 12 onto chunk 8 and slab 3 onto chunk 8 are shared") {
+    assert(!Layout(Map("time" -> Seq(12, 12, 12, 12))).owned(Map("time" -> 8)))
+    assert(!Layout(Map("time" -> Seq.fill(8)(3))).owned(Map("time" -> 8)))
+  }
+
+  test("ownership: a remainder last chunk stays owned") {
+    assert(Layout(Map("time" -> Seq(16, 16, 5))).owned(Map("time" -> 16)))
+    // slabs that are multiples of the chunk are owned too
+    assert(Layout(Map("time" -> Seq(16, 16, 7))).owned(Map("time" -> 8)))
+  }
+
+  test("ownership: a misaligned append offset shares chunks") {
+    val l = Layout(Map("time" -> Seq(16, 16)))
+    assert(l.owned(Map("time" -> 16), appendOffset = 32))
+    assert(!l.owned(Map("time" -> 16), appendOffset = 5))
+  }
+
+  test("ownership: two concat dims must both be aligned") {
+    assert(Layout(Map("time" -> Seq(4, 4), "lat" -> Seq(6, 6)), other = Map("lon" -> 3))
+      .owned(Map("time" -> 4, "lat" -> 6)))
+    assert(!Layout(Map("time" -> Seq(4, 4), "lat" -> Seq(6, 6)), other = Map("lon" -> 3))
+      .owned(Map("time" -> 4, "lat" -> 4)))
+  }
+
+  test("ownership: a merge dim never shares a chunk") {
+    val l = Layout(Map("time" -> Seq(4, 4, 4)), merge = 2)
+    assert(l.owned(Map("time" -> 4)))
+    assert(!l.owned(Map("time" -> 8)))
+  }
+
+  test("ownership: splitting a dim no fragment concatenates keeps chunks owned") {
+    assert(Layout(Map("time" -> Seq(4, 4)), other = Map("lat" -> 10))
+      .owned(Map("time" -> 4, "lat" -> 3)))
+  }
+
+  test("ownership: a shard grain coarser than the chunk shares chunks") {
+    val l = Layout(Map("time" -> Seq(16, 16, 16, 16)))
+    // the write grain is chunks ++ shards: a 32-step shard holds two slabs
+    assert(!l.owned(Map("time" -> 16) ++ Map("time" -> 32)))
+    assert(l.owned(Map("time" -> 8) ++ Map("time" -> 16)))
+  }
+
+  test("ownership: a concat dim whose target chunk is the whole dim is shared") {
+    // determineTargetChunks(includeAllDims = false) drops such a dim from the
+    // split grid, so every fragment along it lands in the same chunk
+    assert(!Layout(Map("time" -> Seq(4, 4, 4))).owned(Map("time" -> 12)))
+    assert(!Layout(Map("time" -> Seq(4, 4), "lat" -> Seq(3, 3)), other = Map.empty)
+      .owned(Map("time" -> 4, "lat" -> 6)))
+    // one fragment along the dim owns its single chunk
+    assert(Layout(Map("time" -> Seq(12))).owned(Map("time" -> 12)))
+    // an append whose boundary lands on a chunk multiple is still shared
+    assert(!Layout(Map("time" -> Seq(22, 10))).owned(Map("time" -> 32), appendOffset = 10))
+  }
 }

@@ -7,6 +7,7 @@ import graft.core.GoldenCube
 import graft.patterns.{FilePattern, FileType}
 import graft.zarr.ZarrGroup
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** The flagship golden round-trip (tests/test_end_to_end.py:37-134 in Spark
   * clothes): split the golden cube into per-file Zarr fragments on disk,
@@ -444,5 +445,109 @@ class EndToEndSpec extends AnyFunSuite {
     assert(named.isDefined, s"expected the named guard, got: $e")
     assert(named.get.getMessage.contains("spark.kryoserializer.buffer.max"))
     assert(named.get.getMessage.contains("itemsPerFragment"))
+  }
+
+  /** Every object under a store root, by relative path. */
+  private def objects(root: String): Map[String, Seq[Byte]] = {
+    val base = java.nio.file.Paths.get(root)
+    val walk = Files.walk(base)
+    try walk.iterator.asScala.filter(Files.isRegularFile(_))
+      .map(p => base.relativize(p).toString -> Files.readAllBytes(p).toSeq).toMap
+    finally walk.close()
+  }
+
+  /** A source store holding `frag` in `timeChunk`-step chunks. */
+  private def writeStore(frag: Fragment, path: String, timeChunk: Int): String = {
+    val g = ZarrGroup(path)
+    g.initGroup(frag.attrs)
+    frag.allVars.foreach { case (name, v) =>
+      val chunks = v.dims.zip(v.shape).map { case (d, n) =>
+        if (d == "time") math.min(timeChunk, n) else n }
+      g.createArray(name, v.shape, chunks, v.dtype, v.attrs, dimensionNames = Some(v.dims))
+      g.writeRegion(name, Vector.fill(v.data.ndim)(0), v.data)
+    }
+    path
+  }
+
+  test("scanZarrStore's schema pass reads store metadata and no chunk") {
+    val cube = GoldenCube.makeDs(8)
+    val src = writeStore(cube, s"${tmp()}/src.zarr", 4)
+    // every chunk object becomes unreadable (a directory in its place);
+    // only the zarr.json documents stay readable
+    val walk = Files.walk(java.nio.file.Paths.get(src))
+    try walk.iterator.asScala
+      .filter(p => Files.isRegularFile(p) && p.getFileName.toString != "zarr.json")
+      .toVector.foreach { p => Files.delete(p); Files.createDirectory(p) }
+    finally walk.close()
+    val scanned = Pipelines.scanZarrStore(spark, src, "time", 4)
+    val schema = Pipelines.determineSchema(scanned,
+      Vector(Dimension("time", CombineOp.Concat)))
+    assert(schema.dims == cube.dims)
+    assert(schema.chunks("time") == Map(0 -> 4, 1 -> 4))
+    // shapes come from metadata; the chunks are read only when data is
+    assert(scanned.map(_._2.dataVars("foo").data.size)(Encoders.scalaInt)
+      .collect().sum == cube.dataVars("foo").data.size)
+    val e = intercept[Exception](
+      scanned.map(_._2.dataVars("foo").data.getDouble(0))(Encoders.scalaDouble).collect())
+    assert(e.getMessage.contains("Is a directory"), e.getMessage)
+  }
+
+  test("aligned slabs write without a shuffle, byte-identical to the shuffle path") {
+    // slab 16 onto 16-step chunks owns every chunk (map-only write); slab
+    // 12 shares chunks (rechunk shuffle). The stores must match object by
+    // object: plain, sharded, and an aligned append with a guard tag.
+    val cube = GoldenCube.makeDs(48)
+    val dir = tmp()
+    val src = writeStore(cube, s"$dir/src.zarr", 4)
+    val head = writeStore(cube.isel(Map("time" -> Slc(0, 32))), s"$dir/head.zarr", 4)
+    val tail = writeStore(cube.isel(Map("time" -> Slc(32, 48))), s"$dir/tail.zarr", 4)
+    val time = Vector(Dimension("time", CombineOp.Concat))
+    val sc = spark.sparkContext
+    val labels = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(labels.add)
+    })
+
+    def store(slab: Int, out: String, chunk: Int, shards: Map[String, Int] = Map.empty) = {
+      Pipelines.storeToZarr(Pipelines.scanZarrStore(spark, src, "time", slab), time,
+        out, Map("time" -> chunk), targetShards = shards)
+      out
+    }
+    def append(slab: Int, out: String): String = {
+      Pipelines.storeToZarr(Pipelines.scanZarrStore(spark, head, "time", slab), time,
+        out, Map("time" -> 16))
+      Pipelines.storeToZarr(Pipelines.scanZarrStore(spark, tail, "time", slab), time,
+        out, Map("time" -> 16), appendDim = Some("time"), appendGuardTag = Some("batch-1"))
+      out
+    }
+
+    sc.setJobDescription("caller")
+    try {
+      val plain = (store(16, s"$dir/p16.zarr", 16), store(12, s"$dir/p12.zarr", 16))
+      // 8-step chunks in 16-step shards: the shard is the write grain
+      val sharded = (store(16, s"$dir/s16.zarr", 8, Map("time" -> 16)),
+        store(12, s"$dir/s12.zarr", 8, Map("time" -> 16)))
+      val appended = (append(16, s"$dir/a16.zarr"), append(12, s"$dir/a12.zarr"))
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+      Seq(plain, sharded, appended).foreach { case (mapOnly, shuffled) =>
+        val (a, b) = (objects(mapOnly), objects(shuffled))
+        assert(a.keySet == b.keySet, s"$mapOnly vs $shuffled")
+        a.keys.foreach(k => assert(a(k) == b(k), s"$k differs: $mapOnly vs $shuffled"))
+      }
+      assert(ZarrGroup(plain._1).readFragment().sameAs(cube))
+      assert(ZarrGroup(sharded._1).readFragment().sameAs(cube))
+      assert(ZarrGroup(appended._1).readFragment().sameAs(cube))
+      assert(ZarrGroup(appended._1).groupAttrs.contains(Pipelines.AppliedAppendsAttr))
+    } finally sc.setJobDescription(null)
+
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    eventually(timeout(10.seconds)) {
+      val seen = labels.asScala.toSet
+      Seq("storeToZarr: schema", "storeToZarr: write (no shuffle)",
+        "storeToZarr: rechunk shuffle + write").foreach(l => assert(seen(l), seen))
+    }
   }
 }
