@@ -103,16 +103,7 @@ object Bake {
   }
 
   def main(argv: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bake")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.kryo.classesToRegister", graft.core.KryoClasses.names)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().appName("graft-bake").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try run(spark, argv)
     finally spark.stop()

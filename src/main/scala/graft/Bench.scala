@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
@@ -10,24 +9,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // ObjectHashAggregate falls back to SORT-based aggregation after only
-      // 128 distinct keys per task (the conservative default) — the shingle
-      // and token groupBys have ~10^4-10^5 keys per task, so the typed
-      // aggregates (collect_list / collect_list_capped) were paying a full
-      // sort + per-spill buffer serialization. 128k keys x ~100 B buffer
-      // bounds the hash map at ~13 MB per task: safe at any scale, and the
-      // dominant dedup aggregations stay in hash mode.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.kryo.classesToRegister", graft.core.KryoClasses.names)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     // ERROR: repeated per-query function re-registration warns at WARN level
     // and pollutes the log tail the driver captures the json line from
     spark.sparkContext.setLogLevel("ERROR")

@@ -24,24 +24,19 @@ import graft.zarr.ZarrGroup
   * `sbt "Test/runMain graft.CubeThroughput 256 32 mos://tp/cube"`).
   * The 100 TB story is object PUTs/GETs, so the object-transport legs
   * are the rows that matter (SCALE_r10 §cube).
-  * Env: SPARK_GRAFT_CPUS (default 8), SPARK_DRIVER_MEM for bigger runs. */
+  * Env: SPARK_GRAFT_CPUS (default 4), SPARK_DRIVER_MEM for bigger runs. */
 object CubeThroughput {
   def main(args: Array[String]): Unit = {
     val nt = if (args.nonEmpty) args(0).toInt else 256
     val slab = if (args.length > 1) args(1).toInt else 32
     val root = if (args.length > 2) Some(args(2)) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.kryo.classesToRegister", graft.core.KryoClasses.names)
+    val builder = GraftSession.builder()
       // a shuffled fragment must fit the serializer buffer: 32 steps of
       // 512x1024 f64 = 134 MB > the 64m default. At cluster scale, size
       // itemsPerFragment so slabBytes < kryoserializer.buffer.max (or
       // raise the ceiling, as here) — the overflow error is immediate and
       // names the fragment, but it IS a deploy-time knob to know about.
       .config("spark.kryoserializer.buffer.max", "512m")
-      .config("spark.ui.enabled", "false")
     // the mos:// scheme resolves by NAME at runtime (the class ships in
     // the test tree — the sandbox stand-in for a real s3a endpoint, whose
     // fs.s3a.impl would be set the same way); HadoopIO folds spark.hadoop.*

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Optimization-round tooling (guide §1.1/§7.2): dump the formatted
@@ -9,26 +8,17 @@ import java.nio.file.{Files, Paths}
   *
   *   sbt "runMain graft.PlanDump <outDir> [q1,q2,...]"
   *
-  * Uses the exact Bench session configuration so the dumped plan is the
-  * plan the bench executes. Not part of the driver contract; never run
-  * by the driver.
+  * Uses [[GraftSession]], the Bench session configuration, so the dumped
+  * plan is the plan the bench executes. Not part of the driver contract;
+  * never run by the driver.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val outDir = if (args.nonEmpty) args(0) else "plans/r15"
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = GraftSession.cpus
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "before")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.kryo.classesToRegister", graft.core.KryoClasses.names)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val names: Seq[String] =
       if (args.length > 1) args(1).split(",").toSeq
@@ -54,141 +44,7 @@ object PlanDump {
   }
 }
 
-/** Dumps the PRE-CHECKPOINT subplans the r15 optimizations changed:
-  * `localCheckpoint(true)` runs eagerly while the query is BUILT, so the
-  * final query's explain shows those stages only as ExistingRDD leaves and
-  * PlanDump's before/after files cannot evidence an exchange removed
-  * INSIDE one. This tool prints the checkpointed stage's own plan, before
-  * (the round-14 shape, reconstructed verbatim from git HEAD~ for the
-  * labeled file) and after (the live builder).
-  *
-  *   sbt "runMain graft.PlanDumpSub <outDir>"
-  */
-object PlanDumpSub {
-  def main(args: Array[String]): Unit = {
-    val outDir = if (args.nonEmpty) args(0) else "plans/r15"
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    import org.apache.spark.sql.functions._
-    import graft.queries.{DedupOps, Tables}
-    graft.functions.GraftFunctions.register(spark)
-    val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
-    val k = DedupOps.PpJoinK
-    // BEFORE (r14 HEAD shape, reconstructed): explode every gram
-    // occurrence, hash, then a GLOBAL distinct — one full Exchange +
-    // two HashAggregates of the (doc_id, f) stream feeding the
-    // checkpoint.
-    val before = docs
-      .withColumn("words", split(col("text"), " "))
-      .filter(size(col("words")) >= k)
-      .select(col("doc_id"), explode(expr(
-        s"transform(sequence(1, size(words) - ${k - 1}), " +
-          s"i -> concat_ws(' ', slice(words, i, $k)))")).as("gs"))
-      .select(col("doc_id"), expr(DedupOps.h60("gs")).as("f"))
-      .distinct()
-    // AFTER: the live builder (per-doc array_distinct of the hashed
-    // gram array; doc_id is the table's primary key so within-doc
-    // distinct IS the global distinct) — zero Exchanges.
-    val after = DedupOps.ppjoinGramsPlanOf(docs, k)
-    def dump(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      Files.write(Paths.get(outDir, s"$name.txt"),
-        ("// checkpointed-stage subplan (see PlanDumpSub)\n" + plan)
-          .getBytes("UTF-8"))
-      println(s"dumped $name")
-    }
-    Files.createDirectories(Paths.get(outDir))
-    dump("d15_grams_stage_before", before)
-    dump("d15_grams_stage_after", after)
-    spark.stop()
-  }
-}
-
-/** r16 pre-checkpoint subplan evidence for the unspread reroute of
-  * s02/st11's bigram-tf stage (materialized by an eager localCheckpoint
-  * inside docBigramVectors / admissionStateOf, so the final-query
-  * explain shows it only as an ExistingRDD leaf). FINDING: the dumps
-  * show the suspected double round-robin exchange never executed —
-  * predicate pushdown moves the split filter below the caller's spread
-  * and CollapseRepartition then merges the adjacent repartitions, so
-  * BEFORE and AFTER both plan exactly ONE round-robin exchange. The
-  * reroute is therefore plan-neutral for this stage (kept for clarity +
-  * the metadata-cheap bare-scan count); the REAL exchange removal of
-  * the r16 unspread batch is d13's (project between repartition and
-  * join — not collapsible; `d13_leakage_split_{before,after}.txt` shows
-  * 6 → 4 Exchange mentions).
-  *
-  *   sbt "runMain graft.PlanDumpSub16 <outDir>"
-  */
-object PlanDumpSub16 {
-  def main(args: Array[String]): Unit = {
-    val outDir = if (args.nonEmpty) args(0) else "plans/r16"
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    import org.apache.spark.sql.functions._
-    import graft.queries.Tables
-    // the bigram-tf stage body (docBigramVectors/admissionStateOf front
-    // end), reconstructed verbatim: internal round-robin repartition +
-    // gram explode + tf aggregate — the plan that feeds the eager
-    // checkpoint. The STANDING-side filter (st11's doc_id < t split)
-    // sits between the caller's spread and the internal repartition:
-    // with it, CollapseRepartition cannot merge the two round-robin
-    // exchanges and both execute (for s02 — no filter between — the
-    // optimizer already collapsed them, which the r16 investigation
-    // confirmed by dumping both shapes; the s02 win is only the
-    // metadata-cheap count, the st11/d13 win is a real exchange).
-    def gtfPlan(docs: org.apache.spark.sql.DataFrame) = docs
-      .filter(col("doc_id") < 4000L)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .withColumn("ws", split(col("text"), " "))
-      .filter(size(col("ws")) >= 2)
-      .select(col("doc_id"), explode(expr(
-        "transform(sequence(1, size(ws) - 1), i -> concat(ws[i - 1], ' ', ws[i]))"))
-        .as("g"))
-      .groupBy("doc_id", "g").agg(count(lit(1)).as("tf"))
-    // BEFORE (r15 shape): the standing side read the SPREAD documents
-    // table — its round-robin exchange survives below the split filter
-    val before = gtfPlan(Tables.documents(spark, sfDir)
-      .select("doc_id", "text"))
-    // AFTER: the unspread scan — one exchange total
-    val after = gtfPlan(Tables.documentsUnspread(spark, sfDir)
-      .select("doc_id", "text"))
-    def dump(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      Files.write(Paths.get(outDir, s"$name.txt"),
-        ("// checkpointed-stage subplan (see PlanDumpSub16)\n" + plan)
-          .getBytes("UTF-8"))
-      println(s"dumped $name")
-    }
-    Files.createDirectories(Paths.get(outDir))
-    dump("s02_bigramtf_stage_before", before)
-    dump("s02_bigramtf_stage_after", after)
-    spark.stop()
-  }
-}
-
-/** Per-job wall-time profile of ONE query under the Bench session
-  * config: runs the query exactly as Bench does (toRdd.count) with a
+/** Per-job wall-time profile of ONE query under [[GraftSession]]: runs the query exactly as Bench does (toRdd.count) with a
   * listener recording every job's duration and description, so the cost
   * of a multi-job query (eager localCheckpoints, AQE stages) can be
   * attributed before optimizing (guide §1.1 "empirical").
@@ -201,29 +57,20 @@ object ProfileOne {
     val name = args(0)
     val iters = if (args.length > 1) args(1).toInt else 2
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.kryo.classesToRegister", graft.core.KryoClasses.names)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String, Int)]()
-    val done = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Double, String, Int)]()
+    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String, Int, String)]()
+    val done = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Double, String, Int, String)]()
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val desc = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
-        jobs.put(js.jobId, (System.nanoTime(), desc, js.stageIds.size))
+        def prop(key: String) = Option(js.properties)
+          .flatMap(p => Option(p.getProperty(key))).getOrElse("")
+        jobs.put(js.jobId, (System.nanoTime(), prop("spark.job.description"),
+          js.stageIds.size, prop("spark.jobGroup.id")))
       }
       override def onJobEnd(je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-        Option(jobs.get(je.jobId)).foreach { case (t0, desc, nst) =>
-          done.add((je.jobId, (System.nanoTime() - t0) / 1e9, desc, nst))
+        Option(jobs.get(je.jobId)).foreach { case (t0, desc, nst, group) =>
+          done.add((je.jobId, (System.nanoTime() - t0) / 1e9, desc, nst, group))
         }
       }
     })
@@ -232,18 +79,24 @@ object ProfileOne {
       // warmup
       fn(spark, sfDir).queryExecution.toRdd.count()
       (1 to iters).foreach { it =>
-        done.clear()
+        // each measured iteration runs in its own job group and only that
+        // group's jobs are listed: a warm-up or earlier job whose end event
+        // is delivered late can no longer land in this iteration's list.
+        // No description is set, so the listed label is the query's own.
+        val group = s"ProfileOne $nm $it"
+        spark.sparkContext.setJobGroup(group, null)
         val t0 = System.nanoTime()
-        val tBuild0 = System.nanoTime()
         val df = fn(spark, sfDir)
-        val buildS = (System.nanoTime() - tBuild0) / 1e9
+        val buildS = (System.nanoTime() - t0) / 1e9
         df.queryExecution.toRdd.count()
         val total = (System.nanoTime() - t0) / 1e9
+        spark.sparkContext.clearJobGroup()
         Thread.sleep(200) // let listener drain
         println(f"== $nm iter $it: total $total%.3f s (builder incl. eager checkpoints: $buildS%.3f s)")
         import scala.jdk.CollectionConverters._
-        done.asScala.toVector.sortBy(_._1).foreach { case (id, dt, desc, nst) =>
-          println(f"  job $id%3d  $dt%7.3f s  stages=$nst%2d  $desc")
+        done.asScala.toVector.filter(_._5 == group).sortBy(_._1).foreach {
+          case (id, dt, desc, nst, _) =>
+            println(f"  job $id%3d  $dt%7.3f s  stages=$nst%2d  $desc")
         }
       }
     }

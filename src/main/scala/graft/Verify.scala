@@ -1,30 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // ObjectHashAggregate falls back to SORT-based aggregation after only
-      // 128 distinct keys per task (the conservative default) — the shingle
-      // and token groupBys have ~10^4-10^5 keys per task, so the typed
-      // aggregates (collect_list / collect_list_capped) were paying a full
-      // sort + per-spill buffer serialization. 128k keys x ~100 B buffer
-      // bounds the hash map at ~13 MB per task: safe at any scale, and the
-      // dominant dedup aggregations stay in hash mode.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      // events.parquet carries TIMESTAMP(NANOS); Spark only reads it as long
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.kryo.classesToRegister", graft.core.KryoClasses.names)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // r06 lesson: a query that throws here vanished from the driver's

@@ -880,7 +880,7 @@ object HDF5 {
       // block's header bytes: file = blockAddr + (heapOff - blockOff).
       // Binary search over the offset-ordered block table: a linear scan
       // here is O(objects × blocks) — measured 9× superlinear growth on
-      // a 20k-link group (HeapScale, SCALE_r12 §4) before this fix
+      // a 20k-link group (SCALE_r12 §4) before this fix
       val blockOffs: Array[Long] = directBlocks.map(_._1).toArray
       def readObject(heapOff: Long, len: Int): ByteBuffer = {
         val i0 = java.util.Arrays.binarySearch(blockOffs, heapOff)
@@ -1055,7 +1055,7 @@ object HDF5 {
     // 20k DIMENSION_LIST references into ONE collection, and re-reading +
     // re-scanning the whole collection per lookup was O(refs × heap
     // bytes) — measured as the dominant term of a 20k-link read
-    // (HeapScale: 3.8 s → 0.9 s after this cache; SCALE_r12 §4)
+    // (3.8 s → 0.9 s after this cache; SCALE_r12 §4)
     private val gcolCache =
       scala.collection.mutable.Map.empty[Long, Map[Int, Array[Byte]]]
 

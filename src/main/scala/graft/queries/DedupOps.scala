@@ -605,7 +605,7 @@ object DedupOps {
   private[graft] def ppjoinGramsOf(docs: DataFrame, k: Int): DataFrame =
     ppjoinGramsPlanOf(docs, k).localCheckpoint(true)
 
-  /** The pre-checkpoint gram-table plan, exposed (PlanDumpSub, specs) so
+  /** The pre-checkpoint gram-table plan, exposed (specs, OPTIMIZATION_r15 §1) so
     * the checkpointed stage's shape — ZERO exchanges — stays visible:
     * the final query's explain shows the checkpoint only as a leaf. */
   private[graft] def ppjoinGramsPlanOf(docs: DataFrame, k: Int): DataFrame = {

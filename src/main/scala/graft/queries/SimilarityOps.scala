@@ -151,7 +151,7 @@ object SimilarityOps {
     * c·n² random-collision candidate floor (bands · 2^-bits · n²/2); the
     * gated queries now run the adaptive [[ScaledBands]]×[[adaptiveBits]]
     * construction and these constants remain only for SimilaritySpec's
-    * fixed-width fixtures and BandScale's comparison rows. */
+    * fixed-width fixtures (the comparison rows are in SCALE_r8 §2). */
   private[graft] val WideBands = 32
   private[graft] val WideRowsPerBand = 8
 
@@ -172,8 +172,8 @@ object SimilarityOps {
     * candidates resumed growing as 64·2⁻¹⁸·n²/2) keeps bits = ⌈log₂ n⌉
     * for any corpus up to 10^9 vectors while staying within the 62-bit
     * band-signature word and the oracle's pre-materialized 64×[[BitsMax]]
-    * hyperplane pool. MEASURED live past 2^18 rows (SCALE_r12 §1,
-    * `BandScale synth`): 400k vectors → bits 19, 800k → bits 20,
+    * hyperplane pool. MEASURED live past 2^18 rows on synthetic vectors
+    * (SCALE_r12 §1): 400k vectors → bits 19, 800k → bits 20,
     * candidate mass 2.24×/2.20× per corpus doubling through both new
     * fences — linear, as constructed. */
   private[graft] val BitsMin = 8
@@ -459,7 +459,7 @@ object SimilarityOps {
     // UNSPREAD scan (r16): docBigramVectors round-robin-repartitions its
     // input before the gram explode itself — the spread would be
     // redundant (CollapseRepartition merges the adjacent repartitions,
-    // so the reroute is plan-neutral; see PlanDumpSub16) — and the count
+    // so the reroute is plan-neutral; OPTIMIZATION_r16 §3) — and the count
     // for the adaptive bit width runs on the bare scan, where Spark
     // answers it from parquet metadata instead of materializing the
     // spread exchange.
@@ -556,7 +556,7 @@ object SimilarityOps {
     * caller's localCheckpoint lineage (range → project → explode), which
     * under-counts array payloads badly enough that the static planner
     * chose a BROADCAST build for an 800k-vector corpus — 51M band rows,
-    * a guaranteed driver OOM (measured: the r12 BandScale synth run died
+    * a guaranteed driver OOM (measured: the r12 synthetic 800k run died
     * in BroadcastExchangeExec before the fence fix; SCALE_r12 §1). A
     * band table is never a correct broadcast side past toy corpora, and
     * at toy size the forced shuffle moves kilobytes — so the scale-safe
@@ -2033,7 +2033,7 @@ object SimilarityOps {
     * s15 that SCALE_r8 named as the next step: s15 re-ranks the WHOLE
     * merged candidate table per ingest batch, a corpus-bound ~O(n·cap)
     * cap/rescore tail even for a 1% batch (measured ~9 s floor at u10×,
-    * IncScale r8). s16 persists the standing graph EDGES and the CAPPED
+    * SCALE_r8 §9). s16 persists the standing graph EDGES and the CAPPED
     * per-vector candidate LISTS (r9: the lists, not the raw pair table
     * — the r8 shape still re-windowed the merged corpus-sized stream)
     * and re-ranks ONLY the vectors the probe touched, merging each
@@ -2090,7 +2090,7 @@ object SimilarityOps {
     // and its finished edge list — r9 upgrade over the r8 shape, which
     // persisted only the raw pair table, re-windowed the MERGED
     // corpus-sized stream per batch (the ~9 s corpus-bound re-rank
-    // floor IncScale measured) AND re-ran the sign kernel over the
+    // floor SCALE_r8 §9 measured) AND re-ran the sign kernel over the
     // whole corpus per probe.
     val standingBands = s02Bands(embOld, bands, rb).localCheckpoint(true)
     // the upkeep job: probe once (batch signatures only — the index

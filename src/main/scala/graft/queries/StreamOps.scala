@@ -486,7 +486,7 @@ object StreamOps {
     // bare scan, and admissionStateOf round-robin-repartitions its
     // input itself, making the spread redundant (plan-neutral — the
     // optimizer collapsed the adjacent repartitions anyway, see
-    // PlanDumpSub16). The PROBE batch below keeps the spread — its
+    // OPTIMIZATION_r16 §3). The PROBE batch below keeps the spread — its
     // embed is the per-batch hot path and has no internal repartition.
     val rawDocs = Tables.documentsUnspread(s, d).select("doc_id", "text")
     val docs = documents(s, d).select("doc_id", "text")

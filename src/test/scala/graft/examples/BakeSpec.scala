@@ -15,13 +15,7 @@ import java.nio.file.{Files, Paths}
   * the produced artifact is reopened and value-checked. */
 class BakeSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-bake-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   private def tmp(): String = Files.createTempDirectory("graft_bake").toString
 

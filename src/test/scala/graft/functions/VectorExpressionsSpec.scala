@@ -6,16 +6,15 @@ import org.apache.spark.sql.functions._
 
 /** Native vector expressions: results equal the interpreted HOF spelling,
   * codegen path actually compiles (whole-stage codegen retained), and the
-  * SparkSessionExtensions hook resolves the functions in plain SQL. */
+  * SparkSessionExtensions hook resolves the functions in plain SQL. This is
+  * the one suite that builds a session of its own (see the last test). */
 class VectorExpressionsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-fns")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = {
+    val s = graft.TestSession.spark
+    GraftFunctions.register(s)
+    s
+  }
 
   test("dot_i64 / normsq_i64 equal the interpreted HOF results") {
     import spark.implicits._
@@ -59,10 +58,12 @@ class VectorExpressionsSpec extends AnyFunSuite {
   }
 
   test("SparkSessionExtensions injection resolves in a fresh session") {
-    // `spark.sql.extensions` is read from the SparkContext conf, so it only
-    // takes effect for the FIRST session in a JVM; the builder's
-    // withExtensions hook drives the same injectFunction path and works for
-    // any new session — force one by clearing the active/default session.
+    // the builder's withExtensions hook drives the same injectFunction path
+    // as `spark.sql.extensions` and works for any new session — force one
+    // by clearing the active/default session. The shared session is built
+    // first, so the fresh session reuses its SparkContext instead of
+    // defining the context for every later suite in this JVM.
+    spark
     val prevDefault = SparkSession.getDefaultSession
     val prevActive = SparkSession.getActiveSession
     SparkSession.clearActiveSession()

@@ -14,12 +14,7 @@ import java.nio.file.Files
   */
 class KerchunkSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-kerchunk")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   private def tmp(): String = Files.createTempDirectory("graft_kc").toString
 

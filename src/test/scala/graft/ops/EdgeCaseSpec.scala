@@ -10,13 +10,7 @@ import org.apache.spark.sql.types._
   * without crashing — the inputs a real pipeline feeds them on day one. */
 class EdgeCaseSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-edge-cases")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   private def docsOf(rows: Seq[(Long, String)]) = {
     import spark.implicits._

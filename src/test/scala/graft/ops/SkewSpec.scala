@@ -6,12 +6,7 @@ import org.apache.spark.sql.functions._
 
 class SkewSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-skew")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   test("saltedJoin equals the plain join, spread over salts") {
     import spark.implicits._

@@ -16,13 +16,7 @@ import org.apache.spark.sql.SparkSession
   */
 class ChainIslandsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-chain-islands")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   /** The pre-r16 recursive-walk form, verbatim (edges/roots + UnionLoop),
     * as the in-suite reference implementation. */

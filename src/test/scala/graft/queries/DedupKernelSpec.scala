@@ -13,13 +13,7 @@ import org.apache.spark.sql.functions._
   * df-filter + collect_list it replaced in d02. */
 class DedupKernelSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-dedup-kernels")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   private def ccLabels(pairs: Seq[(Long, Long)], singleTaskMax: Long): Map[Long, Long] = {
     import spark.implicits._

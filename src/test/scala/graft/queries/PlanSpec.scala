@@ -11,14 +11,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 class PlanSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-plans")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   private val d = "/root/testdata/sf0.001"
 
@@ -669,8 +662,8 @@ class PlanSpec extends AnyFunSuite {
   test("broadcast-misestimate gate: no corpus-side broadcast at 10^6 checkpoint-derived rows") {
     // The SCALE_r12 §1 defect class (localCheckpoint lineage → size
     // underestimate → BroadcastExchange build of a corpus-derived join
-    // side → driver OOM at scale), audited fleet-wide in r13
-    // (graft.queries.JoinAudit live runs; SCALE_r13 §2). This gate pins
+    // side → driver OOM at scale), audited fleet-wide in r13 with live
+    // runs at 10^6 rows (SCALE_r13 §1). This gate pins
     // the STATIC plans at the 10^6-row scale where a mis-broadcast is
     // fatal: every self-join family must plan with ZERO
     // BroadcastExchange nodes. Planning-only — nothing executes.

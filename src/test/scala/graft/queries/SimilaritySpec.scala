@@ -10,12 +10,7 @@ import org.apache.spark.sql.SparkSession
   */
 class SimilaritySpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-similarity")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   // sf0.01 — the driver's own correctness scale; sf0.001 has only 7 true
   // pairs, where one unlucky boundary miss (4%/pair expected) fails any

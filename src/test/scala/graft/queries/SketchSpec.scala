@@ -9,12 +9,7 @@ import org.apache.spark.sql.SparkSession
   * via fully independent plain-Scala recomputes. */
 class SketchSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-sketches")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   private val d = "/root/testdata/sf0.01"
 

@@ -22,15 +22,7 @@ import org.apache.spark.sql.functions._
   */
 class SkewGateSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .appName("graft-skew-gate")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   test("hot shingle in 50% of docs keeps d02's total shuffle under a fixed byte budget") {
     import spark.implicits._

@@ -13,16 +13,7 @@ import org.apache.spark.sql.SparkSession
   */
 class SurfaceSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .appName("graft-surface")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-    .config("spark.kryo.classesToRegister", graft.core.KryoClasses.names)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   private val d = "/root/testdata/sf0.001"
 

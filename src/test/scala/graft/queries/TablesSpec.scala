@@ -13,14 +13,7 @@ import org.apache.spark.sql.types._
   */
 class TablesSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("graft-tables")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   // one event at 2024-03-01T12:00:00.123456Z, expressed per drift mode
   private val micros = 1709294400123456L

@@ -28,12 +28,7 @@ class LongViewSpec extends AnyFunSuite {
     Variable(dims, NDArray.ofDoubles(shape, data))
   }
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-longview")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   test("long view explodes and pivots back losslessly") {
     val cube = GoldenCube.makeDs(4)

@@ -16,13 +16,7 @@ import scala.jdk.CollectionConverters._
   */
 class EndToEndSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-e2e")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   private def tmp(): String = Files.createTempDirectory("graft_e2e").toString
 

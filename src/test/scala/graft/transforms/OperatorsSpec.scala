@@ -11,12 +11,7 @@ import graft.patterns.FileType
   * registry validation, runtime config injection, consolidated metadata. */
 class OperatorsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-operators")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   test("mapWithConcurrencyLimit caps partition count") {
     import spark.implicits._
