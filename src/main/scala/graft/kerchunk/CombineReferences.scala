@@ -1,87 +1,47 @@
 package graft.kerchunk
 
 import graft.core.Index
+import graft.transforms.Pipelines
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.functions._
 
-/** Order-preserving hierarchical reduction of references
-  * (transforms.py:427-554):
-  *   (a) global (min, max, count) of positions — one fused built-in agg;
-  *   (b) range-bucket each element by position (`ceil(count/maxRefs)` buckets)
-  *       — deterministic range partitioning that preserves global order;
-  *   (c) per-bucket ordered merge (groupByKey + in-bucket sort);
-  *   (d) a distributed TREE of bucket merges — each level groups
-  *       `maxRefsPerMerge` adjacent buckets and merges them in one task —
-  *       until one RefSet remains, which is all the driver ever receives.
+/** Order-preserving concat of references (transforms.py:427-554) in ONE
+  * Spark job: each input is mapped to its position along the last concat
+  * dim, the (position, RefSet) pairs are collected, sorted by position on
+  * the driver, and concatenated by a single [[RefSet.concatRefSets]] call,
+  * which parses one metadata document at a time.
   *
-  * The tree fan-in (max_refs_per_merge, default 5 — transforms.py:446) bounds
-  * the memory of any single merge, which is what lets this scale to millions
-  * of input files: no single task ever holds more than one bucket. Step (d)
-  * goes beyond the reference, whose final merge is all-to-one on a single
-  * worker (transforms.py:523-532): at ceil(n/5) bucket results that single
-  * merge is the scale ceiling, so here every level of the log5(n)-deep tree
-  * runs as a shuffle of metadata-sized RefSets and the merge CPU stays on
-  * executors. All levels execute in ONE job — the level count is derived
-  * from the already-known global count, no per-level action.
+  * The reference range-buckets the inputs by position and merges the
+  * buckets in a tree of fan-in `max_refs_per_merge` (transforms.py:446) to
+  * bound one worker's memory. That tree is gone here because it bounded
+  * nothing: its single result came back to the driver whole, and the
+  * artifact writers build every row on the driver anyway. What it did cost
+  * was a min/max/count job that scanned every input a second time, and one
+  * job per tree level under adaptive execution (10 jobs for 1,000 inputs).
+  * Driver memory is proportional to the references, which are
+  * metadata-sized.
+  *
+  * Two inputs at one position are an error, not a double concat: several
+  * sets scanned from one file (one per GRIB message) must be merged into
+  * one per position with [[RefSet.mergeRefSets]] first.
   */
 object CombineReferences {
 
   def combine(refs: Dataset[(Index, RefSet)],
               concatDims: Vector[String],
-              identicalDims: Vector[String],
-              maxRefsPerMerge: Int = 5): RefSet = {
-    val spark = refs.sparkSession
-    import spark.implicits._
+              identicalDims: Vector[String]): RefSet = {
     val sortDim = concatDims.last // transforms.py:449-452
-
-    // (a) single-pass min/max/count of positions (MinMaxCountCombineFn)
-    val positions = refs.map(_._1.findPosition(sortDim))(Encoders.scalaInt).toDF("pos")
-    val row = positions.agg(
-      min(col("pos")).as("mn"), max(col("pos")).as("mx"), count(lit(1)).as("cnt"))
-      .head()
-    val (gMin, gMax, gCount) = (row.getInt(0), row.getInt(1), row.getLong(2))
-
-    // (b) bucket assignment (transforms.py:479-521)
-    val bucketed = refs.map { case (idx, rs) =>
-      (bucketFor(idx.findPosition(sortDim), gMin, gMax, gCount, maxRefsPerMerge),
-        (idx.findPosition(sortDim), rs))
-    }(Encoders.kryo[(Int, (Int, RefSet))])
-
-    // (c) per-bucket ordered merge
-    var level: Dataset[(Int, RefSet)] = bucketed
-      .groupByKey(_._1)(Encoders.scalaInt)
-      .mapGroups { (bucket, it) =>
-        val sorted = it.toVector.sortBy(_._2._1)
-        (bucket, RefSet.concatRefSets(sorted.map(_._2._2), sortDim, identicalDims))
-      }(Encoders.kryo[(Int, RefSet)])
-
-    // (d) distributed tree merge: collapse maxRefsPerMerge ADJACENT buckets
-    // per level (integer-divide the bucket id — adjacency preserves the
-    // global concat order), until at most one bucket remains. Level count
-    // comes from the static bucket bound, so the whole tree is one lazy
-    // plan executed by the final head(); concat is associative over
-    // order-preserved splits, which is what makes the hierarchy exact.
-    // bucketFor's float edge can emit bucket == numBuckets, hence the +1.
-    var remaining = math.ceil(gCount.toDouble / maxRefsPerMerge).toLong + 1
-    while (remaining > 1) {
-      level = level
-        .groupByKey(_._1 / maxRefsPerMerge)(Encoders.scalaInt)
-        .mapGroups { (parent, it) =>
-          val sorted = it.toVector.sortBy(_._1)
-          (parent, RefSet.concatRefSets(sorted.map(_._2), sortDim, identicalDims))
-        }(Encoders.kryo[(Int, RefSet)])
-      remaining = math.ceil(remaining.toDouble / maxRefsPerMerge).toLong
+    val sorted = refs.map { case (idx, rs) => (idx.findPosition(sortDim), rs) }(
+      Encoders.kryo[(Int, RefSet)]).collect().sortBy(_._1)
+    require(sorted.nonEmpty, "CombineReferences.combine: no references to combine")
+    val positions = sorted.map(_._1)
+    (1 until positions.length).find(i => positions(i) == positions(i - 1)).foreach { i =>
+      val p = positions(i)
+      throw new IllegalArgumentException(
+        s"CombineReferences.combine: ${positions.count(_ == p)} reference sets " +
+          s"share $sortDim position $p; merge each position's sets into one " +
+          "with RefSet.mergeRefSets before combining")
     }
-    level.head()._2
-  }
-
-  /** transforms.py:479-521 verbatim semantics (incl. float bucket size). */
-  def bucketFor(position: Int, gMin: Int, gMax: Int, gCount: Long,
-                maxRefsPerMerge: Int): Int = {
-    val numBuckets = math.ceil(gCount.toDouble / maxRefsPerMerge).toInt
-    val rangeSize = (gMax - gMin).toDouble
-    val bucketSize = rangeSize / numBuckets
-    ((position - gMin) / bucketSize).toInt
+    RefSet.concatRefSets(sorted.toVector.map(_._2), sortDim, identicalDims)
   }
 
   /** A reference key holding a metadata DOCUMENT (not chunk bytes), in
@@ -108,23 +68,30 @@ object CombineReferences {
     * zarr-v2-keyed artifacts the fsspec ecosystem consumes: the kerchunk
     * JSON (RefSet.toKerchunkV2Json), or — with a `.parquet` path — the
     * fsspec `LazyReferenceMapper` record layout
-    * ([[writeReferenceParquetV2]]) instead of our v3-keyed layout. */
+    * ([[writeReferenceParquetV2]]) instead of our v3-keyed layout.
+    * Two Spark jobs with a parquet path, one otherwise, labelled
+    * "writeCombinedReference: scan + combine" and
+    * "writeCombinedReference: write". */
   def writeCombinedReference(refs: Dataset[(Index, RefSet)],
                              concatDims: Vector[String],
                              identicalDims: Vector[String],
                              outputPath: String,
-                             maxRefsPerMerge: Int = 5,
                              v2Keys: Boolean = false): RefSet = {
-    val combined = combine(refs, concatDims, identicalDims, maxRefsPerMerge)
-    if (outputPath.endsWith(".parquet")) {
-      if (v2Keys) writeReferenceParquetV2(refs.sparkSession, combined, outputPath)
-      else writeReferenceParquet(refs.sparkSession, combined, outputPath)
-    } else if (v2Keys) {
-      val p = java.nio.file.Paths.get(outputPath)
-      if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
-      java.nio.file.Files.writeString(p, RefSet.toKerchunkV2Json(combined))
-    } else
-      writeReferenceJson(combined, outputPath)
+    val spark = refs.sparkSession
+    val combined = Pipelines.labelled(spark, "writeCombinedReference: scan + combine") {
+      combine(refs, concatDims, identicalDims)
+    }
+    Pipelines.labelled(spark, "writeCombinedReference: write") {
+      if (outputPath.endsWith(".parquet")) {
+        if (v2Keys) writeReferenceParquetV2(spark, combined, outputPath)
+        else writeReferenceParquet(spark, combined, outputPath)
+      } else if (v2Keys) {
+        val p = java.nio.file.Paths.get(outputPath)
+        if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
+        java.nio.file.Files.writeString(p, RefSet.toKerchunkV2Json(combined))
+      } else
+        writeReferenceJson(combined, outputPath)
+    }
     combined
   }
 
@@ -167,16 +134,18 @@ object CombineReferences {
         k, mapper.readTree(r.resolve()))
     }
     // chunk refs: one partition directory per component, files capped at
-    // refsPerComponent records (maxRecordsPerFile enforces the cap inside
-    // each component's writer task); parquet write FIRST — overwrite mode
-    // clears the directory — then the consolidated metadata lands beside it
+    // refsPerComponent records (maxRecordsPerFile). The rows are already on
+    // the driver, so ONE task writes them, component after component with
+    // one parquet writer open at a time; an exchange would only move them.
+    // Parquet write FIRST — overwrite mode clears the directory — then the
+    // consolidated metadata lands beside it
     chunkKeys.map { case (k, r) =>
       val component = k.split('/').head
       (component, k, r.url.orNull, r.offset, r.length,
         r.inline.map(java.util.Base64.getEncoder.encodeToString).orNull)
     }.toDF("component", "key", "url", "offset", "length", "inline_b64")
-      .repartition(col("component"))
-      .sortWithinPartitions("key")
+      .coalesce(1)
+      .sortWithinPartitions("component", "key")
       .write.mode("overwrite")
       .option("maxRecordsPerFile", refsPerComponent)
       .partitionBy("component")
@@ -307,10 +276,11 @@ object CombineReferences {
     * fo=<path>)` + zarr v2 open directly — the ecosystem-interop artifact;
     * [[writeReferenceParquet]] remains the repo-internal v3-keyed layout.
     *
-    * The write is distributed: rows are range-placed by (component,
-    * record), each record file (≤ recordSize rows) is written by the
-    * executor task that owns it via parquet-mr, so a billion-ref store
-    * streams through the cluster without a driver collect. */
+    * The rows are built on the driver from the RefSet it already holds,
+    * so ONE task writes them, sorted by (component, record, row): each
+    * record file (≤ recordSize rows) is written in turn via parquet-mr,
+    * one writer open at a time. Driver memory is proportional to the
+    * refs. */
   def writeReferenceParquetV2(spark: org.apache.spark.sql.SparkSession,
                               rs: RefSet, path: String,
                               recordSize: Int = 10000): Unit = {
@@ -380,7 +350,7 @@ object CombineReferences {
       fs.mkdirs(rootPath)
 
     rows.toDF("component", "rec", "row", "path", "offset", "size", "raw")
-      .repartition(col("component"), col("rec"))
+      .coalesce(1)
       .sortWithinPartitions("component", "rec", "row")
       .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
         val conf = new org.apache.hadoop.conf.Configuration(false)

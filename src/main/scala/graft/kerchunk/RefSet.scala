@@ -469,7 +469,10 @@ object RefSet {
     * concatenate orderd RefSets along ONE dim; `identicalDims` variables
     * must match and are taken from the first input. Chunk keys along the
     * concat axis are re-indexed by the cumulative chunk count of the
-    * preceding inputs.
+    * preceding inputs. Only the first input's metadata documents stay
+    * parsed; every other input's document is parsed, checked against them
+    * and dropped, keeping just its length along the concat axis, so memory
+    * follows the refs, not inputs × documents.
     */
   def concatRefSets(ordered: Vector[RefSet], concatDim: String,
                     identicalDims: Vector[String]): RefSet = {
@@ -482,8 +485,9 @@ object RefSet {
     first.refs.get("zarr.json").foreach(r => merged += "zarr.json" -> r)
 
     varNames(first).foreach { v =>
-      val metas = ordered.map(rs => parseMeta(rs, s"$v/zarr.json"))
-      val dims0 = metas.head.get("dimension_names")
+      val metaKey = s"$v/zarr.json"
+      val meta0 = parseMeta(first, metaKey)
+      val dims0 = meta0.get("dimension_names")
       val dimNames: Vector[String] =
         if (dims0 == null) Vector.empty
         else dims0.elements().asScala.map(_.asText()).toVector
@@ -491,43 +495,48 @@ object RefSet {
 
       if (axis < 0) {
         // identical-dims variable: validate byte-identical metadata, keep first
-        val m0 = metas.head.toString
-        require(metas.forall(_.toString == m0),
-          s"identical_dims variable $v differs across inputs")
-        ordered.head.refs.foreach { case (k, r) =>
-          if (k == s"$v/zarr.json" || k.startsWith(s"$v/c")) merged += k -> r }
+        val m0 = meta0.toString
+        ordered.iterator.drop(1).foreach { rs =>
+          require(parseMeta(rs, metaKey).toString == m0,
+            s"identical_dims variable $v differs across inputs")
+        }
+        first.refs.foreach { case (k, r) =>
+          if (k == metaKey || k.startsWith(s"$v/c")) merged += k -> r }
       } else {
         // concat variable: shapes sum along axis; other dims + chunks equal
-        val shapes = metas.map(_.get("shape").elements().asScala.map(_.asInt()).toVector)
-        val chunks = metas.map(_.get("chunk_grid").get("configuration")
-          .get("chunk_shape").elements().asScala.map(_.asInt()).toVector)
-        require(chunks.forall(_ == chunks.head),
-          s"chunk shapes for $v differ across inputs")
-        shapes.foreach { sh =>
+        def ints(n: com.fasterxml.jackson.databind.JsonNode): Vector[Int] =
+          n.elements().asScala.map(_.asInt()).toVector
+        def shapeAndChunks(m: ObjectNode): (Vector[Int], Vector[Int]) =
+          (ints(m.get("shape")),
+            ints(m.get("chunk_grid").get("configuration").get("chunk_shape")))
+        val (shape0, chunks0) = shapeAndChunks(meta0)
+        val axisLens = shape0(axis) +: ordered.iterator.drop(1).map { rs =>
+          val (sh, ch) = shapeAndChunks(parseMeta(rs, metaKey))
+          require(ch == chunks0, s"chunk shapes for $v differ across inputs")
           sh.indices.foreach { i =>
-            require(i == axis || sh(i) == shapes.head(i),
+            require(i == axis || sh(i) == shape0(i),
               s"non-concat dim sizes for $v differ across inputs") }
-        }
-        val newShape = shapes.head.updated(axis, shapes.map(_(axis)).sum)
-        val newMeta = metas.head.deepCopy[ObjectNode]()
-        val shNode = mapper.createArrayNode(); newShape.foreach(shNode.add)
+          sh(axis)
+        }.toVector
+        val newMeta = meta0.deepCopy[ObjectNode]()
+        val shNode = mapper.createArrayNode()
+        shape0.updated(axis, axisLens.sum).foreach(shNode.add)
         newMeta.set[ObjectNode]("shape", shNode)
-        merged += s"$v/zarr.json" -> Ref.inline(
+        merged += metaKey -> Ref.inline(
           mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(newMeta))
 
         // chunk keys: offset the concat-axis index by cumulative chunk count
         var axisOffset = 0
         ordered.zipWithIndex.foreach { case (rs, i) =>
-          val nAxisChunks = math.ceil(shapes(i)(axis).toDouble / chunks.head(axis)).toInt
           rs.refs.foreach { case (k, r) =>
-            if (k.startsWith(s"$v/c/") || (k.startsWith(s"$v/c") && k == s"$v/c")) {
+            if (k.startsWith(s"$v/c/") || k == s"$v/c") {
               val parts = k.split('/') // v, c, i0, i1, ...
               val idx = parts.drop(2).map(_.toInt)
               val newIdx = idx.updated(axis, idx(axis) + axisOffset)
               merged += (s"$v/c/" + newIdx.mkString("/")) -> r
             }
           }
-          axisOffset += nAxisChunks
+          axisOffset += math.ceil(axisLens(i).toDouble / chunks0(axis)).toInt
         }
       }
     }

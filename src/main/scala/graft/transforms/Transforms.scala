@@ -247,7 +247,7 @@ object Pipelines {
 
   /** Run `body` with `label` as the description of the Spark jobs it
     * starts, then restore the caller's description. */
-  private def labelled[T](spark: SparkSession, label: String)(body: => T): T = {
+  private[graft] def labelled[T](spark: SparkSession, label: String)(body: => T): T = {
     val sc = spark.sparkContext
     val prior = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription(label)

@@ -6,11 +6,11 @@ import graft.core._
 import graft.core.GoldenCube
 import graft.zarr.ZarrGroup
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** Entry point B (SURVEY §3.2): scan fragment files into references,
-  * order-preserving hierarchical combine, write reference.json, materialize
-  * the virtual store, and require exact equality with the golden cube.
-  * Includes the bucket_by_position oracle (tests/test_combiners.py:324-388).
+  * order-preserving combine, write reference.json, materialize the virtual
+  * store, and require exact equality with the golden cube.
   */
 class KerchunkSpec extends AnyFunSuite {
 
@@ -19,15 +19,6 @@ class KerchunkSpec extends AnyFunSuite {
   private def tmp(): String = Files.createTempDirectory("graft_kc").toString
 
   private val timeDim = Dimension("time", CombineOp.Concat)
-
-  test("bucket_by_position oracle") {
-    // positions {0,4,5,10,25,50,100}, (min,max,count)=(0,100,101)
-    // -> buckets {0,0,1,2,5,10,21}  (FIXTURES.md §7)
-    val expected = Map(0 -> 0, 4 -> 0, 5 -> 1, 10 -> 2, 25 -> 5, 50 -> 10, 100 -> 21)
-    expected.foreach { case (pos, want) =>
-      assert(CombineReferences.bucketFor(pos, 0, 100, 101L, 5) == want, s"pos=$pos")
-    }
-  }
 
   test("scan inlines metadata and small chunks, points at large ones") {
     val cube = GoldenCube.makeDs(4)
@@ -70,8 +61,7 @@ class KerchunkSpec extends AnyFunSuite {
     }
     val ds = spark.createDataset(indexed)(Encoders.kryo[(Index, RefSet)])
       .repartition(4)
-    val combined = CombineReferences.combine(ds, Vector("time"), Vector("lat", "lon"),
-      maxRefsPerMerge = 2)
+    val combined = CombineReferences.combine(ds, Vector("time"), Vector("lat", "lon"))
 
     // write + read back the artifact
     val jsonPath = s"$dir/reference.json"
@@ -167,7 +157,7 @@ class KerchunkSpec extends AnyFunSuite {
     val pq = s"$dir/v2refs.parquet"
     // end-to-end through the bake-facing entry point: v2Keys + .parquet
     val combined = CombineReferences.writeCombinedReference(ds, Vector("time"),
-      Vector("lat", "lon"), pq, maxRefsPerMerge = 2, v2Keys = true)
+      Vector("lat", "lon"), pq, v2Keys = true)
     // rewrite at record size 2 to force multiple positional record files
     CombineReferences.writeReferenceParquetV2(spark, combined, pq, recordSize = 2)
 
@@ -244,8 +234,7 @@ class KerchunkSpec extends AnyFunSuite {
     }
     val ds = spark.createDataset(indexed)(Encoders.kryo[(Index, RefSet)])
       .repartition(4)
-    val combined = CombineReferences.combine(ds, Vector("time"),
-      Vector("lat", "lon"), maxRefsPerMerge = 2)
+    val combined = CombineReferences.combine(ds, Vector("time"), Vector("lat", "lon"))
     val jsonPath = s"$dir/reference.json"
     CombineReferences.writeReferenceJson(combined, jsonPath)
     val loaded = RefSet.fromJson(Files.readString(java.nio.file.Paths.get(jsonPath)))
@@ -257,15 +246,13 @@ class KerchunkSpec extends AnyFunSuite {
     assert((0 until nt).forall(r => combined.refs.contains(s"foo/c/$r/0/0")))
   }
 
-  test("distributed tree merge over many buckets equals the flat ordered concat") {
-    // 23 single-step slabs at fan-in 3 -> 8+1 bucket ids -> a 3-level tree
-    // (9 -> 3 -> 1); input order scrambled to prove positions, not
-    // partitioning, carry the global order
-    val cube = GoldenCube.makeDs(23)
+  /** One single-step zarr slab per time step of a `steps`-step golden
+    * cube, scanned into references. */
+  private def slabRefs(steps: Int): Vector[RefSet] = {
     val dir = tmp()
-    val sets: Vector[RefSet] = GoldenCube.splitByTime(cube, 1).zipWithIndex
+    GoldenCube.splitByTime(GoldenCube.makeDs(steps), 1).zipWithIndex
       .map { case (f, i) =>
-        val p = s"$dir/deep_$i.zarr"
+        val p = s"$dir/slab_$i.zarr"
         val g = ZarrGroup(p)
         g.initGroup(f.attrs)
         f.allVars.foreach { case (n, v) =>
@@ -275,15 +262,89 @@ class KerchunkSpec extends AnyFunSuite {
         }
         RefSet.scanZarrGroup(p)
       }
-    val indexed = sets.zipWithIndex
-      .map { case (rs, i) => (Index.of(timeDim -> Pos(i)), rs) }
-    val ds = spark.createDataset(indexed.reverse)(Encoders.kryo[(Index, RefSet)])
+  }
+
+  private def positioned(sets: Vector[RefSet]) =
+    sets.zipWithIndex.map { case (rs, i) => (Index.of(timeDim -> Pos(i)), rs) }
+
+  test("combine over scrambled partitions equals the flat ordered concat") {
+    // 23 single-step slabs, input order scrambled to prove positions, not
+    // partitioning, carry the global order
+    val sets = slabRefs(23)
+    val ds = spark.createDataset(positioned(sets).reverse)(Encoders.kryo[(Index, RefSet)])
       .repartition(4)
-    val combined = CombineReferences.combine(ds, Vector("time"),
-      Vector("lat", "lon"), maxRefsPerMerge = 3)
+    val combined = CombineReferences.combine(ds, Vector("time"), Vector("lat", "lon"))
     val flat = RefSet.concatRefSets(sets, "time", Vector("lat", "lon"))
     // Ref.inline is Array[Byte] (reference equality) — compare canonically
     assert(RefSet.toJson(combined) == RefSet.toJson(flat))
+  }
+
+  test("combine fails on repeated positions instead of concatenating twice") {
+    // several sets under one Index (one per GRIB message of a file),
+    // flattened: two sets at position 1 would add a step to the store
+    val sets = slabRefs(3)
+    val indexed = positioned(sets) :+ (Index.of(timeDim -> Pos(1)) -> sets(2))
+    val ds = spark.createDataset(indexed)(Encoders.kryo[(Index, RefSet)]).repartition(2)
+    val err = intercept[IllegalArgumentException] {
+      CombineReferences.combine(ds, Vector("time"), Vector("lat", "lon"))
+    }
+    assert(err.getMessage.contains("2 reference sets share time position 1"), err.getMessage)
+    assert(err.getMessage.contains("RefSet.mergeRefSets"), err.getMessage)
+  }
+
+  /** Run `body` in a fresh job group whose description is "caller" and
+    * return (description, stage count) of every job it started, in order. */
+  private def jobsOf(body: => Unit): Seq[(String, Int)] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"kerchunk-jobs-${java.util.UUID.randomUUID()}"
+    val marker = s"$group-end"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, Int)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = e.properties
+        jobs.add((p.getProperty("spark.jobGroup.id"),
+          p.getProperty("spark.job.description"), e.stageInfos.size))
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "caller")
+      try {
+        body
+        assert(sc.getLocalProperty("spark.job.description") == "caller")
+      } finally sc.clearJobGroup()
+      // the listener bus delivers events in order: once the marker job's
+      // start is seen, every job `body` started has been seen too
+      sc.setJobGroup(marker, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      import org.scalatest.concurrent.Eventually._
+      import org.scalatest.time.SpanSugar._
+      eventually(timeout(10.seconds)) {
+        assert(jobs.asScala.exists(_._1 == marker))
+      }
+    } finally sc.removeSparkListener(listener)
+    jobs.asScala.toSeq.collect { case (`group`, desc, stages) => (desc, stages) }
+  }
+
+  /** Four partitions without a shuffle of their own. */
+  private def fourPartitions(sets: Vector[RefSet]) =
+    spark.createDataset(spark.sparkContext.parallelize(positioned(sets), 4))(
+      Encoders.kryo[(Index, RefSet)])
+
+  test("writeCombinedReference to parquet runs 2 labelled jobs and no shuffle stage") {
+    val sets = slabRefs(8)
+    val pq = s"${tmp()}/refs.parquet"
+    // jobsOf also checks the caller's description is restored afterwards
+    val jobs = jobsOf {
+      CombineReferences.writeCombinedReference(fourPartitions(sets), Vector("time"),
+        Vector("lat", "lon"), pq)
+    }
+    // one stage per job: neither job has a shuffle map stage
+    assert(jobs == Seq("writeCombinedReference: scan + combine" -> 1,
+      "writeCombinedReference: write" -> 1), jobs)
+    assert(CombineReferences.readReferenceParquet(spark, pq).keys ==
+      RefSet.concatRefSets(sets, "time", Vector("lat", "lon")).keys)
   }
 
   test("concat re-keys chunk indexes along the concat axis") {
