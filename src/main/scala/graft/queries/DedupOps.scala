@@ -29,7 +29,7 @@ object DedupOps {
   /** 60-bit md5 integer of a string column (same on both engines). */
   private[graft] def h60(c: String): String =
     s"cast(conv(substring(md5($c), 1, 15), 16, 10) as bigint)"
-  private def h60Duck(c: String): String =
+  private[queries] def h60Duck(c: String): String =
     s"('0x' || substr(md5($c), 1, 15))::BIGINT"
 
   /** Exact dedup: hash-groupBy on content. */
@@ -109,6 +109,7 @@ object DedupOps {
     * released before returning (bench loops must not accumulate storage
     * blocks). Fan-out per shingle is df² ≤ cap², as before. */
   def d02NgramJaccard(s: SparkSession, d: String): DataFrame = {
+    // kept eager: left lazy, d02 ran 1.04x at sf0.1 (A/B, slower in 6 of 9 pairs)
     val grouped = d02Grouped(s, d).cache()
     // materialize the (small, threshold-filtered) result eagerly so the
     // cache can be released before returning; the lazy plan the caller
@@ -278,6 +279,7 @@ object DedupOps {
     // (d07/d13/p09) aggregate above it and the optimizer drops the
     // order-irrelevant sort — and even where it survives, it sorts a
     // checkpointed LSH-collapsed pair table, not the corpus stream.
+    // kept eager: left lazy, d07/d13 ran 1.45x/1.51x at sf0.1 (signature agg ran twice; A/B)
     val sig = minhashSigOf(shingles(s, d)).cache()
     try lshPairsOf(sig).localCheckpoint(true).orderBy("doc_a", "doc_b")
     finally sig.unpersist(blocking = false)
@@ -383,6 +385,7 @@ object DedupOps {
     // cache the UNSORTED simhash table (d05's presentation orderBy would
     // sort the cached frame for nothing — banding is order-free; same
     // r15 rationale as d04)
+    // kept eager: left lazy, d06 ran 1.77x at sf0.1 (A/B)
     val sh = simhashOf(documents(s, d)).cache()
     try simhashPairsOf(sh).orderBy("doc_a", "doc_b").localCheckpoint(true)
     finally sh.unpersist(blocking = false)

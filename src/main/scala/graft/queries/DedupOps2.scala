@@ -22,12 +22,7 @@ import org.apache.spark.sql.functions._
   */
 object DedupOps2 {
   import Tables._
-
-  /** 60-bit md5 integer of a string column (same on both engines). */
-  private[queries] def h60(c: String): String =
-    s"cast(conv(substring(md5($c), 1, 15), 16, 10) as bigint)"
-  private[queries] def h60Duck(c: String): String =
-    s"('0x' || substr(md5($c), 1, 15))::BIGINT"
+  import DedupOps.{h60, h60Duck}
 
   /** Words per dedup segment (the "paragraph" unit — this corpus has no
     * newline structure, so segmentation is fixed-width over the word list,

@@ -125,7 +125,7 @@ object PipelineOps {
     val docs = documents(s, d).select("doc_id", "source", "text")
     val isNew = col("source") === DedupOps2.NewBatchSource
     def hashedSegs(in: DataFrame) = DedupOps2.segmentsOf(in)
-      .withColumn("h", expr(DedupOps2.h60("seg")))
+      .withColumn("h", expr(DedupOps.h60("seg")))
     val newSegs = hashedSegs(docs.filter(isNew))
       .select("doc_id", "h").distinct()
     val corpusSegs = hashedSegs(docs.filter(!isNew))
@@ -165,7 +165,7 @@ object PipelineOps {
     val nb = DedupOps2.NewBatchSource
     s"""WITH segs0 AS (${DedupOps2.segmentsSql}),
        |segs AS (
-       |  SELECT s.doc_id, ${DedupOps2.h60Duck("s.seg")} AS h,
+       |  SELECT s.doc_id, ${DedupOps.h60Duck("s.seg")} AS h,
        |    d.source = '$nb' AS is_new
        |  FROM segs0 s JOIN documents d ON s.doc_id = d.doc_id),
        |new_segs AS (SELECT DISTINCT doc_id, h FROM segs WHERE is_new),
@@ -587,6 +587,7 @@ object PipelineOps {
     val scored = SelectionOps.dsirScoresLazy(
         SelectionOps.hashedBigramsOf(enriched), lm,
         carry = Seq("source", "sig", "n_tokens"))
+      // kept eager: left lazy, p06 ran 1.13x-1.23x at sf0.001, sf0.01 and sf0.1 (A/B)
       .localCheckpoint(true)
     val thr = SelectionOps.dsirCutOf(scored, SelectionOps.DsirKeepFrac)
     val wSig = org.apache.spark.sql.expressions.Window.partitionBy("sig")
@@ -848,7 +849,7 @@ object PipelineOps {
        |  FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id
        |), gr AS (
        |  SELECT DISTINCT doc_id,
-       |    ${DedupOps2.h60Duck(
+       |    ${DedupOps.h60Duck(
       "array_to_string(words[i : i + " + (SplitAuditK - 1) + "], ' ')")} AS f
        |  FROM (SELECT doc_id, string_split(text, ' ') AS words,
        |          unnest(range(1, len(string_split(text, ' '))

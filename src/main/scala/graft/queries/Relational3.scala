@@ -97,28 +97,23 @@ object Relational3 {
     * count: estimate = (k-1) * 2^60 / kth_min_hash. */
   def q24KmvSketch(s: SparkSession, d: String): DataFrame = {
     // one distinct shuffle feeds both the sketch and the exact count (the
-    // exact side exists only to show the estimator's error); the cache is
-    // released before returning — the one-row result is checkpoint-
-    // materialized so bench loops never accumulate storage blocks
+    // exact side exists only to show the estimator's error): the plan stays
+    // lazy and AQE reuses the distinct's exchange for the second consumer
+    // (PlanSpec pins the ReusedExchange and the single lineitem scan)
     val keys = lineitem(s, d).select("l_partkey").distinct()
-      .withColumn("h", expr(
-        "cast(conv(substring(md5(cast(l_partkey as string)), 1, 15), 16, 10) as bigint)"))
-      .cache()
-    try {
-      val sketch = keys.orderBy("h").limit(K)
-        .agg(count(lit(1)).cast("long").as("k"), max(col("h")).as("kth_hash"))
-        .withColumn("est_distinct",
-          round(lit(K - 1) * lit(H60Max) / col("kth_hash")).cast("long"))
-      val exact = keys.agg(count(lit(1)).as("exact_distinct"))
-      sketch.crossJoin(exact)
-        .select(col("k"), col("kth_hash"), col("est_distinct"), col("exact_distinct"))
-        .localCheckpoint(true)
-    } finally keys.unpersist(blocking = false)
+      .withColumn("h", expr(DedupOps.h60("cast(l_partkey as string)")))
+    val sketch = keys.orderBy("h").limit(K)
+      .agg(count(lit(1)).cast("long").as("k"), max(col("h")).as("kth_hash"))
+      .withColumn("est_distinct",
+        round(lit(K - 1) * lit(H60Max) / col("kth_hash")).cast("long"))
+    val exact = keys.agg(count(lit(1)).as("exact_distinct"))
+    sketch.crossJoin(exact)
+      .select(col("k"), col("kth_hash"), col("est_distinct"), col("exact_distinct"))
   }
 
   val q24Sql: String =
     s"""WITH h AS (
-       |  SELECT DISTINCT ('0x' || substr(md5(l_partkey::VARCHAR), 1, 15))::BIGINT AS h
+       |  SELECT DISTINCT ${DedupOps.h60Duck("l_partkey::VARCHAR")} AS h
        |  FROM lineitem),
        |kmin AS (SELECT h FROM h ORDER BY h LIMIT $K),
        |sk AS (
@@ -521,9 +516,9 @@ object Relational3 {
     * corpora/partitions for free, which is why HLL and not exact
     * count-distinct is what runs at 10^12 keys. */
   def q33HllSketch(s: SparkSession, d: String): DataFrame = {
+    // kept eager: left lazy, q33 ran 2.0x at sf0.1 (A/B)
     val keys = lineitem(s, d).select("l_partkey").distinct()
-      .withColumn("h", expr(
-        "cast(conv(substring(md5(cast(l_partkey as string)), 1, 15), 16, 10) as bigint)"))
+      .withColumn("h", expr(DedupOps.h60("cast(l_partkey as string)")))
       .cache()
     try {
       val regs = keys
@@ -552,7 +547,7 @@ object Relational3 {
 
   val q33Sql: String =
     s"""WITH h AS (
-       |  SELECT DISTINCT ('0x' || substr(md5(l_partkey::VARCHAR), 1, 15))::BIGINT AS h
+       |  SELECT DISTINCT ${DedupOps.h60Duck("l_partkey::VARCHAR")} AS h
        |  FROM lineitem
        |), r AS (
        |  SELECT h // 4503599627370496 AS bucket, h % 4503599627370496 AS rest FROM h
@@ -630,14 +625,10 @@ object Relational3 {
     // sum(exact_n) per cell is bit-identical to count(*) over raw
     // occurrences. The standalone one-pass d·w-state sketch shape (no
     // exact agg anywhere) lives in graft.ops.Sketches.cmsGrid, unchanged.
-    // r16: checkpoint the KEYS-sized exact aggregate once — it feeds both
-    // the register grid and the top-k audit side, and left lazy each
-    // consumer re-ran the full scan + aggregate (two corpus passes); the
-    // grid derivation is now a lazy agg over the checkpointed keys (cells
-    // was consumed once, so its separate eager materialization was pure
-    // job overhead)
+    // the KEYS-sized exact aggregate feeds both the register grid and the
+    // top-k audit side; left lazy, AQE reuses its exchange for the second
+    // consumer, so the plan scans lineitem once (PlanSpec pins both)
     val keyed = rows.groupBy("l_suppkey").agg(count(lit(1)).as("exact_n"))
-      .localCheckpoint(true)
     val cells = keyed
       .select(col("exact_n"),
         posexplode(expr(cmsColsExpr("l_suppkey"))).as(Seq("r", "c")))

@@ -30,11 +30,9 @@ object SelectionOps {
     * threshold is the deterministic equivalent of its top-k). */
   val DsirKeepFrac = 0.25
 
-  /** 60-bit md5 integer of a string expression — the ONE portable-hash
-    * recipe shared with the d0x block (a third copy here could silently
-    * diverge from the dedup hashes). */
-  private def h60(c: String): String = DedupOps2.h60(c)
-  private def h60Duck(c: String): String = DedupOps2.h60Duck(c)
+  // the ONE portable-hash recipe shared with the d0x block (a copy here
+  // could silently diverge from the dedup hashes)
+  import DedupOps.{h60, h60Duck}
 
   /** t20: DSIR importance-weight selection over the full document pool.
     *

@@ -6,13 +6,18 @@ import org.apache.spark.sql.SparkSession
 /** The r4 judge flagged six query bodies that `.cache()`d intermediates and
   * never released them — in a bench loop (75 queries × warmup+timed) those
   * blocks accumulate in the storage pool and squeeze execution memory for
-  * every later query. The fix pattern (d09's): materialize the small result
-  * via eager `localCheckpoint`, release the cache in `finally`. This spec
-  * pins the invariant: after a query returns, the shared session's
-  * CacheManager holds NOTHING and no temp views are left behind.
-  * (Checkpoint blocks of the returned result are RDD-level, bounded by the
-  * result size, and reclaimed by the ContextCleaner when the DataFrame is
-  * dropped — they are not the leak class this guards against.)
+  * every later query. The fix pattern: return a lazy plan whose shared
+  * subtree ends in an exchange, which AQE computes once and reuses
+  * (`ReusedExchange`) for every consumer — no cache to release. A
+  * cache → eager `localCheckpoint` → `unpersist` trio stays only where an
+  * A/B measured the lazy plan slower (q33, d02, d04, d06, s04, s08 — each
+  * site's comment gives the numbers). This spec pins the invariant: after a
+  * query returns, the shared session's CacheManager holds NOTHING and no
+  * temp views are left behind, and the lazy builders run no job beyond the
+  * parquet schema read. (Checkpoint blocks of a returned result are RDD-level,
+  * bounded by the result size, and reclaimed by the ContextCleaner when
+  * the DataFrame is dropped — they are not the leak class this guards
+  * against.)
   */
 class CacheHygieneSpec extends AnyFunSuite {
 
@@ -56,6 +61,46 @@ class CacheHygieneSpec extends AnyFunSuite {
       fn(spark, d).count()
       assert(spark.sharedState.cacheManager.isEmpty,
         s"$name left Dataset cache entries registered after returning")
+    }
+  }
+
+  /** Number of jobs `body` started. The listener bus delivers events in
+    * order, so once a marker job's start is seen every job `body` started
+    * has been seen too. */
+  private def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val group = s"cache-hygiene-${java.util.UUID.randomUUID()}"
+    val marker = s"$group-end"
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      import org.scalatest.concurrent.Eventually._
+      import org.scalatest.time.SpanSugar._
+      eventually(timeout(10.seconds))(assert(groups.contains(marker)))
+    } finally sc.removeSparkListener(listener)
+    groups.asScala.count(_ == group)
+  }
+
+  test("lazy builders start at most one job per parquet table they read") {
+    // spark.read.parquet reads the footer schema in one job per table: that
+    // job is the floor for a builder that returns a plan without running it.
+    // Both builders read lineitem only.
+    Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)](
+      "q24_kmv_sketch" -> (Relational3.q24KmvSketch _),
+      "q34_cms_sketch" -> (Relational3.q34CmsSketch _),
+    ).foreach { case (name, fn) =>
+      val n = jobsDuring(fn(spark, d))
+      assert(n <= 1, s"$name started $n jobs while building its plan (floor: 1)")
     }
   }
 

@@ -628,13 +628,28 @@ class PlanSpec extends AnyFunSuite {
     val p = plan(Relational3.q34CmsSketch(spark, d))
     // the d-row fan-out must aggregate map-side so the shuffle carries
     // at most d*w cells per partition — the mergeable-sketch property.
-    // r16: the exact per-key count is checkpoint-materialized at build
-    // (it feeds both the grid and the audit side — one corpus pass), so
-    // the final plan shows the CELL aggregate (partial_sum over the
-    // checkpointed keys) instead of the count's own partial.
+    // The exact per-key count feeds both the grid and the audit side; the
+    // cell aggregate over it must run partial (partial_sum).
     assert(p.contains("partial_sum"), p.take(800))
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"), p.take(800))
+  }
+
+  test("q24/q34: the shared aggregate is a reused exchange over ONE lineitem scan") {
+    // both builders return plans with two consumers of one aggregate: AQE
+    // must compute the aggregate's exchange once and reuse it for the
+    // second consumer, so lineitem is scanned once
+    Seq("q24" -> Relational3.q24KmvSketch(spark, d),
+      "q34" -> Relational3.q34CmsSketch(spark, d)).foreach { case (name, df) =>
+      df.collect() // AQE finalizes during execution
+      // the adaptive plan prints its final plan, then the initial one
+      val p = df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+      assert(p.contains("== Final Plan =="), p)
+      assert(p.contains("ReusedExchange"), s"$name:\n$p")
+      val scans = "FileScan parquet[^\\n]*".r.findAllIn(p).toList
+      assert(scans.size == 1 && scans.head.contains("lineitem.parquet"),
+        s"$name:\n$p")
+    }
   }
 
   test("q30: grouping sets expand into a single aggregation pipeline") {
