@@ -16,7 +16,9 @@ final case class Variable(dims: Vector[String], data: NDArray,
   def isel(indexer: Map[String, Slc]): Variable = {
     val slices = dims.zip(data.shape).map { case (d, n) =>
       indexer.getOrElse(d, Slc(0, n)) }
-    copy(data = data.slice(slices))
+    // a selection of the whole variable is the variable: no copy
+    if (slices == data.shape.map(Slc(0, _))) this
+    else copy(data = data.slice(slices))
   }
 }
 

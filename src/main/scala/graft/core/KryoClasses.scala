@@ -4,9 +4,14 @@ package graft.core
   *
   * The engine moves fragments through `Encoders.kryo` binary columns; with
   * the classes registered, Kryo writes small class ids instead of fully
-  * qualified class names per record — at 100 TB the rechunk shuffle's
-  * dominant payload is fragment bytes, so per-record framing overhead
-  * matters. Wire into any session that runs cube pipelines:
+  * qualified class names per record. An array's record is what
+  * [[NDArray]] writes: a file-backed array that has not loaded writes its
+  * byte-range reference (NetCDF3 sources cross the rechunk shuffle as a
+  * few dozen bytes per piece), every other array its data, so the
+  * shuffle's payload is fragment bytes only for sources read eagerly or
+  * transformed on open. `FileRows` is written field by field inside the
+  * array's record and needs no registration. Wire into any session that
+  * runs cube pipelines:
   *
   *   .config("spark.kryo.classesToRegister", KryoClasses.names)
   */

@@ -2,6 +2,9 @@ package graft.core
 
 import com.esotericsoftware.kryo.{Kryo, KryoSerializable}
 import com.esotericsoftware.kryo.io.{Input, Output}
+import java.nio.{ByteBuffer, ByteOrder}
+import java.nio.channels.FileChannel
+import java.nio.file.{Paths, StandardOpenOption}
 
 /** Element dtypes supported by the cube engine, mirroring the dtype surface
   * the reference exercises (float64/int64/int32 data, datetime64[ns] time,
@@ -80,25 +83,73 @@ object DType {
   }
 }
 
+/** Where a file-backed array's data lives: row `r` of its leading dim is
+  * `rowBytes` bytes at `begin + r * rowStride` of the file at `path`, its
+  * elements stored at the array dtype's width in the given byte order.
+  * Contiguous rows have `rowStride == rowBytes`; the rows of a NetCDF3
+  * record variable are `recsize` apart. */
+final case class FileRows(path: String, begin: Long, rowBytes: Long,
+                          rowStride: Long, bigEndian: Boolean) {
+
+  /** The rows from row `r` on. */
+  def drop(r: Int): FileRows = copy(begin = begin + r * rowStride)
+
+  /** Read and decode the first `rows` rows as `dtype` elements. */
+  def read(dtype: DType, rows: Int): AnyRef = {
+    val total = rows * rowBytes
+    require(total <= Int.MaxValue, s"$path: $total bytes at $begin is too large for one array")
+    val buf = ByteBuffer.allocate(total.toInt)
+    if (rows > 0) {
+      val ch = FileChannel.open(Paths.get(path), StandardOpenOption.READ)
+      try {
+        // contiguous rows are one read; strided rows one read each
+        val (runs, runBytes) = if (rowStride == rowBytes) (1, total) else (rows, rowBytes)
+        var r = 0
+        while (r < runs) {
+          buf.limit(((r + 1) * runBytes).toInt)
+          val at = begin + r * rowStride - r * runBytes
+          while (buf.hasRemaining)
+            if (ch.read(buf, at + buf.position()) < 0)
+              throw new java.io.EOFException(s"$path: EOF at ${at + buf.position()}")
+          r += 1
+        }
+      } finally ch.close()
+    }
+    NDArray.decode(dtype, buf.array(), bigEndian)
+  }
+}
+
 /** Dense row-major n-dimensional array over a primitive JVM array.
   * The heavy ops the pipeline needs — rectangular slice (ds.isel) and
   * block assignment (xr.combine_nested's concat) — are implemented as
   * System.arraycopy runs over the innermost dimension.
   *
-  * A [[NDArray.deferred]] array knows its dtype and shape up front and
-  * loads its data on the first `data` access, at most once; metadata-only
-  * readers (the schema pass) never trigger the load. Serializing a deferred
-  * array (Kryo or Java) loads it first, so the loader never leaves the JVM
-  * that built it.
+  * Two kinds of array know their dtype and shape up front and load their
+  * data on the first `data` access, at most once; metadata-only readers
+  * (the schema pass) never trigger the load:
+  *  - a [[NDArray.deferred]] array runs a closure;
+  *  - a [[NDArray.fileRows]] array reads its rows from a file
+  *    ([[FileRows]]). A leading-dim slice of one that has not loaded is
+  *    another file-backed array, found by offset arithmetic without a read.
+  *
+  * Serialization contract. The Kryo record of an unloaded file-backed
+  * array is its file reference (path, offset, row length and stride), a
+  * few dozen bytes, and the array that reads it back loads from the same
+  * file: the file must be readable wherever the record is read, for as
+  * long as it may be. Every other array's Kryo record carries its data:
+  * loaded arrays, arrays derived from others, closure-deferred arrays
+  * (which load first, so the closure never leaves the JVM that built it).
+  * Java serialization always loads first and carries the data.
   */
 final class NDArray private (private var _dtype: DType,
                              private var _shape: Vector[Int],
                              @volatile private var _data: AnyRef,
-                             @transient private var load: () => AnyRef)
+                             @transient private var load: () => AnyRef,
+                             @transient private var rows: FileRows)
     extends Serializable with KryoSerializable {
 
   def this(dtype: DType, shape: Vector[Int], data: AnyRef) =
-    this(dtype, shape, NDArray.checked(shape, data), null)
+    this(dtype, shape, NDArray.checked(shape, data), null, null)
 
   def dtype: DType = _dtype
   def shape: Vector[Int] = _shape
@@ -109,8 +160,10 @@ final class NDArray private (private var _dtype: DType,
     if (d != null) d
     else synchronized {
       if (_data == null) {
-        _data = NDArray.checked(_shape, load())
+        val r = rows
+        _data = NDArray.checked(_shape, if (r != null) r.read(_dtype, _shape.head) else load())
         load = null
+        rows = null
       }
       _data
     }
@@ -120,13 +173,24 @@ final class NDArray private (private var _dtype: DType,
     out.writeString(_dtype.name)
     out.writeInt(_shape.length, true)
     _shape.foreach(out.writeInt(_, true))
-    kryo.writeClassAndObject(out, data)
+    val r = rows
+    out.writeBoolean(r != null)
+    if (r != null) {
+      out.writeString(r.path)
+      out.writeLong(r.begin, true)
+      out.writeLong(r.rowBytes, true)
+      out.writeLong(r.rowStride, true)
+      out.writeBoolean(r.bigEndian)
+    } else kryo.writeClassAndObject(out, data)
   }
 
   def read(kryo: Kryo, in: Input): Unit = {
     _dtype = DType.fromName(in.readString())
     _shape = Vector.fill(in.readInt(true))(in.readInt(true))
-    _data = NDArray.checked(_shape, kryo.readClassAndObject(in))
+    if (in.readBoolean())
+      rows = FileRows(in.readString(), in.readLong(true), in.readLong(true),
+        in.readLong(true), in.readBoolean())
+    else _data = NDArray.checked(_shape, kryo.readClassAndObject(in))
   }
 
   private def writeObject(out: java.io.ObjectOutputStream): Unit = {
@@ -147,6 +211,9 @@ final class NDArray private (private var _dtype: DType,
     slices.zip(shape).foreach { case (s, dim) =>
       require(s.start >= 0 && s.stop <= dim && s.stop >= s.start, s"slice $s out of range $dim") }
     val outShape = slices.map(_.length)
+    val r = rows
+    if (r != null && slices.tail.zip(shape.tail).forall { case (s, n) => s.start == 0 && s.stop == n })
+      return NDArray.fileRows(dtype, outShape, r.drop(slices.head.start))
     val out = NDArray.alloc(dtype, NDArray.sizeOf(outShape))
     NDArray.copyRegion(
       src = data, srcShape = shape, srcStart = slices.map(_.start),
@@ -192,6 +259,19 @@ final class NDArray private (private var _dtype: DType,
       (if (dtype == DType.U2) a(flat) & 0xFFFF else a(flat).toInt).toLong
     case a: Array[Byte] =>
       (if (dtype == DType.U1) a(flat) & 0xFF else a(flat).toInt).toLong
+  }
+
+  /** The same elements read as `to`, an integer dtype of the same width
+    * (the `_Unsigned` reinterpretation). No data is read or copied: a
+    * file-backed array stays file-backed and any other unloaded array stays
+    * unloaded. */
+  def reinterpret(to: DType): NDArray = {
+    require(DType.isInteger(dtype) && DType.isInteger(to) && to.byteSize == dtype.byteSize,
+      s"cannot reinterpret ${dtype.name} as ${to.name}")
+    val r = rows
+    if (r != null) NDArray.fileRows(to, shape, r)
+    else if (_data == null) NDArray.deferred(to, shape)(data)
+    else new NDArray(to, shape, _data)
   }
 
   /** Cast (copy) to another dtype along the promotion lattice. */
@@ -252,7 +332,30 @@ object NDArray {
 
   /** An array whose data `load` produces on the first `data` access. */
   def deferred(dtype: DType, shape: Vector[Int])(load: => AnyRef): NDArray =
-    new NDArray(dtype, shape, null, () => load)
+    new NDArray(dtype, shape, null, () => load, null)
+
+  /** An array whose `shape(0)` rows `rows` locates in a file; they are read
+    * on the first `data` access. */
+  def fileRows(dtype: DType, shape: Vector[Int], rows: FileRows): NDArray = {
+    require(shape.nonEmpty, "a file-backed array needs a leading dim")
+    require(rows.rowBytes == sizeOf(shape.tail).toLong * dtype.byteSize,
+      s"${rows.rowBytes}-byte rows do not hold ${shape.tail} ${dtype.name} elements")
+    new NDArray(dtype, shape, null, null, rows)
+  }
+
+  /** `bytes` as an array of `dtype` elements stored at the dtype's width. */
+  def decode(dtype: DType, bytes: Array[Byte], bigEndian: Boolean): AnyRef = {
+    val buf = ByteBuffer.wrap(bytes).order(
+      if (bigEndian) ByteOrder.BIG_ENDIAN else ByteOrder.LITTLE_ENDIAN)
+    alloc(dtype, bytes.length / dtype.byteSize) match {
+      case a: Array[Byte] => buf.get(a); a
+      case a: Array[Short] => buf.asShortBuffer().get(a); a
+      case a: Array[Int] => buf.asIntBuffer().get(a); a
+      case a: Array[Long] => buf.asLongBuffer().get(a); a
+      case a: Array[Float] => buf.asFloatBuffer().get(a); a
+      case a: Array[Double] => buf.asDoubleBuffer().get(a); a
+    }
+  }
 
   def alloc(dtype: DType, n: Int): AnyRef = dtype match {
     case DType.I4 | DType.U4 => new Array[Int](n)

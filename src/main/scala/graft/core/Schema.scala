@@ -21,9 +21,11 @@ object CubeSchema {
 
   /** Metadata-only schema of a fragment (dataset_to_schema,
     * aggregation.py:20-37). It reads dims, shapes, dtypes and attrs and
-    * never an array's data, so a fragment of [[NDArray.deferred]] arrays
-    * is not loaded; an opener that decodes eagerly has read its data
-    * before this runs. */
+    * never an array's data, so a fragment of deferred or file-backed
+    * arrays is not loaded: the schema pass over `scanZarrStore` slabs and
+    * NetCDF3 files (CF-packed or not) reads metadata and headers only. An
+    * opener that decodes eagerly (HDF5, GRIB) has read its data before
+    * this runs. */
   def fromFragment(f: Fragment): CubeSchema = {
     def spec(v: Variable): VarSpec =
       VarSpec(v.dims, v.shape, v.dtype, v.attrs,

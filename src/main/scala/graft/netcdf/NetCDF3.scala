@@ -268,26 +268,6 @@ object NetCDF3 {
 
   // ---------------------------------------------------------------- read
 
-  /** Decode `n` big-endian values of `ncType` from `bytes` into the widened
-    * engine dtype array. */
-  private def decodeValues(bytes: Array[Byte], ncType: Int, n: Int): AnyRef = {
-    val buf = ByteBuffer.wrap(bytes).order(ByteOrder.BIG_ENDIAN)
-    ncType match {
-      case NcByte | NcChar | NcUByte => // width-preserving int8/uint8
-        val a = new Array[Byte](n); buf.get(a); a
-      case NcShort | NcUShort =>
-        val a = new Array[Short](n); buf.asShortBuffer().get(a); a
-      case NcInt | NcUInt =>
-        val a = new Array[Int](n); buf.asIntBuffer().get(a); a
-      case NcInt64 | NcUInt64 =>
-        val a = new Array[Long](n); buf.asLongBuffer().get(a); a
-      case NcFloat =>
-        val a = new Array[Float](n); buf.asFloatBuffer().get(a); a
-      case NcDouble =>
-        val a = new Array[Double](n); buf.asDoubleBuffer().get(a); a
-    }
-  }
-
   def widenedDType(ncType: Int): DType = ncType match {
     case NcByte => DType.I1
     case NcChar => DType.U1 // byte codes; attrs decode to strings instead
@@ -334,50 +314,53 @@ object NetCDF3 {
 
   /** Read a classic file into the engine's Fragment. Variables whose only
     * dim is their own name become coordinates (the xarray convention the
-    * reference relies on); everything else is a data variable. */
+    * reference relies on); everything else is a data variable.
+    *
+    * Only the header is read here. Every array with a dim is file-backed
+    * ([[NDArray.fileRows]]): fixed variables as contiguous rows, record
+    * variables as rows `recsize` apart. Its bytes are read when its data is
+    * first used, wherever that is, so the file must stay in place until
+    * then. Scalars are read now. Every header check, including that each
+    * variable's bytes lie inside the file, runs here. */
   def read(path: String): Fragment = {
     val hdr = readHeader(path)
-    val ch = FileChannel.open(Paths.get(path), StandardOpenOption.READ)
-    try {
-      val dimSizes: Map[String, Int] = hdr.dims.map(d =>
-        d.name -> (if (d.isRecord) hdr.numrecs else d.length)).toMap
-      val vars: Map[String, Variable] = hdr.vars.map { v =>
-        val shape = v.shape(hdr.dims, hdr.numrecs)
-        val n = shape.product
-        val slab = v.slabBytes(hdr.dims)
-        val totalBytes = if (v.isRecord(hdr.dims)) slab * hdr.numrecs else slab
-        require(totalBytes <= Int.MaxValue,
-          s"variable ${v.name} is $totalBytes bytes — too large for in-memory " +
-            "decode; use the kerchunk scan path (RefSet.scanNetCDF3) instead")
-        // classic format stores data uncompressed, so no variable can hold
-        // more bytes than the file — a corrupt dim length fails by name
-        // here instead of allocating gigabytes and EOF-ing
-        require(totalBytes <= Files.size(Paths.get(path)),
-          s"corrupt netcdf3 header: variable ${v.name} claims $totalBytes " +
-            s"bytes in a ${Files.size(Paths.get(path))}-byte file")
-        val raw: Array[Byte] =
-          if (!v.isRecord(hdr.dims)) readFully(ch, v.begin, slab.toInt)
-          else {
-            // gather the per-record slabs strided by recsize
-            val out = new Array[Byte]((slab * hdr.numrecs).toInt)
-            val stride = hdr.recsize
-            var r = 0
-            while (r < hdr.numrecs) {
-              System.arraycopy(readFully(ch, v.begin + r * stride, slab.toInt),
-                0, out, (r * slab).toInt, slab.toInt)
-              r += 1
-            }
-            out
-          }
-        val data = NDArray(widenedDType(v.ncType), shape,
-          decodeValues(raw, v.ncType, n))
-        v.name -> Variable(v.dimids.map(hdr.dims(_).name), data, v.attrs)
-      }.toMap
-      val (coords, dataVars) = vars.partition { case (name, v) =>
-        v.dims == Vector(name)
-      }
-      Fragment(dimSizes, coords, dataVars, hdr.gatts)
-    } finally ch.close()
+    val file = Paths.get(path).toAbsolutePath
+    val fileSize = Files.size(file)
+    val dimSizes: Map[String, Int] = hdr.dims.map(d =>
+      d.name -> (if (d.isRecord) hdr.numrecs else d.length)).toMap
+    val vars: Map[String, Variable] = hdr.vars.map { v =>
+      val shape = v.shape(hdr.dims, hdr.numrecs)
+      val ext = extSize(v.ncType)
+      val dtype = widenedDType(v.ncType)
+      val data =
+        if (shape.isEmpty)
+          NDArray(dtype, shape, NDArray.decode(dtype, readRange(path, v.begin, ext), bigEndian = true))
+        else {
+          val rows = shape.head
+          val rowBytesBig = shape.tail.map(BigInt(_)).product * ext
+          val totalBytes = rowBytesBig * rows
+          require(totalBytes <= Int.MaxValue,
+            s"variable ${v.name} is $totalBytes bytes — too large for in-memory " +
+              "decode; use the kerchunk scan path (RefSet.scanNetCDF3) instead")
+          val rowBytes = rowBytesBig.toLong
+          val rowStride = if (v.isRecord(hdr.dims)) hdr.recsize else rowBytes
+          // classic format stores data uncompressed, so every row lies
+          // inside the file: a corrupt dim length or begin fails by name
+          // here, at open, not when a later task loads the rows
+          val end = if (rows == 0) BigInt(v.begin)
+            else BigInt(v.begin) + BigInt(rows - 1) * rowStride + rowBytes
+          require(v.begin >= 0 && rowStride >= rowBytes && end <= fileSize,
+            s"corrupt netcdf3 header: variable ${v.name} spans bytes " +
+              s"[${v.begin}, $end) of a $fileSize-byte file")
+          NDArray.fileRows(dtype, shape,
+            FileRows(file.toString, v.begin, rowBytes, rowStride, bigEndian = true))
+        }
+      v.name -> Variable(v.dimids.map(hdr.dims(_).name), data, v.attrs)
+    }.toMap
+    val (coords, dataVars) = vars.partition { case (name, v) =>
+      v.dims == Vector(name)
+    }
+    Fragment(dimSizes, coords, dataVars, hdr.gatts)
   }
 
   // ---------------------------------------------------------------- write

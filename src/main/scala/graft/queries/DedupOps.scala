@@ -261,27 +261,26 @@ object DedupOps {
   /** LSH banding: md5 over each 4-hash band, single bucket-join on the
     * exploded (band_no, band_hash) table for candidates, then one
     * signature join to score est_sim (fraction of equal minhashes).
-    * The signature table is cached — it is the expensive shingle pipeline —
-    * and each band is a key of ONE equi-join, not one join per band. The
-    * cache lives only inside this call: the (tiny, LSH-collapsed) pair
-    * table is checkpoint-materialized UNSORTED and the signature cache
-    * released before returning, so repeated invocations never accumulate
-    * storage blocks. The presentation sort sits lazily ON TOP of the
-    * checkpoint — consumers that aggregate above d04 (d07/d13/p09) plan
-    * it away, and consumers that do re-execute it sort the checkpointed
-    * LSH-collapsed pair table, not the corpus stream. */
-  def d04MinhashLsh(s: SparkSession, d: String): DataFrame = {
+    * The rows of [[d04Pairs]] in (doc_a, doc_b) order. */
+  def d04MinhashLsh(s: SparkSession, d: String): DataFrame =
+    d04Pairs(s, d).orderBy("doc_a", "doc_b")
+
+  /** d04's candidate pairs (doc_a, doc_b, est_sim), unordered: the input of
+    * the connected-components consumers (d07, d13), where a presentation
+    * sort would survive under their `Union` as a range-partitioning
+    * exchange and a sort of the pair table for nothing. The signature
+    * table is cached — it is the expensive shingle pipeline — and each
+    * band is a key of ONE equi-join, not one join per band. The cache
+    * lives only inside this call: the (tiny, LSH-collapsed) pair table is
+    * checkpoint-materialized and the signature cache released before
+    * returning, so repeated invocations never accumulate storage blocks. */
+  private[queries] def d04Pairs(s: SparkSession, d: String): DataFrame = {
     // r15 (guide §2.4 "an orderBy used only to make output deterministic"):
     // cache the UNSORTED signature table (banding is order-free — d03's
     // presentation orderBy would range-sort the cached frame for nothing)
-    // and keep the checkpoint unsorted too, sorting lazily on top: d04's
-    // own materialized rows are identical, while the CC consumers
-    // (d07/d13/p09) aggregate above it and the optimizer drops the
-    // order-irrelevant sort — and even where it survives, it sorts a
-    // checkpointed LSH-collapsed pair table, not the corpus stream.
     // kept eager: left lazy, d07/d13 ran 1.45x/1.51x at sf0.1 (signature agg ran twice; A/B)
     val sig = minhashSigOf(shingles(s, d)).cache()
-    try lshPairsOf(sig).localCheckpoint(true).orderBy("doc_a", "doc_b")
+    try lshPairsOf(sig).localCheckpoint(true)
     finally sig.unpersist(blocking = false)
   }
 
@@ -434,7 +433,7 @@ object DedupOps {
     * rounds even web-scale — the GraphX/Pregel CC shape without the
     * dependency). */
   def d07DupClusters(s: SparkSession, d: String): DataFrame = {
-    val pairs = d04MinhashLsh(s, d).select("doc_a", "doc_b")
+    val pairs = d04Pairs(s, d).select("doc_a", "doc_b")
     connectedComponents(s, pairs, SingleTaskEdgeMax)
       .groupBy("label").agg(
         count(lit(1)).as("cluster_size"),

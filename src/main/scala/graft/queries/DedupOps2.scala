@@ -557,7 +557,7 @@ object DedupOps2 {
     // equi-join (its own exchange or a broadcast probe) and a map-only
     // hash decision — the spread's round-robin exchange bought nothing
     leakageSplitOf(s, Tables.documentsUnspread(s, d).select("doc_id"),
-      DedupOps.d04MinhashLsh(s, d).select("doc_a", "doc_b"), LeakSplitMod)
+      DedupOps.d04Pairs(s, d).select("doc_a", "doc_b"), LeakSplitMod)
       .orderBy("doc_id")
 
   /** d13's kernel over any (doc_id) universe frame + undirected

@@ -92,7 +92,13 @@ object Preprocess {
     * Variables without packing attrs pass through untouched — in
     * particular CF-encoded TIME stays encoded (ints + units attrs), the
     * engine-wide convention (`decode_times` is a separate xarray step this
-    * engine deliberately defers to the calendar attrs). */
+    * engine deliberately defers to the calendar attrs).
+    *
+    * Nothing is read here: dtype and shape follow from the attrs and the
+    * source array, and values are reinterpreted or mapped when the data
+    * loads, so a metadata pass (the schema pass) reads no data bytes. A
+    * reinterpreted file-backed array stays file-backed; an unpacked one is
+    * closure-deferred, so its serialized record carries the data. */
   def cfDecode(f: Fragment): Fragment = {
     val consumed = Set("scale_factor", "add_offset", "_FillValue",
       "missing_value", "_Unsigned")
@@ -104,39 +110,35 @@ object Preprocess {
       val unsignedAttr = v.attrs.get("_Unsigned").collect {
         case AttrValue.AStr(s) => s == "true"
       }
-      val data0 = unsignedAttr match {
-        case Some(true) => v.data.dtype match {
-          case DType.I1 => NDArray(DType.U1, v.data.shape, v.data.data)
-          case DType.I2 => NDArray(DType.U2, v.data.shape, v.data.data)
-          case DType.I4 => NDArray(DType.U4, v.data.shape, v.data.data)
-          case DType.I8 => NDArray(DType.U8, v.data.shape, v.data.data)
-          case _ => v.data
-        }
-        case Some(false) => v.data.dtype match { // the inverse quirk
-          case DType.U1 => NDArray(DType.I1, v.data.shape, v.data.data)
-          case DType.U2 => NDArray(DType.I2, v.data.shape, v.data.data)
-          case DType.U4 => NDArray(DType.I4, v.data.shape, v.data.data)
-          case _ => v.data
-        }
-        case None => v.data
+      val reinterpreted = unsignedAttr match {
+        case Some(true) => Map[DType, DType](DType.I1 -> DType.U1, DType.I2 -> DType.U2,
+          DType.I4 -> DType.U4, DType.I8 -> DType.U8).get(v.dtype)
+        case Some(false) => // the inverse quirk
+          Map[DType, DType](DType.U1 -> DType.I1, DType.U2 -> DType.I2, DType.U4 -> DType.I4)
+            .get(v.dtype)
+        case None => None
       }
+      val data0 = reinterpreted.fold(v.data)(v.data.reinterpret)
       val scale = num(v.attrs.get("scale_factor"))
       val offset = num(v.attrs.get("add_offset"))
       val fills = Seq(v.attrs.get("_FillValue"), v.attrs.get("missing_value"))
         .flatMap(num)
+      val attrs = v.attrs.filterNot(kv => consumed(kv._1))
       if (scale.isEmpty && offset.isEmpty && fills.isEmpty)
-        return v.copy(data = data0,
-          attrs = v.attrs.filterNot(kv => consumed(kv._1)))
-      val out = data0.astype(DType.F8)
-      val arr = out.data.asInstanceOf[Array[Double]]
+        return v.copy(data = data0, attrs = attrs)
       val s = scale.getOrElse(1.0); val o = offset.getOrElse(0.0)
-      var i = 0
-      while (i < arr.length) {
-        if (fills.contains(arr(i))) arr(i) = Double.NaN
-        else arr(i) = arr(i) * s + o
-        i += 1
+      // deferred: the packed values are read and mapped when the data loads
+      val out = NDArray.deferred(DType.F8, data0.shape) {
+        val arr = new Array[Double](data0.size)
+        var i = 0
+        while (i < arr.length) {
+          val x = data0.getDouble(i)
+          arr(i) = if (fills.contains(x)) Double.NaN else x * s + o
+          i += 1
+        }
+        arr
       }
-      v.copy(data = out, attrs = v.attrs.filterNot(kv => consumed(kv._1)))
+      v.copy(data = out, attrs = attrs)
     }
     f.copy(coords = f.coords.map { case (n, v) => n -> decodeVar(v) },
       dataVars = f.dataVars.map { case (n, v) => n -> decodeVar(v) })

@@ -7,6 +7,7 @@ import graft.patterns.{FilePattern, FileType}
 import graft.rechunking.Rechunking
 import graft.zarr.ZarrGroup
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** A fragment about to enter the rechunk shuffle exceeds the kryo
   * serializer's write-buffer ceiling — it would otherwise fail later and
@@ -26,20 +27,23 @@ final class FragmentExceedsSerializerBufferException(
   *
   * Shape (SURVEY §3.1): parallelize(pattern.items) → map(open) →
   * schema reduction (partial per-partition fold + tiny driver merge) →
-  * broadcast schema → map(reindex) → flatMap(split) → groupByKey →
-  * mapGroups(combine) → map(write region) — the reference's physical shape
+  * broadcast schema → map(reindex) → flatMap(split) → shuffle by group key
+  * → combine each group → write region — the reference's physical shape
   * minus Beam. When no target chunk gathers pieces of two fragments
   * ([[graft.rechunking.Rechunking.everyChunkOwned]], decided from the
-  * schema alone), the groupByKey would regroup nothing and `storeToZarr`
+  * schema alone), the shuffle would regroup nothing and `storeToZarr`
   * writes each piece in the task that split it: no shuffle at all.
   *
   * Scale notes: fragment payloads move through Kryo-encoded binary columns;
   * the only all-to-one step is the schema merge, which is metadata-sized
-  * (~1 KB per input file). When chunks are shared, the rechunk groupByKey —
-  * the reference's acknowledged hotspot (transforms.py:414) — shuffles each
-  * fragment byte exactly once, keyed by disjoint target-chunk groups; on
-  * either path writes need no locks, because each storage object is
-  * written by exactly one task.
+  * (~1 KB per input file). When chunks are shared, the rechunk shuffle —
+  * the reference's acknowledged hotspot (transforms.py:414) — moves each
+  * piece once, keyed by disjoint target-chunk groups. A piece of a
+  * file-backed array (NetCDF3 opens to them) moves as a byte-range
+  * reference that the writing task reads in place, so such a source's
+  * bytes are read once and never shuffled; any other piece shuffles each
+  * fragment byte exactly once. On either path writes need no locks,
+  * because each storage object is written by exactly one task.
   */
 object Pipelines {
 
@@ -204,21 +208,41 @@ object Pipelines {
     }(Encoders.kryo[(Index, Fragment)])
   }
 
-  /** Rechunk (transforms.py:401-417): flatMap(split) → groupByKey →
-    * mapGroups(combine). One shuffle, keyed by target-chunk group; it runs
-    * whether or not the groups regroup anything (`storeToZarr` skips it
-    * when they would not). */
+  /** Rechunk (transforms.py:401-417): flatMap(split) → shuffle by group
+    * key → combine each group. One shuffle, keyed by target-chunk group; it
+    * runs whether or not the groups regroup anything (`storeToZarr` skips
+    * it when they would not).
+    *
+    * The reduce side has `defaultParallelism` partitions, sized by work
+    * like `createItems` and `scanZarrStore`, not by bytes: a piece of a
+    * file-backed array crosses the shuffle as a byte-range reference of a
+    * few dozen bytes, and AQE would coalesce such a shuffle into one task
+    * that then reads and writes every chunk alone. A shuffle with an
+    * explicit partition count is one AQE leaves alone. Each partition is
+    * sorted by group key and combined one group at a time, as `mapGroups`
+    * would. */
   def rechunk(frags: Dataset[(Index, Fragment)],
               targetChunks: Option[Map[String, Int]],
               schema: Option[CubeSchema]): Dataset[(Index, Fragment)] = {
-    val split = guardedSplit(frags.sparkSession, targetChunks, schema)
+    val spark = frags.sparkSession
+    val split = guardedSplit(spark, targetChunks, schema)
     frags
       .flatMap { case (idx, ds) =>
         split(idx, ds).map { case (k, v) => (Rechunking.groupKeyString(k), v) }
-      }(Encoders.kryo[(String, (Index, Fragment))])
-      .groupByKey(_._1)(Encoders.STRING)
-      .mapGroups { (_, it) =>
-        Rechunking.combineFragments(it.map(_._2).toSeq)
+      }(Encoders.tuple(Encoders.STRING, Encoders.kryo[(Index, Fragment)]))
+      .repartition(spark.sparkContext.defaultParallelism, col("_1"))
+      .sortWithinPartitions("_1")
+      .mapPartitions { it =>
+        val pieces = it.buffered
+        new Iterator[(Index, Fragment)] {
+          def hasNext: Boolean = pieces.hasNext
+          def next(): (Index, Fragment) = {
+            val key = pieces.head._1
+            val group = Vector.newBuilder[(Index, Fragment)]
+            while (pieces.hasNext && pieces.head._1 == key) group += pieces.next()._2
+            Rechunking.combineFragments(group.result())
+          }
+        }
       }(Encoders.kryo[(Index, Fragment)])
   }
 
@@ -612,9 +636,13 @@ object Openers {
           fileType != FileType.Opendap && fileType != FileType.Zarr)
         graft.storage.Storage.localize(cached)
       else cached
-    val frag = decoder(resolvedUrl)
+    val raw = decoder(resolvedUrl)
     // xr.open_dataset's mask_and_scale=True default: variables carrying CF
     // packing attrs (scale_factor/add_offset/_FillValue) arrive unpacked
-    if (maskAndScale) Preprocess.cfDecode(frag) else frag
+    val frag = if (maskAndScale) Preprocess.cfDecode(raw) else raw
+    // a spooled or localized copy lives on this executor only, so arrays
+    // that would read it later (NetCDF3's file-backed rows) load now
+    if (resolvedUrl != url) frag.allVars.valuesIterator.foreach(_.data.data)
+    frag
   }
 }

@@ -1,7 +1,7 @@
 package graft.zarr
 
 import java.nio.ByteBuffer
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import scala.jdk.CollectionConverters._
 
 /** Storage transport for a Zarr store root. Keys are store-relative paths
@@ -97,19 +97,23 @@ object MapIO {
 final class PosixIO(root: String) extends StoreIO {
   private def p(key: String) = Paths.get(root, key.split('/').toSeq: _*)
 
-  def write(key: String, bytes: Array[Byte]): Unit = {
-    val path = p(key)
-    Option(path.getParent).foreach(Files.createDirectories(_))
-    Files.write(path, bytes)
+  /** `path`, after creating its parent unless it is already a directory:
+    * on an existing parent, `createDirectories` still issues a failing
+    * mkdir and builds an exception, once per chunk. Racing writers stay
+    * safe, as `createDirectories` accepts a directory that appears. */
+  private def withParent(path: Path): Path = {
+    val parent = path.getParent
+    if (parent != null && !Files.isDirectory(parent)) Files.createDirectories(parent)
+    path
   }
+
+  def write(key: String, bytes: Array[Byte]): Unit =
+    Files.write(withParent(p(key)), bytes)
   def read(key: String): Array[Byte] = Files.readAllBytes(p(key))
   override def openRead(key: String): java.io.InputStream =
     Files.newInputStream(p(key))
-  override def openWrite(key: String): java.io.OutputStream = {
-    val path = p(key)
-    Option(path.getParent).foreach(Files.createDirectories(_))
-    Files.newOutputStream(path)
-  }
+  override def openWrite(key: String): java.io.OutputStream =
+    Files.newOutputStream(withParent(p(key)))
   private def readAt(ch: java.nio.channels.FileChannel, key: String,
                      pos: Long, len: Int): Array[Byte] = {
     val buf = ByteBuffer.allocate(len)

@@ -7,7 +7,9 @@ import org.apache.spark.serializer.KryoSerializer
 import org.scalatest.funsuite.AnyFunSuite
 
 /** NDArray.deferred: the data loads on the first `data` access, once;
-  * metadata readers never load it; both serializers load it first. */
+  * metadata readers never load it; both serializers load it first.
+  * NDArray.fileRows: the same, except that its Kryo record is the file
+  * reference and a leading-dim slice stays a file reference. */
 class DeferredArraySpec extends AnyFunSuite {
 
   private def counted(values: Array[Double]): (AtomicInteger, NDArray) = {
@@ -18,9 +20,11 @@ class DeferredArraySpec extends AnyFunSuite {
     (loads, arr)
   }
 
+  private def kryo = new KryoSerializer(new SparkConf()
+    .set("spark.kryo.classesToRegister", KryoClasses.names)).newInstance()
+
   private def kryoRoundTrip[T: scala.reflect.ClassTag](x: T): T = {
-    val ser = new KryoSerializer(new SparkConf()
-      .set("spark.kryo.classesToRegister", KryoClasses.names)).newInstance()
+    val ser = kryo
     ser.deserialize[T](ser.serialize(x))
   }
 
@@ -33,6 +37,70 @@ class DeferredArraySpec extends AnyFunSuite {
   }
 
   private val values = Array(1.0, 2.0, Double.NaN, -0.0, 5.0, 6.0)
+
+  private def kryoRecord(x: AnyRef): Int = kryo.serialize(x).remaining()
+
+  /** A file of `rows` rows of 3 big-endian doubles, the row `r` holding
+    * r*10 + c, behind a 16-byte header and `gap` junk bytes after each row;
+    * returns the file-backed array over it and its eager twin. */
+  private def rowFile(rows: Int, gap: Int): (java.nio.file.Path, NDArray, NDArray) = {
+    val rowBytes = 3 * 8
+    val buf = java.nio.ByteBuffer.allocate(16 + rows * (rowBytes + gap))
+    buf.put(Array.fill[Byte](16)(0x7F))
+    val eager = new Array[Double](rows * 3)
+    for (r <- 0 until rows) {
+      for (c <- 0 until 3) { eager(r * 3 + c) = r * 10.0 + c; buf.putDouble(eager(r * 3 + c)) }
+      buf.put(Array.fill[Byte](gap)(0x55))
+    }
+    val path = java.nio.file.Files.createTempFile("rows", ".bin")
+    java.nio.file.Files.write(path, buf.array())
+    val arr = NDArray.fileRows(DType.F8, Vector(rows, 3),
+      FileRows(path.toString, 16, rowBytes, rowBytes + gap, bigEndian = true))
+    (path, arr, NDArray(DType.F8, Vector(rows, 3), eager))
+  }
+
+  test("an unloaded file-backed array's Kryo record is its reference") {
+    Seq(0, 8).foreach { gap => // contiguous and strided rows
+      val (_, arr, eager) = rowFile(64, gap)
+      val record = kryoRecord(arr)
+      assert(record < 128, s"$record-byte record for ${64 * 3 * 8} data bytes")
+      assert(kryoRoundTrip(arr).sameElements(eager))
+      assert(arr.sameElements(eager))
+      // once loaded, the record carries the data
+      assert(kryoRecord(arr) > 64 * 3 * 8)
+    }
+  }
+
+  test("a leading-dim slice of a file-backed array stays unloaded") {
+    val (path, arr, eager) = rowFile(64, 8)
+    val rows = Vector(Slc(5, 9), Slc(0, 3))
+    val piece = arr.slice(rows)
+    assert(piece.shape == Vector(4, 3))
+    assert(kryoRecord(piece) < 128 && kryoRecord(arr) < 128)
+    assert(piece.sameElements(eager.slice(rows)))
+    // neither the slice nor its source read anything: both fail once the
+    // file is gone
+    val slab = arr.slice(Vector(Slc(0, 2), Slc(0, 3)))
+    java.nio.file.Files.delete(path)
+    intercept[java.nio.file.NoSuchFileException](slab.data)
+    intercept[java.nio.file.NoSuchFileException](arr.data)
+  }
+
+  test("a non-leading slice loads the file-backed array") {
+    val (path, arr, eager) = rowFile(4, 8)
+    val cols = Vector(Slc(0, 4), Slc(1, 2))
+    val piece = arr.slice(cols)
+    java.nio.file.Files.delete(path)
+    assert(piece.sameElements(eager.slice(cols)))
+    assert(arr.sameElements(eager))
+  }
+
+  test("a Java round trip loads the file-backed array") {
+    val (path, arr, eager) = rowFile(4, 0)
+    val back = javaRoundTrip(arr)
+    java.nio.file.Files.delete(path)
+    assert(back.sameElements(eager))
+  }
 
   test("fromFragment never loads a deferred array") {
     val broken = NDArray.deferred(DType.F8, Vector(3, 4)) {

@@ -293,4 +293,38 @@ class NetCDF3Spec extends AnyFunSuite {
     bb.asDoubleBuffer().get(got)
     assert(got.toSeq == want.data.asInstanceOf[Array[Double]].toSeq)
   }
+
+  test("open reads only the header: the schema survives the file, the data does not") {
+    Seq(None, Some("time")).foreach { recordDim => // fixed and record layout
+      val f = cube(4)
+      val p = tmp("lazy")
+      NetCDF3.write(p, f, recordDim = recordDim)
+      val opened = graft.transforms.Openers.open(graft.patterns.FileType.Netcdf3, p)
+      Files.delete(java.nio.file.Paths.get(p))
+      val schema = CubeSchema.fromFragment(opened)
+      assert(schema.dataVars("foo").shape == Vector(4, 5, 7))
+      assert(schema.dataVars("bar").dtype == DType.I4)
+      val e = intercept[java.nio.file.NoSuchFileException](opened.dataVars("foo").data.data)
+      assert(e.getMessage.contains(java.nio.file.Paths.get(p).getFileName.toString), e.getMessage)
+    }
+  }
+
+  test("a begin past the end of the file fails at open, by name") {
+    val f = cube(2)
+    val p = tmp("begin")
+    NetCDF3.write(p, f)
+    val hdr = NetCDF3.readHeader(p)
+    val bytes = Files.readAllBytes(java.nio.file.Paths.get(p))
+    // move foo's data to the last bytes of the file: its rows now run past the end
+    val foo = hdr.vars.find(_.name == "foo").get
+    // its var entry ends (nc_type NC_DOUBLE, vsize, begin)
+    val bb = ByteBuffer.wrap(bytes)
+    val entry = (0 until foo.begin.toInt - 12).filter(i => bb.getInt(i) == NetCDF3.NcDouble &&
+      bb.getInt(i + 4) == 2 * 5 * 7 * 8 && bb.getInt(i + 8) == foo.begin.toInt)
+    assert(entry.size == 1)
+    bb.putInt(entry.head + 8, bytes.length - 8)
+    Files.write(java.nio.file.Paths.get(p), bytes)
+    val e = intercept[IllegalArgumentException](NetCDF3.read(p))
+    assert(e.getMessage.contains("variable foo spans bytes"), e.getMessage)
+  }
 }

@@ -652,6 +652,49 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  /** The physical plans of every SQL execution `body` starts, initial and
+    * adaptive updates alike. The listener bus delivers events in order, so
+    * once a marker job's start is seen every plan `body` produced has been
+    * seen too. */
+  private def plansDuring(body: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val marker = s"plan-spec-${java.util.UUID.randomUUID()}"
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    @volatile var markerSeen = false
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.jobGroup.id") == marker) markerSeen = true
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.add(s.physicalPlanDescription)
+        case u: SparkListenerSQLAdaptiveExecutionUpdate => plans.add(u.physicalPlanDescription)
+        case _ =>
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobGroup(marker, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      import org.scalatest.concurrent.Eventually._
+      import org.scalatest.time.SpanSugar._
+      eventually(timeout(10.seconds))(assert(markerSeen))
+    } finally sc.removeSparkListener(listener)
+    plans.asScala.toSeq
+  }
+
+  test("d07: no range-partitioning exchange sorts the candidate pair table") {
+    // d07 builds its edge table as the union of both pair projections; a
+    // presentation orderBy on the pairs survives under that Union as a
+    // sampling job, an exchange and a sort of the pair table for nothing
+    val plans = plansDuring(DedupOps.d07DupClusters(spark, d).collect())
+    assert(plans.nonEmpty)
+    val sorted = plans.filter(_.contains("rangepartitioning(doc_a"))
+    assert(sorted.isEmpty, sorted.headOption.getOrElse(""))
+  }
+
   test("q30: grouping sets expand into a single aggregation pipeline") {
     val p = plan(Relational3.q30GroupingSets(spark, d))
     assert(p.contains("Expand"), p)

@@ -544,4 +544,89 @@ class EndToEndSpec extends AnyFunSuite {
         "storeToZarr: rechunk shuffle + write").foreach(l => assert(seen(l), seen))
     }
   }
+
+  /** MergeDim(variable: foo, bar) x ConcatDim(time) over `files` NetCDF3
+    * files of 3 steps per variable, in the fixed or the record layout. */
+  private def mergeConcatNetcdf3(dir: String, files: Int,
+                                 recordDim: Option[String]): FilePattern = {
+    val nt = 3; val ny = 4; val nx = 5
+    for ((v, sign) <- Seq("foo" -> 1f, "bar" -> -1f); i <- 0 until files) {
+      val t0 = i * nt
+      val f = Fragment(
+        dims = Map("time" -> nt, "y" -> ny, "x" -> nx),
+        coords = Map(
+          "time" -> Variable(Vector("time"), NDArray(DType.I4, Vector(nt), Array.tabulate(nt)(t0 + _))),
+          "y" -> Variable(Vector("y"), NDArray(DType.F8, Vector(ny), Array.tabulate(ny)(_ * 0.5))),
+          "x" -> Variable(Vector("x"), NDArray(DType.F4, Vector(nx), Array.tabulate(nx)(_ * 0.25f)))),
+        dataVars = Map(v -> Variable(Vector("time", "y", "x"),
+          NDArray(DType.F4, Vector(nt, ny, nx),
+            Array.tabulate(nt * ny * nx)(k => sign * (t0 * ny * nx + k))))))
+      graft.netcdf.NetCDF3.write(s"$dir/${v}_$i.nc", f, recordDim = recordDim)
+    }
+    FilePattern(kw => s"$dir/${kw("variable")}_${kw("time")}.nc",
+      Vector(graft.patterns.MergeDim("variable", Vector("foo", "bar")),
+        graft.patterns.ConcatDim("time", (0 until files).map(_.toString).toVector, Some(nt))),
+      fileType = FileType.Netcdf3)
+  }
+
+  /** The stages `body` ran in jobs labelled `label`. The listener bus
+    * delivers events in order, so once a marker job's start is seen, every
+    * stage `body` completed has been seen too. */
+  private def stagesLabelled(label: String)(body: => Unit)
+      : Seq[org.apache.spark.scheduler.StageInfo] = {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val marker = s"stages-${java.util.UUID.randomUUID()}"
+    val ids = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val done = new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]()
+    @volatile var markerSeen = false
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val desc = Option(e.properties).map(_.getProperty("spark.job.description")).orNull
+        if (desc == label) e.stageIds.foreach(ids.add)
+        if (desc == marker) markerSeen = true
+      }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        done.add(e.stageInfo)
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      Pipelines.labelled(spark, marker)(sc.parallelize(Seq(1), 1).count())
+      import org.scalatest.concurrent.Eventually._
+      import org.scalatest.time.SpanSugar._
+      eventually(timeout(10.seconds))(assert(markerSeen))
+    } finally sc.removeSparkListener(listener)
+    done.asScala.filter(st => ids.contains(st.stageId)).toSeq
+  }
+
+  test("netcdf3 merge x concat: the rechunk shuffle moves byte-range references") {
+    Seq(None, Some("time")).foreach { recordDim => // fixed and record layout
+      val dir = tmp()
+      val files = 8
+      val pattern = mergeConcatNetcdf3(dir, files, recordDim)
+      val frags = Pipelines.openWithFragments(Pipelines.createItems(spark, pattern),
+        FileType.Netcdf3)
+      // the same recipe with every array loaded: its records carry the bytes
+      val loaded = frags.map { case (idx, f) =>
+        f.allVars.valuesIterator.foreach(_.data.data); (idx, f)
+      }(Encoders.kryo[(Index, Fragment)])
+      val stages = stagesLabelled("storeToZarr: rechunk shuffle + write") {
+        Pipelines.storeToZarr(frags, pattern.combineDimKeys, s"$dir/refs.zarr", Map("time" -> 8))
+      }
+      Pipelines.storeToZarr(loaded, pattern.combineDimKeys, s"$dir/bytes.zarr", Map("time" -> 8))
+      val (a, b) = (objects(s"$dir/refs.zarr"), objects(s"$dir/bytes.zarr"))
+      assert(a.keySet == b.keySet, recordDim)
+      a.keys.foreach(k => assert(a(k) == b(k), s"$k differs ($recordDim)"))
+      val foo = ZarrGroup(s"$dir/refs.zarr").readFragment().dataVars("foo")
+      assert(foo.shape == Vector(24, 4, 5) && foo.data.getDouble(24 * 20 - 1) == 24 * 20 - 1)
+
+      val map = stages.filter(_.taskMetrics.shuffleWriteMetrics.bytesWritten > 0)
+      val reduce = stages.filter(_.taskMetrics.shuffleReadMetrics.recordsRead > 0)
+      assert(map.size == 1 && reduce.size == 1, stages.map(_.name))
+      val written = map.head.taskMetrics.shuffleWriteMetrics.bytesWritten
+      assert(written < 1024L * 2 * files, s"$written shuffle bytes for ${2 * files} fragments")
+      assert(reduce.head.numTasks == spark.sparkContext.defaultParallelism)
+    }
+  }
 }
