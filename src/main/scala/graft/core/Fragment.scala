@@ -32,12 +32,9 @@ final case class Fragment(dims: Map[String, Int],
   def allVars: Map[String, Variable] = coords ++ dataVars
   def sizes: Map[String, Int] = dims
 
-  /** Raw array mass in bytes (Σ elements × dtype width) — what the kryo
-    * serializer writes for this fragment to within framing overhead, used
-    * by the rechunk shuffle's serializer-ceiling guard. */
-  def approxBytes: Long =
-    allVars.valuesIterator.map(v =>
-      v.shape.foldLeft(1L)(_ * _) * v.dtype.byteSize).sum
+  /** Array bytes in this fragment's Kryo record (Σ [[NDArray.recordBytes]]),
+    * used by the rechunk shuffle's serializer-ceiling guard. */
+  def recordBytes: Long = allVars.valuesIterator.map(_.data.recordBytes).sum
 
   /** ds.isel with slice indexers: slice every variable touching the dims. */
   def isel(indexer: Map[String, Slc]): Fragment = Fragment(

@@ -193,6 +193,11 @@ final class NDArray private (private var _dtype: DType,
     else _data = NDArray.checked(_shape, kryo.readClassAndObject(in))
   }
 
+  /** Array bytes in the Kryo record, without loading: an unloaded
+    * file-backed array's record is its reference (path + four numbers). */
+  def recordBytes: Long =
+    Option(rows).fold(shape.foldLeft(1L)(_ * _) * dtype.byteSize)(_.path.length + 32L)
+
   private def writeObject(out: java.io.ObjectOutputStream): Unit = {
     data
     out.defaultWriteObject()

@@ -128,26 +128,25 @@ object CubeSchema {
     target
   }
 
-  /** Template fragment: zero-filled variables at the schema's shape with the
-    * target chunking recorded in encoding (schema_to_template_ds,
-    * aggregation.py:227-251). Used to initialize the Zarr store metadata —
-    * data arrays are never materialized beyond what the caller touches.
+  /** Template fragment for `dynamicChunkingFn`: the schema as zeros with
+    * the target chunking in encoding (schema_to_template_ds,
+    * aggregation.py:227-251). Arrays are [[NDArray.deferred]], like the
+    * reference's lazy dask zeros: nothing is allocated unless read.
     */
-  def toTemplate(schema: CubeSchema,
-                 specified: Map[String, Int] = Map.empty,
-                 extraAttrs: Attrs = Attrs.empty): (Fragment, Map[String, Int]) = {
-    val targetChunks = determineTargetChunks(schema, specified)
+  def toTemplate(schema: CubeSchema): Fragment = {
+    val targetChunks = determineTargetChunks(schema)
     def toVar(spec: VarSpec): Variable = {
       val chunks = spec.dims.map(targetChunks(_))
-      Variable(spec.dims, NDArray.zeros(spec.dtype, spec.shape), spec.attrs,
+      val zeros = NDArray.deferred(spec.dtype, spec.shape)(
+        NDArray.alloc(spec.dtype, NDArray.sizeOf(spec.shape)))
+      Variable(spec.dims, zeros, spec.attrs,
         spec.encoding.updated("chunks",
           AttrValue.AList(chunks.map(c => AttrValue.AInt(c.toLong)))))
     }
-    val frag = Fragment(
+    Fragment(
       dims = schema.dims,
       coords = schema.coords.map { case (n, s) => n -> toVar(s) },
       dataVars = schema.dataVars.map { case (n, s) => n -> toVar(s) },
-      attrs = schema.attrs ++ extraAttrs.map { case (k, v) => s"pangeo-forge:$k" -> v })
-    (frag, targetChunks)
+      attrs = schema.attrs)
   }
 }

@@ -196,11 +196,15 @@ object NetCDF3 {
     }
   }
 
+  /** Header read size: headers are often a few hundred bytes, and the
+    * default 8 KiB buffer read 8% more than the arrays of 200 KB files. */
+  private val HeaderReadBytes = 512
+
   /** Parse the header only (metadata-sized read — the kerchunk scan path
     * never touches data bytes). */
   def readHeader(path: String): NcHeader = {
     val in = new DataInputStream(new BufferedInputStream(
-      Files.newInputStream(Paths.get(path))))
+      Files.newInputStream(Paths.get(path)), HeaderReadBytes))
     try {
       val magic = new Array[Byte](4)
       in.readFully(magic)

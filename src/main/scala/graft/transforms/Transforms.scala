@@ -26,7 +26,7 @@ final class FragmentExceedsSerializerBufferException(
 /** The user-facing pipeline composites, re-expressed on typed Datasets.
   *
   * Shape (SURVEY §3.1): parallelize(pattern.items) → map(open) →
-  * schema reduction (partial per-partition fold + tiny driver merge) →
+  * schema reduction (one job: per-partition folds + a driver merge) →
   * broadcast schema → map(reindex) → flatMap(split) → shuffle by group key
   * → combine each group → write region — the reference's physical shape
   * minus Beam. When no target chunk gathers pieces of two fragments
@@ -35,15 +35,16 @@ final class FragmentExceedsSerializerBufferException(
   * writes each piece in the task that split it: no shuffle at all.
   *
   * Scale notes: fragment payloads move through Kryo-encoded binary columns;
-  * the only all-to-one step is the schema merge, which is metadata-sized
-  * (~1 KB per input file). When chunks are shared, the rechunk shuffle —
-  * the reference's acknowledged hotspot (transforms.py:414) — moves each
-  * piece once, keyed by disjoint target-chunk groups. A piece of a
-  * file-backed array (NetCDF3 opens to them) moves as a byte-range
-  * reference that the writing task reads in place, so such a source's
-  * bytes are read once and never shuffled; any other piece shuffles each
-  * fragment byte exactly once. On either path writes need no locks,
-  * because each storage object is written by exactly one task.
+  * the only all-to-one step is the schema merge: at most partitions × outer
+  * positions accumulators of ~1 KB each, at any combine depth. When chunks
+  * are shared, the rechunk shuffle — the reference's acknowledged hotspot
+  * (transforms.py:414) — moves each piece once, keyed by disjoint
+  * target-chunk groups. A piece of a file-backed array (NetCDF3 opens to
+  * them) moves as a byte-range reference that the writing task reads in
+  * place, so such a source's bytes are read once and never shuffled; any
+  * other piece shuffles each fragment byte exactly once. On either path
+  * writes need no locks, because each storage object is written by
+  * exactly one task.
   */
 object Pipelines {
 
@@ -147,49 +148,38 @@ object Pipelines {
       }(Encoders.kryo[(Index, Fragment)])
   }
 
-  /** DetermineSchema (transforms.py:276-301): hierarchical reduction over
-    * the combine dims. Inner dims reduce per outer-index key; the final dim
-    * reduces globally via per-partition folds + a driver merge (the partial/
-    * final split Beam gets from CombineFn lifting).
-    */
+  /** DetermineSchema (transforms.py:276-301) in one job: each partition
+    * folds the innermost dim per outer index; the driver merges those
+    * accumulators (at most partitions × outer positions) and folds the
+    * outer dims (the partial/final split of Beam's CombineFn lifting). */
   def determineSchema(frags: Dataset[(Index, Fragment)],
                       combineDims: Vector[Dimension]): CubeSchema = {
-    val spark = frags.sparkSession
-    var schemas: Dataset[(Index, CubeSchema)] =
-      frags.map { case (idx, f) => (idx, CubeSchema.fromFragment(f)) }(
-        Encoders.kryo[(Index, CubeSchema)])
-    var cdims = combineDims
-    while (cdims.nonEmpty) {
-      val lastDim = cdims.last
-      cdims = cdims.dropRight(1)
-      if (cdims.isEmpty) {
-        // global combine: fold per partition, merge the handful on the driver
-        val partials = schemas.mapPartitions { it =>
-          val acc = it.foldLeft(SchemaCombine.zero(lastDim)) { (a, kv) =>
-            SchemaCombine.addInput(a, kv, lastDim) }
-          Iterator.single(acc)
-        }(Encoders.kryo[SchemaCombine.Acc]).collect()
-        val merged = partials.foldLeft(SchemaCombine.zero(lastDim))(SchemaCombine.merge)
-        return SchemaCombine.extract(merged)
-      } else {
-        // nest + combine per outer-index key (transforms.py:249-267)
-        schemas = schemas
-          .groupByKey { case (idx, _) =>
-            Index(idx.entries.filterNot(_._1 == lastDim)).canonical
-          }(Encoders.STRING)
-          .mapGroups { (_, it) =>
-            val buf = it.toVector
-            val outer = Index(buf.head._1.entries.filterNot(_._1 == lastDim))
-            val acc = buf.foldLeft(SchemaCombine.zero(lastDim)) { (a, kv) =>
-              val (idx, sch) = kv
-              SchemaCombine.addInput(a, (idx, sch), lastDim)
-            }
-            (outer, SchemaCombine.extract(acc))
-          }(Encoders.kryo[(Index, CubeSchema)])
-      }
+    require(combineDims.nonEmpty, "combineDims must be non-empty")
+    val inner = combineDims.last
+    val innerIsOutermost = combineDims.size == 1
+    val partials = frags.mapPartitions { it =>
+      combineAlong(it.map { case (idx, f) => (idx, CubeSchema.fromFragment(f)) },
+        inner, innerIsOutermost).iterator
+    }(Encoders.kryo[(Index, SchemaCombine.Acc)]).collect()
+    def extracted(accs: Map[Index, SchemaCombine.Acc]): Map[Index, CubeSchema] =
+      accs.map { case (outer, acc) => outer -> SchemaCombine.extract(acc) }
+    val combined = combineDims.init.zipWithIndex.foldRight(
+        extracted(partials.groupMapReduce(_._1)(_._2)(SchemaCombine.merge))) {
+      case ((dim, i), schemas) => extracted(combineAlong(schemas.iterator, dim, i == 0))
     }
-    throw new IllegalArgumentException("combineDims must be non-empty")
+    combined.valuesIterator.nextOption()
+      .getOrElse(SchemaCombine.extract(SchemaCombine.zero(inner)))
   }
+
+  /** Fold `schemas` along `dim` per outer index (the index without `dim`),
+    * or into one accumulator when `dim` is the outermost combine dim. */
+  private def combineAlong(schemas: Iterator[(Index, CubeSchema)], dim: Dimension,
+                           outermost: Boolean): Map[Index, SchemaCombine.Acc] =
+    schemas.foldLeft(Map.empty[Index, SchemaCombine.Acc]) { case (accs, item @ (idx, _)) =>
+      val outer = if (outermost) Index.empty else Index(idx.entries - dim)
+      accs.updated(outer,
+        SchemaCombine.addInput(accs.getOrElse(outer, SchemaCombine.zero(dim)), item, dim))
+    }
 
   /** IndexItems (transforms.py:304-328): broadcast-singleton join upgrading
     * ordinal positions to element offsets. */
@@ -251,9 +241,10 @@ object Pipelines {
     * whose write buffer is capped at `spark.kryoserializer.buffer.max`
     * (64m default) — an oversized slab used to die in an opaque
     * `KryoException: Buffer overflow` deep in the shuffle writer. Check the
-    * array mass up front and fail with the fragment's index, its size, and
-    * both remedies instead. The shuffle-free write path keeps the same
-    * limit, so a slab size valid on one path is valid on the other. */
+    * bytes each piece's record carries (a file-backed piece carries only
+    * its reference) and fail with the fragment's index, its size, and both
+    * remedies instead. The shuffle-free write path keeps the same limit,
+    * so a slab size valid on one path is valid on the other. */
   private def guardedSplit(spark: SparkSession,
                            targetChunks: Option[Map[String, Int]],
                            schema: Option[CubeSchema])
@@ -262,7 +253,7 @@ object Pipelines {
       spark.conf.get("spark.kryoserializer.buffer.max", "64m"))
     (idx, ds) => Rechunking.splitFragment(idx, ds, targetChunks, schema).map {
       case kv @ (_, (pieceIdx, piece)) =>
-        val est = piece.approxBytes
+        val est = piece.recordBytes
         if (est > bufferMax)
           throw new FragmentExceedsSerializerBufferException(pieceIdx, est, bufferMax)
         kv
@@ -294,9 +285,10 @@ object Pipelines {
   }
 
   /** PrepareZarrTarget (transforms.py:331-379 + aggregation.py:254-281):
-    * initialize the store metadata from the schema (driver-side; one-time).
-    * Coordinate data is NOT written here — fragments write it (coords-once
-    * rule), exactly like compute=False in the reference.
+    * initialize the store metadata from the schema's `VarSpec`s alone
+    * (driver-side; one-time; no array is built). Coordinate data is NOT
+    * written here — fragments write it (coords-once rule), exactly like
+    * compute=False in the reference.
     */
   def prepareZarrTarget(schema0: CubeSchema, path: String,
                         targetChunks: Map[String, Int] = Map.empty,
@@ -312,7 +304,6 @@ object Pipelines {
       case Some(ad) => schema0.copy(coords = schema0.coords.filter(_._1 == ad))
       case None => schema0
     }
-    val (template, chunksFull) = CubeSchema.toTemplate(schema, targetChunks, extraAttrs)
     // appending opens an EXISTING store, whose on-disk layout decides the
     // format; only a fresh create needs the explicit hint
     val g = appendDim match {
@@ -321,8 +312,9 @@ object Pipelines {
     }
     appendDim match {
       case None =>
-        g.initGroup(template.attrs)
-        template.allVars.foreach { case (name, v) =>
+        val chunksFull = CubeSchema.determineTargetChunks(schema, targetChunks)
+        g.initGroup(schema.attrs ++ extraAttrs.map { case (k, v) => s"pangeo-forge:$k" -> v })
+        schema.allVars.foreach { case (name, v) =>
           val chunkShape = v.dims.map(chunksFull(_))
           val shard =
             if (targetShards.isEmpty) None
@@ -345,7 +337,7 @@ object Pipelines {
         // rewriting any of those would misdecode all previously written
         // objects on later reads
         val added = schema.dims(ad)
-        template.allVars.foreach { case (name, v) =>
+        schema.allVars.foreach { case (name, v) =>
           if (v.dims.contains(ad)) {
             val old = g.arrayMeta(name)
             val newShape = old.shape.zip(old.dimensionNames).map { case (s, d) =>
@@ -449,9 +441,7 @@ object Pipelines {
     }
     val indexed = indexItems(items, schema, appendOffset)
     val chunks = dynamicChunkingFn match {
-      case Some(fn) =>
-        val (template, _) = CubeSchema.toTemplate(schema)
-        fn(template)
+      case Some(fn) => fn(CubeSchema.toTemplate(schema))
       case None => targetChunks
     }
     // fragments must align with the WRITE granularity: whole shards when
@@ -545,7 +535,8 @@ object Openers {
     // v3 store (zarr.json) or real v2 store (.zgroup) — auto-detected
     // through the StoreIO transport (so scheme'd URIs detect too), and
     // existing zarr-python v2 datasets open without conversion (chunks are
-    // decoded in place through the v2 RefSet, incl. the blosc default).
+    // decoded in place through the v2 RefSet, incl. the blosc default);
+    // arrays are deferred, so the schema pass reads no chunk.
     // The v2 scan walks a directory tree, which only the posix transport
     // exposes — a REMOTE v2 store gets an explicit error, not a confusing
     // missing-zarr.json failure from the v3 reader.
@@ -558,8 +549,8 @@ object Openers {
               "is filesystem-only — copy it locally (cache_url) or " +
               "convert it to a kerchunk v2 artifact first")
         graft.kerchunk.RefSet.scanZarrV2Group(url).asZarrGroup(url)
-          .readFragment()
-      } else ZarrGroup(url).readFragment()
+          .readFragmentRegion(Map.empty, deferred = true)
+      } else ZarrGroup(url).readFragmentRegion(Map.empty, deferred = true)
     },
     "scipy" -> (url => graft.netcdf.NetCDF3.read(url)),
     "h5netcdf" -> (url => graft.hdf5.HDF5.read(url)),

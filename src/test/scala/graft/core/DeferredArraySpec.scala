@@ -111,7 +111,7 @@ class DeferredArraySpec extends AnyFunSuite {
     val schema = CubeSchema.fromFragment(frag)
     assert(schema.dataVars("v").shape == Vector(3, 4))
     assert(schema.dataVars("v").dtype == DType.F8)
-    assert(frag.approxBytes == 3 * 4 * 8)
+    assert(frag.recordBytes == 3 * 4 * 8)
     intercept[IllegalStateException](broken.data)
   }
 

@@ -484,6 +484,32 @@ class EndToEndSpec extends AnyFunSuite {
     val e = intercept[Exception](
       scanned.map(_._2.dataVars("foo").data.getDouble(0))(Encoders.scalaDouble).collect())
     assert(e.getMessage.contains("Is a directory"), e.getMessage)
+
+    // the Zarr opener defers the same way, for a v3 store and for a v2
+    // store read through its v2 scan (there every chunk object is zeroed,
+    // so only the .z* documents decode)
+    val v2 = ZarrGroup(s"${tmp()}/src_v2.zarr", 2)
+    v2.initGroup(cube.attrs)
+    cube.allVars.foreach { case (name, v) =>
+      v2.createArray(name, v.shape, v.shape, v.dtype, v.attrs,
+        dimensionNames = Some(v.dims), gzipLevel = Some(1))
+      v2.writeRegion(name, Vector.fill(v.data.ndim)(0), v.data)
+    }
+    val v2Walk = Files.walk(java.nio.file.Paths.get(v2.root))
+    try v2Walk.iterator.asScala
+      .filter(p => Files.isRegularFile(p) && !p.getFileName.toString.startsWith(".z"))
+      .toVector.foreach(p => Files.write(p, new Array[Byte](Files.size(p).toInt)))
+    finally v2Walk.close()
+    Seq(src -> "Is a directory", v2.root -> "Not in GZIP format").foreach { case (store, why) =>
+      val pattern = FilePattern.fromFileSequence(Vector(store), "time",
+        nitemsPerFile = Some(8), fileType = FileType.Zarr)
+      val opened = Pipelines.openWithFragments(Pipelines.createItems(spark, pattern),
+        FileType.Zarr)
+      assert(Pipelines.determineSchema(opened, pattern.combineDimKeys).dims == cube.dims)
+      val e = intercept[Exception](
+        opened.map(_._2.dataVars("foo").data.getDouble(0))(Encoders.scalaDouble).collect())
+      assert(e.getMessage.contains(why), e.getMessage)
+    }
   }
 
   test("aligned slabs write without a shuffle, byte-identical to the shuffle path") {
@@ -569,21 +595,23 @@ class EndToEndSpec extends AnyFunSuite {
       fileType = FileType.Netcdf3)
   }
 
-  /** The stages `body` ran in jobs labelled `label`. The listener bus
-    * delivers events in order, so once a marker job's start is seen, every
-    * stage `body` completed has been seen too. */
-  private def stagesLabelled(label: String)(body: => Unit)
-      : Seq[org.apache.spark.scheduler.StageInfo] = {
+  /** The number of jobs `body` ran labelled `label`, and the stages of
+    * those jobs that ran. The listener bus delivers events in order, so
+    * once a marker job's start is seen, every stage `body` completed has
+    * been seen too. */
+  private def labelledRun(label: String)(body: => Unit)
+      : (Int, Seq[org.apache.spark.scheduler.StageInfo]) = {
     import org.apache.spark.scheduler._
     val sc = spark.sparkContext
     val marker = s"stages-${java.util.UUID.randomUUID()}"
     val ids = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
     val done = new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]()
     @volatile var markerSeen = false
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         val desc = Option(e.properties).map(_.getProperty("spark.job.description")).orNull
-        if (desc == label) e.stageIds.foreach(ids.add)
+        if (desc == label) { jobs.incrementAndGet(); e.stageIds.foreach(ids.add) }
         if (desc == marker) markerSeen = true
       }
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
@@ -597,7 +625,7 @@ class EndToEndSpec extends AnyFunSuite {
       import org.scalatest.time.SpanSugar._
       eventually(timeout(10.seconds))(assert(markerSeen))
     } finally sc.removeSparkListener(listener)
-    done.asScala.filter(st => ids.contains(st.stageId)).toSeq
+    (jobs.get, done.asScala.filter(st => ids.contains(st.stageId)).toSeq)
   }
 
   test("netcdf3 merge x concat: the rechunk shuffle moves byte-range references") {
@@ -611,7 +639,7 @@ class EndToEndSpec extends AnyFunSuite {
       val loaded = frags.map { case (idx, f) =>
         f.allVars.valuesIterator.foreach(_.data.data); (idx, f)
       }(Encoders.kryo[(Index, Fragment)])
-      val stages = stagesLabelled("storeToZarr: rechunk shuffle + write") {
+      val (_, stages) = labelledRun("storeToZarr: rechunk shuffle + write") {
         Pipelines.storeToZarr(frags, pattern.combineDimKeys, s"$dir/refs.zarr", Map("time" -> 8))
       }
       Pipelines.storeToZarr(loaded, pattern.combineDimKeys, s"$dir/bytes.zarr", Map("time" -> 8))
@@ -627,6 +655,94 @@ class EndToEndSpec extends AnyFunSuite {
       val written = map.head.taskMetrics.shuffleWriteMetrics.bytesWritten
       assert(written < 1024L * 2 * files, s"$written shuffle bytes for ${2 * files} fragments")
       assert(reduce.head.numTasks == spark.sparkContext.defaultParallelism)
+    }
+  }
+
+  test("determineSchema folds three combine dims in one job with no shuffle") {
+    val variable = Dimension("variable", CombineOp.Merge)
+    val time = Dimension("time", CombineOp.Concat)
+    val ens = Dimension("ens", CombineOp.Concat)
+    def frag(v: String, nt: Int, ne: Int): Fragment = Fragment(
+      dims = Map("time" -> nt, "ens" -> ne, "x" -> 4),
+      coords = Map(
+        "time" -> Variable(Vector("time"), NDArray.zeros(DType.I8, Vector(nt))),
+        "ens" -> Variable(Vector("ens"), NDArray.zeros(DType.I4, Vector(ne)))),
+      dataVars = Map(v -> Variable(Vector("time", "ens", "x"),
+        NDArray.zeros(DType.F8, Vector(nt, ne, 4)), Map("units" -> AttrValue("K")))),
+      attrs = Map("title" -> AttrValue("cube")))
+    val items = for {
+      (v, m) <- Vector("foo", "bar").zipWithIndex
+      (nt, t) <- Vector(2, 3, 1).zipWithIndex
+      (ne, e) <- Vector(1, 2).zipWithIndex
+    } yield (Index.of(variable -> Pos(m), time -> Pos(t), ens -> Pos(e)), frag(v, nt, ne))
+    val scattered = spark.createDataset(spark.sparkContext.parallelize(
+      new scala.util.Random(3).shuffle(items), 4))(Encoders.kryo[(Index, Fragment)])
+    // what determineSchema must equal: on the driver, combine along the
+    // innermost dim per outer index until one dim is left, then globally
+    def nested(schemas: Seq[(Index, CubeSchema)], dims: Vector[Dimension]): CubeSchema = {
+      import graft.combiners.SchemaCombine._
+      def fold(group: Seq[(Index, CubeSchema)], d: Dimension): CubeSchema =
+        extract(group.foldLeft(zero(d))((acc, kv) => addInput(acc, kv, d)))
+      if (dims.size == 1) fold(schemas, dims.head)
+      else nested(schemas.groupBy { case (idx, _) => Index(idx.entries - dims.last) }
+        .toSeq.map { case (outer, group) => outer -> fold(group, dims.last) }, dims.init)
+    }
+    val schemas = items.map { case (idx, f) => idx -> CubeSchema.fromFragment(f) }
+    Seq(Vector(variable, time, ens), Vector(ens, time, variable)).foreach { dims =>
+      var schema: CubeSchema = null
+      val (jobs, stages) = labelledRun("schema under test") {
+        schema = Pipelines.labelled(spark, "schema under test") {
+          Pipelines.determineSchema(scattered, dims)
+        }
+      }
+      assert(schema == nested(schemas, dims), dims)
+      assert(schema.dims == Map("time" -> 6, "ens" -> 3, "x" -> 4))
+      assert(schema.chunks == Map("time" -> Map(0 -> 2, 1 -> 3, 2 -> 1),
+        "ens" -> Map(0 -> 1, 1 -> 2)))
+      assert(schema.dataVars.keySet == Set("foo", "bar"))
+      assert(jobs == 1, dims)
+      assert(stages.size == 1 &&
+        stages.forall(_.taskMetrics.shuffleWriteMetrics.bytesWritten == 0), stages.map(_.name))
+    }
+  }
+
+  test("prepareZarrTarget creates a 2.5e9-element array from the schema alone") {
+    val n = 50000
+    val schema = CubeSchema(Attrs.empty, Map.empty,
+      Map("big" -> VarSpec(Vector("y", "x"), Vector(n, n), DType.F8)),
+      Map("y" -> n, "x" -> n), Map.empty)
+    val path = s"${tmp()}/big.zarr"
+    Pipelines.prepareZarrTarget(schema, path, Map("y" -> 1000, "x" -> 1000))
+    val meta = ZarrGroup(path).arrayMeta("big")
+    assert(meta.shape == Vector(n, n) && meta.chunks == Vector(1000, 1000))
+    assert(objects(path).keySet == Set("zarr.json", "big/zarr.json"))
+  }
+
+  test("a NetCDF3 slab above the serializer ceiling stores through its byte-range reference") {
+    // 17 steps of 512x1024 f64 = ~71 MB, above the session's 64m
+    // kryoserializer.buffer.max; opened, it is a file-backed array whose
+    // record is its reference, so the guard lets it through
+    val (nt, ny, nx) = (17, 512, 1024)
+    val dir = tmp()
+    val src = Fragment(
+      dims = Map("time" -> nt, "y" -> ny, "x" -> nx),
+      coords = Map("time" -> Variable(Vector("time"),
+        NDArray(DType.I4, Vector(nt), Array.tabulate(nt)(identity)))),
+      dataVars = Map("foo" -> Variable(Vector("time", "y", "x"),
+        NDArray(DType.F8, Vector(nt, ny, nx), Array.tabulate(nt * ny * nx)(_.toDouble)))))
+    try {
+      val file = s"$dir/big.nc"
+      graft.netcdf.NetCDF3.write(file, src)
+      val pattern = FilePattern.fromFileSequence(Vector(file), "time",
+        nitemsPerFile = Some(nt), fileType = FileType.Netcdf3)
+      val store = s"$dir/store.zarr"
+      Pipelines.storeToZarr(
+        Pipelines.openWithFragments(Pipelines.createItems(spark, pattern), FileType.Netcdf3),
+        pattern.combineDimKeys, store, Map("time" -> nt))
+      assert(ZarrGroup(store).readFragment().sameAs(src))
+    } finally {
+      val walk = Files.walk(java.nio.file.Paths.get(dir))
+      try walk.iterator.asScala.toVector.reverse.foreach(Files.delete) finally walk.close()
     }
   }
 }
