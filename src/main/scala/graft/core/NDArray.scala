@@ -283,22 +283,23 @@ final class NDArray private (private var _dtype: DType,
   def astype(to: DType): NDArray =
     if (to == dtype) this
     else {
-      val out = NDArray.alloc(to, size)
+      val n = size
+      val out = NDArray.alloc(to, n)
       var i = 0
       (to, out) match {
-        case (DType.F8, o: Array[Double]) => while (i < size) { o(i) = getDouble(i); i += 1 }
-        case (DType.F4, o: Array[Float]) => while (i < size) { o(i) = getDouble(i).toFloat; i += 1 }
-        case (DType.I8, o: Array[Long]) => while (i < size) { o(i) = getLong(i); i += 1 }
-        case (DType.M8ns, o: Array[Long]) => while (i < size) { o(i) = getLong(i); i += 1 }
+        case (DType.F8, o: Array[Double]) => while (i < n) { o(i) = getDouble(i); i += 1 }
+        case (DType.F4, o: Array[Float]) => while (i < n) { o(i) = getDouble(i).toFloat; i += 1 }
+        case (DType.I8, o: Array[Long]) => while (i < n) { o(i) = getLong(i); i += 1 }
+        case (DType.M8ns, o: Array[Long]) => while (i < n) { o(i) = getLong(i); i += 1 }
         case (DType.I4 | DType.U4, o: Array[Int]) =>
-          while (i < size) { o(i) = getLong(i).toInt; i += 1 }
+          while (i < n) { o(i) = getLong(i).toInt; i += 1 }
         case (DType.U8, o: Array[Long]) =>
-          while (i < size) { o(i) = getLong(i); i += 1 }
+          while (i < n) { o(i) = getLong(i); i += 1 }
         // narrow casts wrap (numpy astype semantics)
         case (DType.I2 | DType.U2, o: Array[Short]) =>
-          while (i < size) { o(i) = getLong(i).toShort; i += 1 }
+          while (i < n) { o(i) = getLong(i).toShort; i += 1 }
         case (DType.I1 | DType.U1, o: Array[Byte]) =>
-          while (i < size) { o(i) = getLong(i).toByte; i += 1 }
+          while (i < n) { o(i) = getLong(i).toByte; i += 1 }
         case _ => throw new IllegalStateException(s"bad cast $dtype -> $to")
       }
       new NDArray(to, shape, out)
@@ -326,7 +327,13 @@ final class NDArray private (private var _dtype: DType,
 }
 
 object NDArray {
-  def sizeOf(shape: Vector[Int]): Int = shape.product
+  /** Element count of `shape`; above 2^31-1, the most one JVM array holds,
+    * it fails by name instead of wrapping. */
+  def sizeOf(shape: Vector[Int]): Int = {
+    val n = shape.foldLeft(1L)((acc, d) => math.min(acc * d, 1L << 31)) // never wraps
+    require(n <= Int.MaxValue, s"shape $shape has more than 2^31-1 elements")
+    n.toInt
+  }
 
   /** `data`, after checking that its length matches `shape`. */
   private def checked(shape: Vector[Int], data: AnyRef): AnyRef = {

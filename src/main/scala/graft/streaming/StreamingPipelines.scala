@@ -72,17 +72,10 @@ object StreamingPipelines {
       val storeExists = java.nio.file.Files.exists(
         java.nio.file.Paths.get(storePath, "zarr.json"))
       val tag = pattern.sha256Hash.map("%02x".format(_)).mkString
-      if (guard && storeExists) {
-        // replay probe BEFORE any work: an applied tag means this exact
-        // batch already landed — skip, don't re-open or re-append
-        val applied = graft.zarr.ZarrGroup(storePath).groupAttrs
-          .get(graft.transforms.Pipelines.AppliedAppendsAttr) match {
-          case Some(graft.core.AttrValue.AList(v)) =>
-            v.collect { case graft.core.AttrValue.AStr(x) => x }
-          case _ => Vector.empty
-        }
-        if (applied.contains(tag)) return
-      }
+      // replay probe BEFORE any work: an applied tag means this exact
+      // batch already landed — skip, don't re-open or re-append
+      if (guard && storeExists && graft.transforms.Pipelines.appliedAppends(
+          graft.zarr.ZarrGroup(storePath)).contains(tag)) return
       val items = graft.transforms.Pipelines.createItems(batch.sparkSession, pattern)
       val frags = graft.transforms.Pipelines.openWithFragments(items, fileType)
       // the tag is ledgered on the CREATE path too: a redelivered batch 0

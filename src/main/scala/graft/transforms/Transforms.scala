@@ -289,68 +289,57 @@ object Pipelines {
     * (driver-side; one-time; no array is built). Coordinate data is NOT
     * written here — fragments write it (coords-once rule), exactly like
     * compute=False in the reference.
+    *
+    * With `appendDim` the store exists and keeps its layout: every schema
+    * variable carrying the dim, coords included, is resized by the batch's
+    * length along it ([[ZarrGroup.resize]], the reference's `mode="a"`), and
+    * nothing else in its metadata changes. The store's chunk grid, shards,
+    * codecs and format win over `targetChunks`, `targetShards`, `encoding`,
+    * `gzipLevel` and `zarrFormat`, which only shape a new store.
     */
-  def prepareZarrTarget(schema0: CubeSchema, path: String,
+  def prepareZarrTarget(schema: CubeSchema, path: String,
                         targetChunks: Map[String, Int] = Map.empty,
                         extraAttrs: Attrs = Attrs.empty,
                         appendDim: Option[String] = None,
                         gzipLevel: Option[Int] = None,
                         targetShards: Map[String, Int] = Map.empty,
                         encoding: Map[String, VarEncoding] = Map.empty,
-                        zarrFormat: Int = 3): ZarrGroup = {
-    require(zarrFormat == 3 || targetShards.isEmpty,
-      "zarr v2 has no sharding_indexed — drop targetShards or write v3")
-    val schema = appendDim match {
-      case Some(ad) => schema0.copy(coords = schema0.coords.filter(_._1 == ad))
-      case None => schema0
-    }
-    // appending opens an EXISTING store, whose on-disk layout decides the
-    // format; only a fresh create needs the explicit hint
-    val g = appendDim match {
-      case Some(_) => ZarrGroup(path)
-      case None => ZarrGroup(path, zarrFormat)
-    }
-    appendDim match {
-      case None =>
-        val chunksFull = CubeSchema.determineTargetChunks(schema, targetChunks)
-        g.initGroup(schema.attrs ++ extraAttrs.map { case (k, v) => s"pangeo-forge:$k" -> v })
-        schema.allVars.foreach { case (name, v) =>
-          val chunkShape = v.dims.map(chunksFull(_))
-          val shard =
-            if (targetShards.isEmpty) None
-            else Some(v.dims.zip(chunkShape).map { case (d, c) =>
-              targetShards.getOrElse(d, c) })
-          val enc = encoding.getOrElse(name, VarEncoding())
-          g.createArray(name, v.shape, chunkShape, v.dtype,
-            v.attrs ++ v.encoding.filter(_._1 != "chunks"),
-            dimensionNames = Some(v.dims),
-            gzipLevel = enc.gzipLevel.orElse(
-              // a var with its own zstd/blosc codec must not ALSO gzip
-              if (enc.zstdLevel.isDefined || enc.blosc.isDefined) None
-              else gzipLevel),
-            shardShape = shard,
-            zstdLevel = enc.zstdLevel, blosc = enc.blosc)
+                        zarrFormat: Int = 3): ZarrGroup = appendDim match {
+    case None =>
+      require(zarrFormat == 3 || targetShards.isEmpty,
+        "zarr v2 has no sharding_indexed — drop targetShards or write v3")
+      val g = ZarrGroup(path, zarrFormat)
+      val chunksFull = CubeSchema.determineTargetChunks(schema, targetChunks)
+      g.initGroup(schema.attrs ++ extraAttrs.map { case (k, v) => s"pangeo-forge:$k" -> v })
+      schema.allVars.foreach { case (name, v) =>
+        val chunkShape = v.dims.map(chunksFull(_))
+        val shard =
+          if (targetShards.isEmpty) None
+          else Some(v.dims.zip(chunkShape).map { case (d, c) =>
+            targetShards.getOrElse(d, c) })
+        val enc = encoding.getOrElse(name, VarEncoding())
+        g.createArray(name, v.shape, chunkShape, v.dtype,
+          v.attrs ++ v.encoding.filter(_._1 != "chunks"),
+          dimensionNames = Some(v.dims),
+          gzipLevel = enc.gzipLevel.orElse(
+            // a var with its own zstd/blosc codec must not ALSO gzip
+            if (enc.zstdLevel.isDefined || enc.blosc.isDefined) None
+            else gzipLevel),
+          shardShape = shard,
+          zstdLevel = enc.zstdLevel, blosc = enc.blosc)
+      }
+      g
+    case Some(ad) =>
+      val g = ZarrGroup(path)
+      val added = schema.dims(ad)
+      schema.allVars.foreach { case (name, v) =>
+        if (v.dims.contains(ad)) {
+          val old = g.arrayMeta(name)
+          g.resize(name, old.shape.zip(old.dimensionNames).map { case (n, d) =>
+            if (d == ad) n + added else n })
         }
-      case Some(ad) =>
-        // extend every array carrying the append dim by the new length,
-        // preserving codecs (gzip/sharding), fill_value, and chunk grid —
-        // rewriting any of those would misdecode all previously written
-        // objects on later reads
-        val added = schema.dims(ad)
-        schema.allVars.foreach { case (name, v) =>
-          if (v.dims.contains(ad)) {
-            val old = g.arrayMeta(name)
-            val newShape = old.shape.zip(old.dimensionNames).map { case (s, d) =>
-              if (d == ad) s + added else s }
-            g.createArray(name, newShape, old.chunks, old.dtype, old.attrs,
-              fillValue = old.fillValue,
-              dimensionNames = Some(old.dimensionNames),
-              gzipLevel = old.gzipLevel,
-              shardShape = old.shardShape)
-          }
-        }
-    }
-    g
+      }
+      g
   }
 
   /** StoreDatasetFragments (writers.py:95-129): write one rechunked fragment
@@ -384,7 +373,25 @@ object Pipelines {
     }
   }
 
-  /** THE composite sink (transforms.py:638-725). Returns the store handle. */
+  /** THE composite sink (transforms.py:638-725). Returns the store handle.
+    *
+    * Fragments are split on the store's own write grain — whole shards when
+    * sharded, so one executor write is one storage object — which the
+    * store's arrays declare ([[ZarrGroup.dimLayout]]). A new store is
+    * created from `targetChunks`/`targetShards` first, so the grain is
+    * theirs. An append (`appendDim`, the reference's `mode="a"`) reads the
+    * existing store's grain and its length along the dim, which is the
+    * batch's offset, before any job; arrays that disagree on a dim fail
+    * there by name. The appended store keeps its layout: `targetChunks`,
+    * `targetShards`, `encoding`, `gzipLevel` and `zarrFormat` are ignored
+    * (see [[prepareZarrTarget]]).
+    *
+    * `appendGuardTag` is honored on both paths: an append checks the tag
+    * against the store's ledger ([[appliedAppends]]) before any job, and
+    * either path records it once the data has landed — so a replayed
+    * store-creating micro-batch (a crash between the sink write and the
+    * checkpoint commit of batch 0) finds its own tag and no-ops instead of
+    * appending batch 0's data after itself. */
   def storeToZarr(items: Dataset[(Index, Fragment)],
                   combineDims: Vector[Dimension],
                   storePath: String,
@@ -400,55 +407,43 @@ object Pipelines {
       : ZarrGroup = {
     require(targetChunks.isEmpty || dynamicChunkingFn.isEmpty,
       "Passing both `target_chunks` and `dynamic_chunking_fn` not allowed.")
-    // appendGuardTag is honored on BOTH paths: append jobs check-then-
-    // ledger it, and a CREATE job (appendDim empty) ledgers it too — so a
-    // replayed store-creating micro-batch (crash between sink write and
-    // checkpoint commit on batch 0) finds its own tag and no-ops instead
-    // of appending batch 0's data after itself (r10 fix; the r9 guard
-    // only tagged appends, leaving the create batch replayable).
-
-    val appendOffset = appendDim match {
-      case Some(ad) =>
-        val g = ZarrGroup(storePath)
-        // Append idempotence guard (BEYOND-reference hardening; the
-        // reference documents append as NOT idempotent and offers no
-        // protection, transforms.py:680-684 — compat default: off).
-        // Callers pass the batch's identity (typically the pattern's
-        // merkle-tail hex); a tag already recorded in the store's attrs
-        // means this exact batch was applied and re-running it would
-        // double-append — fail BY NAME instead of corrupting the cube.
-        appendGuardTag.foreach { tag =>
-          val applied = g.groupAttrs.get(AppliedAppendsAttr) match {
-            case Some(AttrValue.AList(v)) =>
-              v.collect { case AttrValue.AStr(s) => s }
-            case _ => Vector.empty
-          }
-          if (applied.contains(tag))
-            throw new IllegalStateException(
-              s"append batch '$tag' already applied to $storePath " +
-                s"($AppliedAppendsAttr) — refusing the double append; " +
-                "drop appendGuardTag to force the reference's unguarded " +
-                "non-idempotent behavior")
-        }
-        val meta = g.arrayMeta(ad)
-        meta.shape.head
-      case None => 0
+    val existingLayout = appendDim.map { ad =>
+      val g = ZarrGroup(storePath)
+      // Append idempotence guard (BEYOND-reference hardening; the
+      // reference documents append as NOT idempotent and offers no
+      // protection, transforms.py:680-684 — compat default: off).
+      // Callers pass the batch's identity (typically the pattern's
+      // merkle-tail hex); a tag already recorded in the store's attrs
+      // means this exact batch was applied and re-running it would
+      // double-append — fail BY NAME instead of corrupting the cube.
+      appendGuardTag.foreach { tag =>
+        if (appliedAppends(g).contains(tag))
+          throw new IllegalStateException(
+            s"append batch '$tag' already applied to $storePath " +
+              s"($AppliedAppendsAttr) — refusing the double append; " +
+              "drop appendGuardTag to force the reference's unguarded " +
+              "non-idempotent behavior")
+      }
+      val layout = g.dimLayout()
+      require(layout.contains(ad), s"no array in $storePath carries append dim '$ad'")
+      layout
     }
 
     val spark = items.sparkSession
     val schema = labelled(spark, "storeToZarr: schema") {
       determineSchema(items, combineDims)
     }
-    val indexed = indexItems(items, schema, appendOffset)
     val chunks = dynamicChunkingFn match {
       case Some(fn) => fn(CubeSchema.toTemplate(schema))
       case None => targetChunks
     }
-    // fragments must align with the WRITE granularity: whole shards when
-    // sharding (one executor write = one storage object, no write conflicts)
-    val writeGrain = chunks ++ targetShards
     val target = prepareZarrTarget(schema, storePath, chunks, attrs, appendDim,
       gzipLevel, targetShards, encoding, zarrFormat)
+    val layout = existingLayout.getOrElse(target.dimLayout(schema.allVars.keys))
+    val appendOffset = appendDim.fold(0)(ad => layout(ad)._2)
+    val writeGrain = layout.collect {
+      case (d, (grain, _)) if schema.dims.contains(d) => d -> grain }
+    val indexed = indexItems(items, schema, appendOffset)
     // parallel region writes from executors (local FS here; an object store
     // or shared FS in cluster deployments)
     def writeAll(it: Iterator[(Index, Fragment)]): Unit = {
@@ -481,17 +476,20 @@ object Pipelines {
     // sufficient AND keeps the attrs JSON (rewritten every batch) from
     // growing without bound on a long-running stream.
     appendGuardTag.foreach { tag =>
-      val cur = target.groupAttrs
-      val prior = cur.get(AppliedAppendsAttr) match {
-        case Some(AttrValue.AList(v)) => v
-        case _ => Vector.empty[AttrValue]
-      }
-      target.setGroupAttrs(cur +
-        (AppliedAppendsAttr -> AttrValue.AList(
-          (prior :+ AttrValue.AStr(tag)).takeRight(AppliedAppendsKeep))))
+      val ledger = (appliedAppends(target) :+ tag).takeRight(AppliedAppendsKeep)
+      target.setGroupAttrs(target.groupAttrs +
+        (AppliedAppendsAttr -> AttrValue.AList(ledger.map(AttrValue.AStr(_)))))
     }
     target
   }
+
+  /** The append batch tags recorded in `g`'s ledger ([[AppliedAppendsAttr]]),
+    * oldest first; empty when the store has none. */
+  def appliedAppends(g: ZarrGroup): Vector[String] =
+    g.groupAttrs.get(AppliedAppendsAttr) match {
+      case Some(AttrValue.AList(v)) => v.collect { case AttrValue.AStr(s) => s }
+      case _ => Vector.empty
+    }
 
   /** Store-attrs key recording applied append-batch tags (the
     * idempotence guard's ledger). */
@@ -591,11 +589,10 @@ object Openers {
   /** openers.py:229-252: spool the remote file to executor-local tmp before
     * decoding (the GRIB requirement); cache-through via Storage.cacheFile.
     * A remote URL for a byte-range format (netcdf/hdf5/grib seek into the
-    * file) is spooled even without `copyToLocal` when no cache is
-    * configured — the positional decoders need a local file. Opendap URLs
-    * are never copied (the protocol IS remote access). */
+    * file) is spooled into the JVM tmpdir when no cache is configured — the
+    * positional decoders need a local file. Opendap URLs are never copied
+    * (the protocol IS remote access). */
   def open(fileType: FileType.Value, url: String,
-           copyToLocal: Boolean = false,
            cacheDir: Option[String] = None,
            secrets: Map[String, String] = Map.empty,
            maskAndScale: Boolean = true): Fragment = {

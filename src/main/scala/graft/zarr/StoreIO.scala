@@ -1,7 +1,7 @@
 package graft.zarr
 
 import java.nio.ByteBuffer
-import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 import scala.jdk.CollectionConverters._
 
 /** Storage transport for a Zarr store root. Keys are store-relative paths
@@ -107,13 +107,34 @@ final class PosixIO(root: String) extends StoreIO {
     path
   }
 
-  def write(key: String, bytes: Array[Byte]): Unit =
-    Files.write(withParent(p(key)), bytes)
+  /** Writes go to a hidden temp sibling, unique per writer, that one atomic
+    * rename publishes: a reader sees the old object or the new one, never a
+    * torn one, and racing writers of one key never share a file. */
+  private def tempFor(path: Path): Path =
+    path.resolveSibling(s".${path.getFileName}.${java.util.UUID.randomUUID()}.tmp")
+
+  def write(key: String, bytes: Array[Byte]): Unit = {
+    val path = withParent(p(key))
+    val tmp = tempFor(path)
+    try Files.move(Files.write(tmp, bytes), path, StandardCopyOption.ATOMIC_MOVE)
+    catch { case e: Throwable => Files.deleteIfExists(tmp); throw e }
+  }
   def read(key: String): Array[Byte] = Files.readAllBytes(p(key))
   override def openRead(key: String): java.io.InputStream =
     Files.newInputStream(p(key))
-  override def openWrite(key: String): java.io.OutputStream =
-    Files.newOutputStream(withParent(p(key)))
+  override def openWrite(key: String): java.io.OutputStream = {
+    val path = withParent(p(key))
+    val tmp = tempFor(path)
+    new java.io.FilterOutputStream(Files.newOutputStream(tmp)) {
+      private var open = true
+      override def write(b: Array[Byte], off: Int, len: Int): Unit = out.write(b, off, len)
+      override def close(): Unit = if (open) {
+        open = false
+        super.close()
+        Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE)
+      }
+    }
+  }
   private def readAt(ch: java.nio.channels.FileChannel, key: String,
                      pos: Long, len: Int): Array[Byte] = {
     val buf = ByteBuffer.allocate(len)

@@ -930,6 +930,36 @@ final class ZarrGroup(val root: String,
     stripConsolidatedOnDisk()
   }
 
+  /** Resize one array in place (zarr-python's `Array.resize`): rewrite only
+    * `shape` in the array's own document (`zarr.json`, or `.zarray` in v2),
+    * so its grid, codecs, fill value and attributes stay as the chunks
+    * already written need them. The rank stays the same; chunks past a
+    * shrunk edge stay on disk. Strips consolidation, as `createArray` does. */
+  def resize(name: String, shape: Vector[Int]): Unit = {
+    val key = if (format == 2) s"$name/.zarray" else s"$name/zarr.json"
+    val doc = mapper.readTree(io.read(key)).asInstanceOf[ObjectNode]
+    require(jreq(doc, "shape", key).size == shape.length,
+      s"$root/$key: resizing to $shape would change the rank")
+    val sh = doc.putArray("shape"); shape.foreach(sh.add(_))
+    io.write(key, mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(doc))
+    stripConsolidatedOnDisk()
+  }
+
+  /** dim -> (storage-object edge, length), as the arrays `names` carrying
+    * the dim declare them (`ArrayMeta.grain`, `shape`). No region of a dim
+    * whose arrays disagree aligns with all of them, so that fails here,
+    * naming the dim and each array's pair. */
+  def dimLayout(names: Iterable[String] = arrayNames): Map[String, (Int, Int)] =
+    names.toVector.flatMap { n =>
+      val m = arrayMeta(n)
+      m.dimensionNames.indices.map(i => (m.dimensionNames(i), n, (m.grain(i), m.shape(i))))
+    }.groupBy(_._1).map { case (dim, entries) =>
+      val layouts = entries.map(_._3).distinct
+      require(layouts.size == 1, s"$root: arrays disagree on dim '$dim' (grain, length): " +
+        entries.map { case (_, n, l) => s"$n=$l" }.mkString(", "))
+      dim -> layouts.head
+    }
+
   /** `chunks` is the read-granularity (inner) chunk shape; when sharded,
     * `shardShape` is the object/write granularity and a per-dim multiple of
     * `chunks`. */
@@ -1122,7 +1152,6 @@ final class ZarrGroup(val root: String,
       (name +: key).mkString("/")
     }
 
-  /** One chunk payload -> encoded bytes (bytes codec LE, optional gzip). */
   /** Encode one chunk through the FULL declared codec chain (the mirror of
     * decodeChunk): bytes codec with declared endian, then shuffle, then
     * gzip or zlib. Writes into a grib2-codec array are impossible (the
@@ -1182,15 +1211,11 @@ final class ZarrGroup(val root: String,
     }
   }
 
-  private def decodeChunk(raw: Array[Byte], dtype: DType, shape: Vector[Int],
-                          gzipLevel: Option[Int],
-                          bigEndian: Boolean = false,
-                          gribVar: Option[String] = None,
-                          zlibLevel: Option[Int] = None,
-                          shuffleElem: Option[Int] = None,
-                          zstdLevel: Option[Int] = None,
-                          blosc: Option[Blosc.Params] = None,
-                          numFilter: Option[ZarrStore.NumFilter] = None): NDArray = {
+  /** Decode one `meta.chunks`-shaped chunk through `meta`'s codec chain. */
+  private def decodeChunk(raw: Array[Byte], meta: ArrayMeta): NDArray = {
+    import meta.{dtype, gzipLevel, bigEndian, gribVar, zlibLevel, shuffleElem,
+      zstdLevel, blosc, numFilter}
+    val shape = meta.chunks
     gribVar.foreach { v =>
       // grib2 whole-message codec: the chunk object is a complete GRIB2
       // message; extract the requested variable (kerchunk scan_grib model)
@@ -1308,33 +1333,6 @@ final class ZarrGroup(val root: String,
     bos.toByteArray
   }
 
-  private def decodeShard(raw: Array[Byte], meta: ArrayMeta): NDArray = {
-    val ndim = meta.shape.length
-    val chunksPerShard = (0 until ndim).map(d => meta.grain(d) / meta.chunks(d)).toVector
-    val positions = innerPositions(chunksPerShard)
-    val idxLen = positions.length * 16
-    val idxStart = raw.length - idxLen - 4
-    val crc = new java.util.zip.CRC32C()
-    crc.update(raw, idxStart, idxLen)
-    val storedCrc = ByteBuffer.wrap(raw, idxStart + idxLen, 4)
-      .order(ByteOrder.LITTLE_ENDIAN).getInt
-    require(crc.getValue.toInt == storedCrc, s"shard index CRC32C mismatch")
-    val index = ByteBuffer.wrap(raw, idxStart, idxLen).order(ByteOrder.LITTLE_ENDIAN)
-    val out = NDArray.zeros(meta.dtype, meta.grain)
-    positions.foreach { pos =>
-      val offset = index.getLong; val nbytes = index.getLong
-      if (offset != -1L && nbytes != -1L) {
-        val enc = java.util.Arrays.copyOfRange(raw, offset.toInt,
-          offset.toInt + nbytes.toInt)
-        val chunk = decodeChunk(enc, meta.dtype, meta.chunks, meta.gzipLevel,
-          meta.bigEndian, meta.gribVar, meta.zlibLevel, meta.shuffleElem, meta.zstdLevel,
-          meta.blosc, meta.numFilter)
-        out.assign(pos.indices.map(d => pos(d) * meta.chunks(d)).toVector, chunk)
-      }
-    }
-    out
-  }
-
   /** Write one storage object (a chunk, or a whole shard when sharded).
     * `arr` has `meta.grain` shape. */
   private def writeChunk(name: String, chunkIdx: Vector[Int], arr: NDArray,
@@ -1345,17 +1343,11 @@ final class ZarrGroup(val root: String,
     io.write(chunkKey(name, chunkIdx), encoded)
   }
 
-  /** Read one storage object; returns a `meta.grain`-shaped array. */
+  /** Read one chunk object of an unsharded array, if it was written. */
   private def readChunk(name: String, chunkIdx: Vector[Int],
                         meta: ArrayMeta): Option[NDArray] = {
     val key = chunkKey(name, chunkIdx)
-    if (!io.exists(key)) return None
-    val raw = io.read(key)
-    Some(
-      if (meta.shardShape.isDefined) decodeShard(raw, meta)
-      else decodeChunk(raw, meta.dtype, meta.chunks, meta.gzipLevel,
-        meta.bigEndian, meta.gribVar, meta.zlibLevel, meta.shuffleElem, meta.zstdLevel,
-          meta.blosc, meta.numFilter))
+    if (io.exists(key)) Some(decodeChunk(io.read(key), meta)) else None
   }
 
   def chunkExists(name: String, chunkIdx: Vector[Int]): Boolean =
@@ -1409,23 +1401,7 @@ final class ZarrGroup(val root: String,
   /** Read the full array (missing chunks -> fill zeros). */
   def readArray(name: String): NDArray = {
     val meta = arrayMeta(name)
-    val grain = meta.grain
-    val out = NDArray.zeros(meta.dtype, meta.shape)
-    val ndim = meta.shape.length
-    if (ndim == 0) return out
-    val nchunksPerDim = meta.shape.indices.map(d =>
-      (meta.shape(d) + grain(d) - 1) / grain(d)).toVector
-    def rec(d: Int, idx: Vector[Int]): Unit =
-      if (d == ndim) {
-        readChunk(name, idx, meta).foreach { chunk =>
-          val starts = idx.indices.map(k => idx(k) * grain(k)).toVector
-          val valid = idx.indices.map(k =>
-            Slc(0, math.min(grain(k), meta.shape(k) - starts(k)))).toVector
-          out.assign(starts, chunk.slice(valid))
-        }
-      } else (0 until nchunksPerDim(d)).foreach(i => rec(d + 1, idx :+ i))
-    rec(0, Vector.empty)
-    out
+    readRegion(name, meta, Vector.fill(meta.shape.length)(0), meta.shape)
   }
 
   /** Read only the wanted inner chunks of one shard object, seeking via the
@@ -1458,9 +1434,7 @@ final class ZarrGroup(val root: String,
     val payloads = io.readRanges(key,
       present.map { case (_, off, len) => (off, len) })
     present.zip(payloads).map { case ((pos, _, _), raw) =>
-      pos -> decodeChunk(raw, meta.dtype, meta.chunks, meta.gzipLevel,
-        meta.bigEndian, meta.gribVar, meta.zlibLevel, meta.shuffleElem, meta.zstdLevel,
-          meta.blosc, meta.numFilter)
+      pos -> decodeChunk(raw, meta)
     }.toMap
   }
 
@@ -1469,14 +1443,16 @@ final class ZarrGroup(val root: String,
     * shard only the intersecting inner chunks are read (index-guided seeks)
     * — at object-store scale each task range-GETs its own slab's bytes and
     * nothing else. */
-  def readRegion(name: String, starts: Vector[Int], shape: Vector[Int]): NDArray = {
-    val meta = arrayMeta(name)
+  def readRegion(name: String, starts: Vector[Int], shape: Vector[Int]): NDArray =
+    readRegion(name, arrayMeta(name), starts, shape)
+
+  private def readRegion(name: String, meta: ArrayMeta, starts: Vector[Int],
+                         shape: Vector[Int]): NDArray = {
     val grain = meta.grain
     val ndim = meta.shape.length
     require(starts.length == ndim && shape.length == ndim,
       s"region rank != array rank $ndim")
     val out = NDArray.zeros(meta.dtype, shape)
-    if (ndim == 0) return out
     // copy the part of `block` (anchored at blockLo, global coords) that
     // intersects the region into `out`
     def blit(block: NDArray, blockLo: Vector[Int], blockShape: Vector[Int]): Unit = {

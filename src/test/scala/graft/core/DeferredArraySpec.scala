@@ -156,4 +156,14 @@ class DeferredArraySpec extends AnyFunSuite {
       NDArray(DType.F8, Vector(2, 3), new Array[Double](5)))
     assert(eager.getMessage == e.getMessage)
   }
+
+  test("a shape above 2^31-1 elements fails by name instead of wrapping") {
+    val e = intercept[IllegalArgumentException](NDArray.zeros(DType.F8, Vector(50000, 50000)))
+    assert(e.getMessage.contains("Vector(50000, 50000)") && e.getMessage.contains("2^31-1"),
+      e.getMessage)
+    // metadata of such a shape is fine until something allocates it
+    val big = NDArray.deferred(DType.F8, Vector(50000, 50000))(new Array[Double](0))
+    assert(big.recordBytes == 50000L * 50000 * 8)
+    assert(NDArray.sizeOf(Vector(3, 0, Int.MaxValue, Int.MaxValue)) == 0)
+  }
 }

@@ -745,4 +745,152 @@ class EndToEndSpec extends AnyFunSuite {
       try walk.iterator.asScala.toVector.reverse.foreach(Files.delete) finally walk.close()
     }
   }
+
+  /** `frag` as 2-day Zarr files under `dir`, opened: the items and combine
+    * dims a `storeToZarr` call takes. */
+  private def opened(frag: Fragment, dir: String)
+      : (org.apache.spark.sql.Dataset[(Index, Fragment)], Vector[Dimension]) = {
+    val files = writeFragmentFiles(GoldenCube.splitByTime(frag, 2), dir)
+    val pattern = FilePattern.fromFileSequence(files, "time",
+      nitemsPerFile = Some(2), fileType = FileType.Zarr)
+    (Pipelines.openWithFragments(Pipelines.createItems(spark, pattern), FileType.Zarr),
+      pattern.combineDimKeys)
+  }
+
+  test("append resizes zstd v3, blosc v3 and zstd v2 stores in place") {
+    // the append passes none of the store's options: each array document
+    // must come out unchanged but for its shape, so old chunks still decode
+    val cube20 = GoldenCube.makeDs(20)
+    val names = cube20.allVars.keys.toVector
+    val dir = tmp()
+    val (first, dims) = opened(cube20.isel(Map("time" -> Slc(0, 10))), s"$dir/first")
+    val (second, _) = opened(cube20.isel(Map("time" -> Slc(10, 20))), s"$dir/second")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    Seq(("zstd3", Pipelines.VarEncoding(zstdLevel = Some(3)), 3),
+        ("blosc3", Pipelines.VarEncoding(blosc = Some(graft.zarr.Blosc.Params(cname = "zstd"))), 3),
+        ("zstd2", Pipelines.VarEncoding(zstdLevel = Some(3)), 2)).foreach {
+      case (label, enc, format) =>
+        val store = s"$dir/$label.zarr"
+        val docName = if (format == 2) ".zarray" else "zarr.json"
+        def docs() = names.map(n => n -> mapper.readTree(
+          java.nio.file.Paths.get(store, n, docName).toFile)
+          .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]).toMap
+        Pipelines.storeToZarr(first, dims, store, Map("time" -> 2),
+          encoding = names.map(_ -> enc).toMap, zarrFormat = format)
+        val before = docs()
+        Pipelines.storeToZarr(second, dims, store, Map("time" -> 2),
+          appendDim = Some("time"))
+        val after = docs()
+        names.foreach { n =>
+          val longer = cube20.allVars(n).shape
+          assert(after(n).get("shape").elements().asScala.map(_.asInt).toVector == longer,
+            s"$label $n")
+          after(n).remove("shape"); before(n).remove("shape")
+          assert(after(n) == before(n), s"$label $n: ${after(n)} != ${before(n)}")
+        }
+        assert(ZarrGroup(store).readFragment().sameAs(cube20), label)
+    }
+  }
+
+  test("append extends a non-dimension coord that carries the append dim") {
+    // in-memory items keep `timestep` a coord (a Zarr file would reopen it
+    // as a data var, since its name is not one of its dims)
+    val cube20 = GoldenCube.makeDs(20, nonDimCoords = true)
+    val time = Dimension("time", CombineOp.Concat)
+    def items(frag: Fragment) = spark.createDataset(
+      GoldenCube.splitByTime(frag, 2).zipWithIndex.map { case (f, i) =>
+        (Index.of(time -> Pos(i)), f) })(Encoders.kryo[(Index, Fragment)])
+    val first = items(cube20.isel(Map("time" -> Slc(0, 10))))
+    val second = items(cube20.isel(Map("time" -> Slc(10, 20))))
+    assert(first.first()._2.coords.contains("timestep"))
+    val dims = Vector(time)
+    val store = s"${tmp()}/store.zarr"
+    Pipelines.storeToZarr(first, dims, store, Map("time" -> 2))
+    Pipelines.storeToZarr(second, dims, store, Map("time" -> 2), appendDim = Some("time"))
+    // the reader files `timestep` and `baz` under data vars (their names
+    // are not dims), so compare variable by variable
+    val result = ZarrGroup(store).readFragment()
+    assert(result.allVars.keySet == cube20.allVars.keySet)
+    cube20.allVars.foreach { case (n, v) =>
+      assert(result.allVars(n).data.sameElements(v.data), n)
+    }
+  }
+
+  test("append splits on the store's shards, not the caller's chunks") {
+    // 5-step chunks in 10-step shards; the append passes only the chunks
+    val cube20 = GoldenCube.makeDs(20)
+    val dir = tmp()
+    val store = s"$dir/store.zarr"
+    val (first, dims) = opened(cube20.isel(Map("time" -> Slc(0, 10))), s"$dir/first")
+    val (second, _) = opened(cube20.isel(Map("time" -> Slc(10, 20))), s"$dir/second")
+    Pipelines.storeToZarr(first, dims, store, Map("time" -> 5),
+      targetShards = Map("time" -> 10))
+    Pipelines.storeToZarr(second, dims, store, Map("time" -> 5), appendDim = Some("time"))
+    assert(ZarrGroup(store).arrayMeta("foo").shardShape.map(_.head).contains(10))
+    assert(ZarrGroup(store).readFragment().sameAs(cube20))
+  }
+
+  test("append to a store whose arrays chunk the dim differently fails by name before any job") {
+    val cube20 = GoldenCube.makeDs(20)
+    val first = cube20.isel(Map("time" -> Slc(0, 10)))
+    val dir = tmp()
+    val store = s"$dir/store.zarr"
+    val g = ZarrGroup(store)
+    g.initGroup(first.attrs)
+    first.allVars.foreach { case (name, v) =>
+      val chunks = v.dims.zip(v.shape).map { case (d, n) =>
+        if (d == "time") (if (name == "bar") 10 else 5) else n }
+      g.createArray(name, v.shape, chunks, v.dtype, v.attrs, dimensionNames = Some(v.dims))
+      g.writeRegion(name, Vector.fill(v.data.ndim)(0), v.data)
+    }
+    val (second, dims) = opened(cube20.isel(Map("time" -> Slc(10, 20))), s"$dir/second")
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(groups.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("disagreeing-append", "append")
+      val e = try intercept[IllegalArgumentException] {
+        Pipelines.storeToZarr(second, dims, store, Map("time" -> 5), appendDim = Some("time"))
+      } finally sc.clearJobGroup()
+      Seq("'time'", "foo=(5,10)", "bar=(10,10)").foreach(s =>
+        assert(e.getMessage.contains(s), e.getMessage))
+      // job start events arrive in order: once a later marker job is seen,
+      // any job the append started would have been seen too
+      sc.setJobGroup("marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      import org.scalatest.concurrent.Eventually._
+      import org.scalatest.time.SpanSugar._
+      eventually(timeout(10.seconds))(assert(groups.contains("marker")))
+      assert(!groups.contains("disagreeing-append"), groups)
+    } finally sc.removeSparkListener(listener)
+    assert(ZarrGroup(store).arrayMeta("foo").shape.head == 10)
+  }
+
+  test("a NetCDF3 scalar keeps its value through storeToZarr and the reference scan") {
+    val dir = tmp()
+    val crs = NDArray(DType.I4, Vector(), Array(4326))
+    val src = Fragment(
+      dims = Map("time" -> 4),
+      coords = Map("time" -> Variable(Vector("time"),
+        NDArray(DType.I4, Vector(4), Array(0, 1, 2, 3)))),
+      dataVars = Map(
+        "foo" -> Variable(Vector("time"), NDArray(DType.F8, Vector(4), Array(1.0, 2, 3, 4))),
+        "crs" -> Variable(Vector(), crs)))
+    val file = s"$dir/crs.nc"
+    graft.netcdf.NetCDF3.write(file, src)
+    val scanned = graft.kerchunk.RefSet.scanNetCDF3(file).asZarrGroup().readFragment()
+    assert(scanned.dataVars("crs").data.sameElements(crs))
+    val pattern = FilePattern.fromFileSequence(Vector(file), "time",
+      nitemsPerFile = Some(4), fileType = FileType.Netcdf3)
+    val store = s"$dir/store.zarr"
+    Pipelines.storeToZarr(
+      Pipelines.openWithFragments(Pipelines.createItems(spark, pattern), FileType.Netcdf3),
+      pattern.combineDimKeys, store)
+    assert(ZarrGroup(store).readFragment().dataVars("crs").data.sameElements(crs))
+  }
 }

@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
 import graft.core.GoldenCube
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** Writer tests at the chunk-key level — port of tests/test_writers.py:31-160
   * (which chunk files exist after each write, alignment errors, round-trip). */
@@ -241,5 +242,58 @@ class ZarrStoreSpec extends AnyFunSuite {
     assert(g.readArray("time").sameElements(data))
     assert(g.chunkExists("time", Vector(0)))
     assert(!g.chunkExists("time", Vector(4)))
+  }
+
+  test("a zero-dimensional array reads back its one chunk, v3 and v2") {
+    Seq(3, 2).foreach { format =>
+      val root = tmp()
+      val g = ZarrGroup(root, format)
+      g.initGroup(Attrs.empty)
+      g.createArray("crs", Vector(), Vector(), DType.I4, Attrs.empty,
+        dimensionNames = Some(Vector()))
+      val crs = NDArray(DType.I4, Vector(), Array(4326))
+      g.writeRegion("crs", Vector(), crs)
+      assert(g.readArray("crs").sameElements(crs), s"v$format readArray")
+      assert(g.readRegion("crs", Vector(), Vector()).sameElements(crs), s"v$format readRegion")
+      assert(ZarrGroup(root).readFragment().dataVars("crs").data.sameElements(crs),
+        s"v$format readFragment")
+    }
+  }
+
+  test("resize rewrites only the shape and keeps the codec chain") {
+    val root = tmp()
+    val g = ZarrGroup(root)
+    g.initGroup(Attrs.empty)
+    g.createArray("foo", Vector(4, 6), Vector(2, 3), DType.F8, Attrs.empty,
+      dimensionNames = Some(Vector("t", "x")), zstdLevel = Some(3))
+    val data = NDArray(DType.F8, Vector(4, 6), Array.tabulate(24)(_.toDouble))
+    g.writeRegion("foo", Vector(0, 0), data)
+    g.consolidateMetadata()
+    val before = g.arrayMeta("foo")
+    g.resize("foo", Vector(8, 6))
+    assert(g.arrayMeta("foo") == before.copy(shape = Vector(8, 6)))
+    assert(g.readRegion("foo", Vector(0, 0), Vector(4, 6)).sameElements(data))
+    // the consolidated copy would now be stale, so it is gone
+    val rootDoc = new String(Files.readAllBytes(java.nio.file.Paths.get(root, "zarr.json")))
+    assert(!rootDoc.contains("consolidated_metadata"))
+    intercept[IllegalArgumentException](g.resize("foo", Vector(8)))
+  }
+
+  test("PosixIO publishes an object only when its write completes") {
+    val root = tmp()
+    val io = new PosixIO(root)
+    io.write("a/k", Array[Byte](1, 2, 3))
+    val out = io.openWrite("a/k")
+    out.write(Array[Byte](9, 9, 9, 9))
+    out.flush()
+    // readers keep seeing the old object while the write is open
+    assert(io.read("a/k").toSeq == Seq[Byte](1, 2, 3))
+    out.close()
+    assert(io.read("a/k").toSeq == Seq[Byte](9, 9, 9, 9))
+    io.write("a/k", Array[Byte](5))
+    assert(io.read("a/k").toSeq == Seq[Byte](5))
+    val listing = Files.list(java.nio.file.Paths.get(root, "a"))
+    try assert(listing.iterator().asScala.map(_.getFileName.toString).toVector == Vector("k"))
+    finally listing.close()
   }
 }
