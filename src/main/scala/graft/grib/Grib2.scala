@@ -330,6 +330,16 @@ object Grib2 {
         case 7 =>
           require(grid != null && product != null && packing != null,
             s"message at $msgOff has data before grid/product/packing sections")
+          // sections 5-7 must be able to carry the grid's values before
+          // latLonArrays or decode allocate nPoints-sized arrays
+          require(packing.nValues.toLong <= grid.nPoints &&
+              (bitmapInd != 0 || bitmapLen * 8 >= grid.nPoints) &&
+              (packing.template != 0 ||
+                packing.nValues.toLong * packing.nbits <= (secLen - 5) * 8),
+            s"corrupt GRIB2 message at $msgOff: ${grid.nPoints} grid points, " +
+              s"${packing.nValues} packed values of ${packing.nbits} bits, " +
+              s"${secLen - 5} data bytes" +
+              (if (bitmapInd == 0) s", $bitmapLen bitmap bytes" else ""))
           out += Message(msgOff, totalLen, discipline, centre, subCentre,
             refTime, grid, product, packing, bitmapInd, bitmapOff, bitmapLen,
             dataOffset = p + 5, dataLength = secLen - 5)
@@ -364,6 +374,11 @@ object Grib2 {
     def dims(nx: Long, ny: Long): (Int, Int) = {
       require(nx >= 1 && ny >= 1 && nx * ny <= (1L << 28),
         s"corrupt GRIB2: grid dimensions ${nx}x$ny out of bounds")
+      // the grid holds exactly the points section 3 declares, so one
+      // corrupt Ni/Nj byte fails here instead of sizing an allocation
+      require(nx * ny == (nDataPoints & 0xFFFFFFFFL),
+        s"corrupt GRIB2: grid ${nx}x$ny has ${nx * ny} points but section 3 " +
+          s"declares ${nDataPoints & 0xFFFFFFFFL}")
       (nx.toInt, ny.toInt)
     }
     // octet 15 (idx 14): shape of earth — 0/6 fixed spheres, 1 scaled custom

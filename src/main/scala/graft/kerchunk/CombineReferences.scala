@@ -256,12 +256,9 @@ object CombineReferences {
   private def gridsOf(mapper: com.fasterxml.jackson.databind.ObjectMapper,
                       docs: Seq[(String, Array[Byte])]): Map[String, Vector[Long]] =
     docs.collect { case (k, bytes) if k.endsWith("/.zarray") =>
-      val za = mapper.readTree(bytes)
-      import scala.jdk.CollectionConverters._
-      val shape = za.get("shape").elements().asScala.map(_.asLong()).toVector
-      val chunks = za.get("chunks").elements().asScala.map(_.asLong()).toVector
+      val (m, _) = graft.zarr.ZarrStore.parseV2(mapper.readTree(bytes), None, k)
       k.stripSuffix("/.zarray") ->
-        shape.zip(chunks).map { case (s, c) => (s + c - 1) / c }
+        m.shape.zip(m.chunks).map { case (s, c) => (s + c - 1L) / c }
     }.toMap
 
   /** Write the ACTUAL fsspec `LazyReferenceMapper` parquet artifact

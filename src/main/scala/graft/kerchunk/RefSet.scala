@@ -2,6 +2,8 @@ package graft.kerchunk
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
+import graft.zarr.ZarrStore
+import graft.zarr.ZarrStore.{ArrayMeta, Compressor}
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import scala.jdk.CollectionConverters._
 
@@ -85,6 +87,9 @@ final case class RefSet(refs: Map[String, Ref]) {
 object RefSet {
   private val mapper = new ObjectMapper()
 
+  /** An inline array document: `meta` rendered as v3 `zarr.json`. */
+  private def metaRef(meta: ArrayMeta): Ref = Ref.inline(ZarrStore.renderV3(meta))
+
   /** OpenWithKerchunk analog: scan one Zarr-v3 fragment group into
     * references. Metadata documents are inlined; chunk blobs at or below
     * `inlineThreshold` bytes are inlined (transforms.py:195 default 300),
@@ -126,7 +131,7 @@ object RefSet {
     import graft.netcdf.NetCDF3
     val hdr = NetCDF3.readHeader(path)
     var out = Map.empty[String, Ref]
-    out += "zarr.json" -> Ref.inline(graft.zarr.ZarrStore.groupMetaDoc(hdr.gatts))
+    out += "zarr.json" -> Ref.inline(ZarrStore.groupMetaDoc(hdr.gatts))
     val recsize = hdr.recsize
     // one channel for every inline slab of the scan (not one per record)
     NetCDF3.withRangeReader(path) { rangeRead =>
@@ -135,10 +140,8 @@ object RefSet {
       val isRec = v.isRecord(hdr.dims)
       val chunks = if (isRec) 1 +: shape.drop(1) else shape
       val dtype = NetCDF3.widenedDType(v.ncType)
-      out += s"${v.name}/zarr.json" -> Ref.inline(
-        graft.zarr.ZarrStore.arrayMetaDoc(shape, chunks, dtype, v.attrs,
-          dimensionNames = Some(v.dimids.map(hdr.dims(_).name)),
-          bigEndian = true))
+      out += s"${v.name}/zarr.json" -> metaRef(ArrayMeta(shape, chunks, dtype,
+        v.attrs, Some(v.dimids.map(hdr.dims(_).name)), bigEndian = true))
       val slab = v.slabBytes(hdr.dims)
       // inline refs read ONLY their byte range (positioned read) — scanning
       // a multi-GB file stays header-plus-small-slabs, never a full load
@@ -177,8 +180,6 @@ object RefSet {
     * (HDF5.read) handles everything the scanner rejects. */
   def scanHdf5(path: String, inlineThreshold: Int = 300): RefSet = {
     import graft.hdf5.HDF5
-    import graft.core.{AttrValue, DType}
-    import graft.zarr.ZarrStore
     val r = new HDF5.Reader(path)
     try {
       val (rootAttrs, metas) = HDF5.datasets(r)
@@ -231,30 +232,24 @@ object RefSet {
         // enum datatypes surface their name<->value map exactly as the
         // eager reader does, so both entry points agree on metadata
         val varAttrs = m.cleanAttrs ++ HDF5.enumNamesAttr(t)
+        val whole = ArrayMeta(o.dims, if (o.dims.isEmpty) Vector(1) else o.dims,
+          dt, varAttrs, Some(m.dimNames), bigEndian = bigEndian)
         o.layout.get match {
           case HDF5.Compact(data) =>
-            out += s"${m.name}/zarr.json" -> Ref.inline(ZarrStore.arrayMetaDoc(
-              o.dims, if (o.dims.isEmpty) Vector(1) else o.dims, dt,
-              varAttrs, dimensionNames = Some(m.dimNames),
-              bigEndian = bigEndian))
+            out += s"${m.name}/zarr.json" -> metaRef(whole)
             val key = if (o.dims.isEmpty) s"${m.name}/c"
               else s"${m.name}/c/" + o.dims.map(_ => "0").mkString("/")
             out += key -> Ref.inline(data)
           case HDF5.Contiguous(addr, size) =>
-            out += s"${m.name}/zarr.json" -> Ref.inline(ZarrStore.arrayMetaDoc(
-              o.dims, if (o.dims.isEmpty) Vector(1) else o.dims, dt,
-              varAttrs, dimensionNames = Some(m.dimNames),
-              bigEndian = bigEndian))
+            out += s"${m.name}/zarr.json" -> metaRef(whole)
             val key = if (o.dims.isEmpty) s"${m.name}/c"
               else s"${m.name}/c/" + o.dims.map(_ => "0").mkString("/")
             if (addr != HDF5.Undefined)
               out += key -> inlineOrPointer(addr, size)
           case ck @ HDF5.Chunked(_, chunkDims, _, _, _, _, _, _) =>
-            out += s"${m.name}/zarr.json" -> Ref.inline(ZarrStore.arrayMetaDoc(
-              o.dims, chunkDims, dt, varAttrs,
-              dimensionNames = Some(m.dimNames), bigEndian = bigEndian,
-              zlibLevel = zlib, shuffleElem = shuffle,
-              zstdLevel = zstd, blosc = bloscP))
+            out += s"${m.name}/zarr.json" -> metaRef(whole.copy(chunks = chunkDims,
+              compressor = Compressor.of(zlib = zlib, zstd = zstd, blosc = bloscP),
+              shuffleElem = shuffle))
             r.chunkRefs(ck, o.dims).foreach { cr =>
               // the array-level codec list applies to EVERY chunk; a chunk
               // whose optional filter was skipped at write time (nonzero
@@ -314,46 +309,43 @@ object RefSet {
                         msgs: Vector[graft.grib.Grib2.Message]): Vector[RefSet] = {
     import graft.grib.Grib2
     import graft.core.{AttrValue, DType}
-    import graft.zarr.ZarrStore
     msgs.map { m =>
       val g = m.grid
       var out = Map.empty[String, Ref]
       out += "zarr.json" -> Ref.inline(ZarrStore.groupMetaDoc(Grib2.groupAttrs(m)))
       val msgRef = Ref.pointer(path, m.offset, m.length)
-      val nan = AttrValue.AStr("NaN")
+      val nan = AttrValue.ANum(Double.NaN)
       val short = m.shortName
       // data variable: (time, y, x) so reference concat along time works
-      out += s"$short/zarr.json" -> Ref.inline(ZarrStore.arrayMetaDoc(
+      out += s"$short/zarr.json" -> metaRef(ArrayMeta(
         Vector(1, g.ny, g.nx), Vector(1, g.ny, g.nx), DType.F8,
-        Grib2.varAttrs(m), fillValue = nan,
-        dimensionNames = Some(Vector("time", "y", "x")),
+        Grib2.varAttrs(m), Some(Vector("time", "y", "x")), fillValue = nan,
         gribVar = Some("data")))
       out += s"$short/c/0/0/0" -> msgRef
       // geographic coordinates: same message ref, extraction by codec var
       Seq("latitude" -> "degrees_north", "longitude" -> "degrees_east")
         .foreach { case (nm, units) =>
-          out += s"$nm/zarr.json" -> Ref.inline(ZarrStore.arrayMetaDoc(
+          out += s"$nm/zarr.json" -> metaRef(ArrayMeta(
             Vector(g.ny, g.nx), Vector(g.ny, g.nx), DType.F8,
-            Map("units" -> AttrValue(units)), fillValue = nan,
-            dimensionNames = Some(Vector("y", "x")), gribVar = Some(nm)))
+            Map("units" -> AttrValue(units)), Some(Vector("y", "x")),
+            fillValue = nan, gribVar = Some(nm)))
           out += s"$nm/c/0/0" -> msgRef
         }
       // valid-time coordinate: 1-element int64, CF epoch-seconds encoding
-      out += "time/zarr.json" -> Ref.inline(ZarrStore.arrayMetaDoc(
+      out += "time/zarr.json" -> metaRef(ArrayMeta(
         Vector(1), Vector(1), DType.I8,
         Map("units" -> AttrValue("seconds since 1970-01-01T00:00:00"),
           "calendar" -> AttrValue("proleptic_gregorian")),
-        dimensionNames = Some(Vector("time"))))
+        Some(Vector("time"))))
       val tb = java.nio.ByteBuffer.allocate(8)
         .order(java.nio.ByteOrder.LITTLE_ENDIAN)
       tb.putLong(Grib2.validTimeEpochSec(m))
       out += "time/c/0" -> Ref.inline(tb.array())
       // isobaric level coordinate (cfgrib's isobaricInhPa), when present
       if (m.product.surfaceType == 100 && !m.product.surfaceValue.isNaN) {
-        out += "isobaricInhPa/zarr.json" -> Ref.inline(ZarrStore.arrayMetaDoc(
+        out += "isobaricInhPa/zarr.json" -> metaRef(ArrayMeta(
           Vector(1), Vector(1), DType.F8,
-          Map("units" -> AttrValue("hPa")),
-          dimensionNames = Some(Vector("isobaricInhPa"))))
+          Map("units" -> AttrValue("hPa")), Some(Vector("isobaricInhPa"))))
         val lb = java.nio.ByteBuffer.allocate(8)
           .order(java.nio.ByteOrder.LITTLE_ENDIAN)
         lb.putDouble(m.product.surfaceValue / 100.0)
@@ -382,7 +374,6 @@ object RefSet {
   def scanTiff(path: String, inlineThreshold: Int = 300): RefSet = {
     import graft.core.{AttrValue, DType}
     import graft.tiff.Tiff
-    import graft.zarr.ZarrStore
     val ch = Files.newByteChannel(Paths.get(path), StandardOpenOption.READ)
     val layout =
       try {
@@ -427,10 +418,10 @@ object RefSet {
       if (layout.epsg > 0) Map("crs" -> AttrValue(s"EPSG:${layout.epsg}"))
       else Map.empty
     out += "zarr.json" -> Ref.inline(ZarrStore.groupMetaDoc(gattrs))
-    out += "band_data/zarr.json" -> Ref.inline(ZarrStore.arrayMetaDoc(
+    out += "band_data/zarr.json" -> metaRef(ArrayMeta(
       Vector(h, w), Vector(layout.segH, layout.segW), dtype,
-      Map.empty, dimensionNames = Some(Vector("y", "x")),
-      bigEndian = !layout.littleEndian, zlibLevel = zlib))
+      Map.empty, Some(Vector("y", "x")), zlib.map(Compressor.Zlib),
+      bigEndian = !layout.littleEndian))
     val across = (w + layout.segW - 1) / layout.segW
     layout.segOffsets.indices.foreach { s =>
       val key =
@@ -443,9 +434,8 @@ object RefSet {
     // pixel-center coordinates, generated inline (kerchunk's
     // generate_coords): identical arithmetic to Tiff.readFragment
     def coordRef(name: String, n: Int, at: Int => Double): Unit = {
-      out += s"$name/zarr.json" -> Ref.inline(ZarrStore.arrayMetaDoc(
-        Vector(n), Vector(n), DType.F8, Map.empty,
-        dimensionNames = Some(Vector(name))))
+      out += s"$name/zarr.json" -> metaRef(ArrayMeta(
+        Vector(n), Vector(n), DType.F8, Map.empty, Some(Vector(name))))
       val bb = java.nio.ByteBuffer.allocate(8 * n)
         .order(java.nio.ByteOrder.LITTLE_ENDIAN)
       (0 until n).foreach(i => bb.putDouble(at(i)))
@@ -487,43 +477,30 @@ object RefSet {
     varNames(first).foreach { v =>
       val metaKey = s"$v/zarr.json"
       val meta0 = parseMeta(first, metaKey)
-      val dims0 = meta0.get("dimension_names")
-      val dimNames: Vector[String] =
-        if (dims0 == null) Vector.empty
-        else dims0.elements().asScala.map(_.asText()).toVector
-      val axis = dimNames.indexOf(concatDim)
+      val m0 = ZarrStore.parseV3(meta0, metaKey)
+      val axis = m0.dimNames.fold(-1)(_.indexOf(concatDim))
 
       if (axis < 0) {
         // identical-dims variable: validate byte-identical metadata, keep first
-        val m0 = meta0.toString
+        val doc0 = meta0.toString
         ordered.iterator.drop(1).foreach { rs =>
-          require(parseMeta(rs, metaKey).toString == m0,
+          require(parseMeta(rs, metaKey).toString == doc0,
             s"identical_dims variable $v differs across inputs")
         }
         first.refs.foreach { case (k, r) =>
           if (k == metaKey || k.startsWith(s"$v/c")) merged += k -> r }
       } else {
-        // concat variable: shapes sum along axis; other dims + chunks equal
-        def ints(n: com.fasterxml.jackson.databind.JsonNode): Vector[Int] =
-          n.elements().asScala.map(_.asInt()).toVector
-        def shapeAndChunks(m: ObjectNode): (Vector[Int], Vector[Int]) =
-          (ints(m.get("shape")),
-            ints(m.get("chunk_grid").get("configuration").get("chunk_shape")))
-        val (shape0, chunks0) = shapeAndChunks(meta0)
-        val axisLens = shape0(axis) +: ordered.iterator.drop(1).map { rs =>
-          val (sh, ch) = shapeAndChunks(parseMeta(rs, metaKey))
-          require(ch == chunks0, s"chunk shapes for $v differ across inputs")
-          sh.indices.foreach { i =>
-            require(i == axis || sh(i) == shape0(i),
+        // concat variable: shapes sum along axis; other dims + grid equal
+        val axisLens = m0.shape(axis) +: ordered.iterator.drop(1).map { rs =>
+          val m = ZarrStore.parseV3(parseMeta(rs, metaKey), metaKey)
+          require(m.grain == m0.grain, s"chunk shapes for $v differ across inputs")
+          m.shape.indices.foreach { i =>
+            require(i == axis || m.shape(i) == m0.shape(i),
               s"non-concat dim sizes for $v differ across inputs") }
-          sh(axis)
+          m.shape(axis)
         }.toVector
-        val newMeta = meta0.deepCopy[ObjectNode]()
-        val shNode = mapper.createArrayNode()
-        shape0.updated(axis, axisLens.sum).foreach(shNode.add)
-        newMeta.set[ObjectNode]("shape", shNode)
-        merged += metaKey -> Ref.inline(
-          mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(newMeta))
+        merged += metaKey -> metaRef(
+          m0.copy(shape = m0.shape.updated(axis, axisLens.sum)))
 
         // chunk keys: offset the concat-axis index by cumulative chunk count
         var axisOffset = 0
@@ -536,7 +513,7 @@ object RefSet {
               merged += (s"$v/c/" + newIdx.mkString("/")) -> r
             }
           }
-          axisOffset += math.ceil(axisLens(i).toDouble / chunks0(axis)).toInt
+          axisOffset += math.ceil(axisLens(i).toDouble / m0.grain(axis)).toInt
         }
       }
     }
@@ -649,9 +626,6 @@ object RefSet {
     val out = Seq.newBuilder[(String, Ref)]
     def putInline(key: String, bytes: Array[Byte]): Unit =
       out += key -> Ref.inline(bytes)
-    def v2Dtype(name: String, big: Boolean): String =
-      graft.zarr.ZarrStore.dtypeNameV2(
-        graft.zarr.ZarrStore.dtypeFromName(name), big)
     rs.refs.toSeq.sortBy(_._1).foreach { case (key, ref) =>
       if (key == "zarr.json") {
         val meta = mapper.readTree(ref.resolve())
@@ -660,102 +634,10 @@ object RefSet {
         putInline(".zattrs", mapper.writeValueAsBytes(meta.get("attributes")))
       } else if (key.endsWith("/zarr.json")) {
         val v = key.stripSuffix("/zarr.json")
-        val meta = mapper.readTree(ref.resolve()).asInstanceOf[ObjectNode]
-        val za = mapper.createObjectNode()
-        za.put("zarr_format", 2)
-        za.set[ObjectNode]("shape", meta.get("shape"))
-        za.set[ObjectNode]("chunks",
-          meta.get("chunk_grid").get("configuration").get("chunk_shape"))
-        var big = false; var zlib: Option[Int] = None
-        var gzip: Option[Int] = None; var shuffle: Option[Int] = None
-        var grib: Option[String] = None
-        var zstd: Option[Int] = None
-        var blosc: Option[graft.zarr.Blosc.Params] = None
-        var numFilter: Option[graft.zarr.ZarrStore.NumFilter] = None
-        meta.get("codecs").elements().asScala.foreach { c =>
-          c.get("name").asText() match {
-            case "bytes" =>
-              big = Option(c.get("configuration"))
-                .exists(cf => Option(cf.get("endian")).exists(_.asText() == "big"))
-            case "zlib" => zlib = Some(c.get("configuration").get("level").asInt())
-            case "gzip" => gzip = Some(c.get("configuration").get("level").asInt())
-            case "zstd" => zstd = Some(c.get("configuration").get("level").asInt())
-            case "shuffle" =>
-              shuffle = Some(c.get("configuration").get("elementsize").asInt())
-            case "grib2" =>
-              // kerchunk's numcodecs GRIB codec: whole-message filter
-              grib = Some(c.get("configuration").get("var").asText())
-            case id @ ("delta" | "fixedscaleoffset" | "quantize") =>
-              numFilter = Some(graft.zarr.ZarrStore.filterFromJson(
-                id, c.get("configuration")))
-            case "blosc" =>
-              val cf = c.get("configuration")
-              blosc = Some(graft.zarr.Blosc.Params(
-                cname = cf.get("cname").asText(),
-                clevel = cf.get("clevel").asInt(),
-                shuffle = cf.get("shuffle").asText() == "shuffle",
-                blocksize = Option(cf.get("blocksize")).map(_.asInt()).getOrElse(0),
-                bitShuffle = cf.get("shuffle").asText() == "bitshuffle"))
-            case other => throw new UnsupportedOperationException(
-              s"codec $other has no kerchunk v2 representation")
-          }
-        }
-        za.put("dtype", v2Dtype(meta.get("data_type").asText(), big))
-        za.put("order", "C")
-        val fill = meta.get("fill_value")
-        if (fill != null && fill.isTextual) za.put("fill_value", fill.asText())
-        else za.set[ObjectNode]("fill_value", fill)
-        (zlib, gzip, zstd, blosc) match {
-          case (Some(l), _, _, _) =>
-            val comp = mapper.createObjectNode()
-            comp.put("id", "zlib"); comp.put("level", l)
-            za.set[ObjectNode]("compressor", comp)
-          case (_, Some(l), _, _) =>
-            val comp = mapper.createObjectNode()
-            comp.put("id", "gzip"); comp.put("level", l)
-            za.set[ObjectNode]("compressor", comp)
-          case (_, _, Some(l), _) =>
-            val comp = mapper.createObjectNode()
-            comp.put("id", "zstd"); comp.put("level", l)
-            za.set[ObjectNode]("compressor", comp)
-          case (_, _, _, Some(p)) =>
-            // numcodecs blosc: shuffle 0=none 1=byte 2=bit
-            val comp = mapper.createObjectNode()
-            comp.put("id", "blosc"); comp.put("cname", p.cname)
-            comp.put("clevel", p.clevel)
-            comp.put("shuffle", if (p.bitShuffle) 2 else if (p.shuffle) 1 else 0)
-            comp.put("blocksize", p.blocksize)
-            za.set[ObjectNode]("compressor", comp)
-          case _ => za.putNull("compressor")
-        }
-        // numcodecs filters in ENCODE order: the array->array filter first,
-        // then shuffle (bytes); grib is a whole-message filter on its own
-        val filters = mapper.createArrayNode()
-        numFilter.foreach { d =>
-          val df = mapper.createObjectNode()
-          df.put("id", d.id)
-          graft.zarr.ZarrStore.filterFields(d, df)
-          filters.add(df)
-        }
-        shuffle.foreach { es =>
-          val sh = mapper.createObjectNode()
-          sh.put("id", "shuffle"); sh.put("elementsize", es)
-          filters.add(sh)
-        }
-        if (filters.isEmpty) grib.foreach { gv =>
-          val gf = mapper.createObjectNode()
-          gf.put("id", "grib"); gf.put("var", gv)
-          filters.add(gf)
-        }
-        if (filters.isEmpty) za.putNull("filters")
-        else za.set[ObjectNode]("filters", filters)
-        putInline(s"$v/.zarray", mapper.writeValueAsBytes(za))
-        // .zattrs: user attrs + the xarray dims convention
-        val attrs = Option(meta.get("attributes"))
-          .map(_.deepCopy[ObjectNode]()).getOrElse(mapper.createObjectNode())
-        Option(meta.get("dimension_names")).foreach(dn =>
-          attrs.set[ObjectNode]("_ARRAY_DIMENSIONS", dn))
-        putInline(s"$v/.zattrs", mapper.writeValueAsBytes(attrs))
+        val (zarray, zattrs) =
+          ZarrStore.renderV2(ZarrStore.parseV3(mapper.readTree(ref.resolve()), key))
+        putInline(s"$v/.zarray", mapper.writeValueAsBytes(zarray))
+        putInline(s"$v/.zattrs", mapper.writeValueAsBytes(zattrs))
       } else {
         // chunk key: <var>/c/i/j -> <var>/i.j  (scalar <var>/c -> <var>/0)
         val parts = key.split('/')
@@ -841,79 +723,22 @@ object RefSet {
     * store are the same key space). */
   private[kerchunk] def fromV2Raw(
       raw: Map[String, Either[Array[Byte], (String, Long, Long)]]): RefSet = {
-    def doc(key: String): ObjectNode = raw(key) match {
-      case Left(b) => mapper.readTree(b).asInstanceOf[ObjectNode]
+    def doc(key: String): com.fasterxml.jackson.databind.JsonNode = raw(key) match {
+      case Left(b) => mapper.readTree(b)
       case Right(_) => throw new IllegalArgumentException(s"$key is a pointer")
     }
     var out = Map.empty[String, Ref]
     val rootAttrs =
-      if (raw.contains(".zattrs")) graft.zarr.ZarrStore.objectAttrs(doc(".zattrs"))
+      if (raw.contains(".zattrs")) ZarrStore.objectAttrs(doc(".zattrs"))
       else graft.core.Attrs.empty
-    out += "zarr.json" -> Ref.inline(graft.zarr.ZarrStore.groupMetaDoc(rootAttrs))
+    out += "zarr.json" -> Ref.inline(ZarrStore.groupMetaDoc(rootAttrs))
     val varNames = raw.keys.collect {
       case k if k.endsWith("/.zarray") => k.stripSuffix("/.zarray") }.toVector
     varNames.foreach { v =>
-      val za = doc(s"$v/.zarray")
-      val shape = za.get("shape").elements().asScala.map(_.asInt()).toVector
-      val chunks = za.get("chunks").elements().asScala.map(_.asInt()).toVector
-      Option(za.get("order")).map(_.asText()).foreach(o => require(o == "C",
-        s"zarr v2 order '$o' not supported (C-order only)"))
-      val (dtype, big) =
-        graft.zarr.ZarrStore.dtypeFromNameV2(za.get("dtype").asText())
-      // compressor/filter dispatch is a CLOSED set: anything unrecognized
-      // must fail here, not decode compressed bytes as raw garbage later
-      val compNode = Option(za.get("compressor")).filter(!_.isNull)
-      val compId = compNode.map(_.get("id").asText())
-      compId.foreach(id => require(Set("zlib", "gzip", "zstd", "blosc")(id),
-        s"zarr v2 compressor '$id' is not supported " +
-          "(supported: zlib, gzip, zstd, blosc[lz4/lz4hc/zlib/zstd/snappy])"))
-      val zlib = compNode.filter(_ => compId.contains("zlib"))
-        .map(_.get("level").asInt())
-      val gzip = compNode.filter(_ => compId.contains("gzip"))
-        .map(_.get("level").asInt())
-      val zstd = compNode.filter(_ => compId.contains("zstd"))
-        .map(c => Option(c.get("level")).map(_.asInt()).getOrElse(3))
-      val blosc = compNode.filter(_ => compId.contains("blosc"))
-        .map { c =>
-          val sh = Option(c.get("shuffle")).map(_.asInt()).getOrElse(1)
-          graft.zarr.Blosc.Params(
-            cname = Option(c.get("cname")).map(_.asText()).getOrElse("lz4"),
-            clevel = Option(c.get("clevel")).map(_.asInt()).getOrElse(5),
-            shuffle = sh == 1,
-            blocksize = Option(c.get("blocksize")).map(_.asInt()).getOrElse(0),
-            bitShuffle = sh == 2)
-        }
-      val filterNodes = Option(za.get("filters")).filter(!_.isNull)
-        .map(_.elements().asScala.toVector).getOrElse(Vector.empty)
-      val arrayFilterIds = Set("delta", "fixedscaleoffset", "quantize")
-      filterNodes.foreach { f =>
-        val id = f.get("id").asText()
-        require(id == "shuffle" || id == "grib" || arrayFilterIds(id),
-          s"zarr v2 filter '$id' is not supported " +
-            "(supported: shuffle, grib, delta, fixedscaleoffset, quantize)")
-      }
-      val shuffle = filterNodes.find(_.get("id").asText() == "shuffle")
-        .map(_.get("elementsize").asInt())
-      val grib = filterNodes.find(_.get("id").asText() == "grib")
-        .map(_.get("var").asText())
-      val numFilter = filterNodes
-        .find(f => arrayFilterIds(f.get("id").asText()))
-        .map(f => graft.zarr.ZarrStore.filterFromJson(f.get("id").asText(), f))
-      val attrsNode = if (raw.contains(s"$v/.zattrs")) doc(s"$v/.zattrs") else null
-      val dims = Option(attrsNode).flatMap(a =>
-        Option(a.get("_ARRAY_DIMENSIONS")).map(
-          _.elements().asScala.map(_.asText()).toVector))
-      val attrs = Option(attrsNode).map { a =>
-        val c = a.deepCopy[ObjectNode](); c.remove("_ARRAY_DIMENSIONS")
-        graft.zarr.ZarrStore.objectAttrs(c)
-      }.getOrElse(graft.core.Attrs.empty)
-      out += s"$v/zarr.json" -> Ref.inline(graft.zarr.ZarrStore.arrayMetaDoc(
-        shape, chunks, dtype, attrs,
-        fillValue = Option(za.get("fill_value")).map(graft.zarr.ZarrStore.nodeToAttr)
-          .getOrElse(graft.core.AttrValue.AInt(0)),
-        dimensionNames = dims, gzipLevel = gzip, bigEndian = big,
-        zlibLevel = zlib, shuffleElem = shuffle, gribVar = grib,
-        numFilter = numFilter, zstdLevel = zstd, blosc = blosc))
+      // either chunk-key separator maps below, so the separator is not judged
+      val (meta, _) = ZarrStore.parseV2(doc(s"$v/.zarray"),
+        raw.get(s"$v/.zattrs").map(_ => doc(s"$v/.zattrs")), s"$v/.zarray")
+      out += s"$v/zarr.json" -> metaRef(meta)
       // chunk keys <var>/i.j -> <var>/c/i/j; scalar arrays' "0" -> "c"
       raw.foreach { case (k, payload) =>
         if (k.startsWith(s"$v/") && !k.contains(".z")) {
@@ -922,7 +747,7 @@ object RefSet {
             case Right((url, off, len)) => Ref.pointer(url, off, len)
           }
           val key =
-            if (shape.isEmpty) s"$v/c"
+            if (meta.shape.isEmpty) s"$v/c"
             else s"$v/c/" + k.stripPrefix(s"$v/").split('.').mkString("/")
           out += key -> ref
         }

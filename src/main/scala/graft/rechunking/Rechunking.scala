@@ -4,8 +4,10 @@ import graft.core._
 
 /** The rechunk shuffle kernel (rechunking.py:23-242):
   * `splitFragment` slices each indexed fragment against the target chunk
-  * grid and keys the pieces by target-chunk group; after a groupByKey,
-  * `combineFragments` reassembles each group into one contiguous fragment.
+  * grid and keys the pieces by target-chunk group; after the shuffle
+  * (`Pipelines.rechunk`: repartition by group key, then sort within each
+  * partition), `combineFragments` reassembles each group into one
+  * contiguous fragment.
   *
   * GroupKey is a sorted tuple of ("dim", chunkIndex) pairs plus the merge-dim
   * positions, so groups are homogeneous in all merge dimensions.
@@ -20,7 +22,7 @@ object Rechunking {
   /** Whether every target chunk of the write `grain` gets pieces from
     * exactly one fragment, decided from metadata alone: the per-position
     * lengths of each concat combine dim (`schema.chunks`), the grain and the
-    * append offset. When it holds, the groupByKey after `splitFragment`
+    * append offset. When it holds, the shuffle after `splitFragment`
     * would regroup nothing, so each piece can be written by the task that
     * split it.
     *

@@ -5,7 +5,7 @@ import graft.core.Attrs.Attrs
 import graft.combiners.SchemaCombine
 import graft.patterns.{FilePattern, FileType}
 import graft.rechunking.Rechunking
-import graft.zarr.ZarrGroup
+import graft.zarr.{ZarrGroup, ZarrStore}
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -277,11 +277,9 @@ object Pipelines {
   final case class VarEncoding(gzipLevel: Option[Int] = None,
                                zstdLevel: Option[Int] = None,
                                blosc: Option[graft.zarr.Blosc.Params] = None) {
-    // enforce the one-compressor contract at construction — a chain with
-    // two compression codecs would write metadata the chunk encoder does
-    // not honor, corrupting the store for conformant external readers
-    require(Seq(gzipLevel, zstdLevel, blosc).count(_.isDefined) <= 1,
-      "VarEncoding: at most one compressor (gzip/zstd/blosc) per variable")
+    // at most one compressor, enforced at construction
+    val compressor: Option[ZarrStore.Compressor] =
+      ZarrStore.Compressor.of(gzip = gzipLevel, zstd = zstdLevel, blosc = blosc)
   }
 
   /** PrepareZarrTarget (transforms.py:331-379 + aggregation.py:254-281):
@@ -317,16 +315,12 @@ object Pipelines {
           if (targetShards.isEmpty) None
           else Some(v.dims.zip(chunkShape).map { case (d, c) =>
             targetShards.getOrElse(d, c) })
-        val enc = encoding.getOrElse(name, VarEncoding())
-        g.createArray(name, v.shape, chunkShape, v.dtype,
-          v.attrs ++ v.encoding.filter(_._1 != "chunks"),
-          dimensionNames = Some(v.dims),
-          gzipLevel = enc.gzipLevel.orElse(
-            // a var with its own zstd/blosc codec must not ALSO gzip
-            if (enc.zstdLevel.isDefined || enc.blosc.isDefined) None
-            else gzipLevel),
-          shardShape = shard,
-          zstdLevel = enc.zstdLevel, blosc = enc.blosc)
+        // a var's own codec replaces the store-wide gzip
+        val compressor = encoding.get(name).flatMap(_.compressor)
+          .orElse(gzipLevel.map(ZarrStore.Compressor.Gzip))
+        g.createArray(name, ZarrStore.ArrayMeta(v.shape, chunkShape, v.dtype,
+          v.attrs ++ v.encoding.filter(_._1 != "chunks"), Some(v.dims),
+          compressor, shard))
       }
       g
     case Some(ad) =>
@@ -504,10 +498,11 @@ object Pipelines {
 
 /** Format-specific openers (openers.py:16-254), keyed by FileType with the
   * reference's engine-dispatch validation semantics (OPENER_MAP/_set_engine,
-  * openers.py:40-88). Zarr directories and NetCDF3 classic files decode
-  * natively (our store reader / graft.netcdf.NetCDF3); NetCDF4-HDF5 and
-  * GRIB decoding has no JVM lib in this offline build and surfaces the same
-  * registry errors the reference raises for a missing engine. */
+  * openers.py:40-88). Every engine decodes on the JVM: Zarr directories
+  * (our store reader), NetCDF3 (graft.netcdf.NetCDF3), NetCDF4/HDF5
+  * (graft.hdf5.HDF5), GRIB2 (graft.grib.Grib2), OPeNDAP (graft.dap) and
+  * GeoTIFF (graft.tiff.Tiff); an unknown engine or file type surfaces the
+  * same registry errors the reference raises for a missing engine. */
 object Openers {
 
   type Decoder = String => Fragment

@@ -99,166 +99,13 @@ object ZarrStore {
     case other => throw new IllegalArgumentException(s"Unsupported zarr dtype $other")
   }
 
-  /** One array's zarr.json document (v3 core + sharding spec). Shared by
-    * the on-disk store (createArray) and the kerchunk scanners, which inline
-    * the same document into a RefSet without a disk group. `bigEndian`
-    * selects the bytes codec's endian — scanned NetCDF3 byte ranges are
-    * big-endian in place, so their metadata must say so for the reader.
-    * `gribVar` declares the grib2 whole-message codec instead of the bytes
-    * codec: the chunk object is a complete GRIB2 message and the named
-    * variable ("data" | "latitude" | "longitude") is extracted on read —
-    * the kerchunk scan_grib contract (bytes stay in the original file). */
-  def arrayMetaDoc(shape: Vector[Int], chunks: Vector[Int],
-                   dtype: DType, attrs: Attrs,
-                   fillValue: AttrValue = AttrValue.AInt(0),
-                   dimensionNames: Option[Vector[String]] = None,
-                   gzipLevel: Option[Int] = None,
-                   shardShape: Option[Vector[Int]] = None,
-                   bigEndian: Boolean = false,
-                   gribVar: Option[String] = None,
-                   zlibLevel: Option[Int] = None,
-                   shuffleElem: Option[Int] = None,
-                   zstdLevel: Option[Int] = None,
-                   blosc: Option[Blosc.Params] = None,
-                   numFilter: Option[NumFilter] = None): Array[Byte] = {
-    val o = mapper.createObjectNode()
-    o.put("zarr_format", 3)
-    o.put("node_type", "array")
-    val sh = mapper.createArrayNode(); shape.foreach(sh.add); o.set[ObjectNode]("shape", sh)
-    o.put("data_type", dtypeName(dtype))
-    val grid = mapper.createObjectNode()
-    grid.put("name", "regular")
-    val gcfg = mapper.createObjectNode()
-    // with sharding the top-level chunk grid addresses SHARDS; inner chunks
-    // live in the sharding codec's configuration (zarr v3 sharding spec)
-    val ch = mapper.createArrayNode(); shardShape.getOrElse(chunks).foreach(ch.add)
-    gcfg.set[ObjectNode]("chunk_shape", ch)
-    grid.set[ObjectNode]("configuration", gcfg)
-    o.set[ObjectNode]("chunk_grid", grid)
-    val cke = mapper.createObjectNode()
-    cke.put("name", "default")
-    val ckcfg = mapper.createObjectNode(); ckcfg.put("separator", "/")
-    cke.set[ObjectNode]("configuration", ckcfg)
-    o.set[ObjectNode]("chunk_key_encoding", cke)
-    o.set[ObjectNode]("fill_value", attrToNode(fillValue))
-    def innerCodecs: ArrayNode = {
-      val codecs = mapper.createArrayNode()
-      gribVar match {
-        case Some(v) =>
-          val grib = mapper.createObjectNode()
-          grib.put("name", "grib2")
-          val gc = mapper.createObjectNode(); gc.put("var", v)
-          grib.set[ObjectNode]("configuration", gc)
-          codecs.add(grib)
-          return codecs
-        case None =>
-      }
-      numFilter.foreach { f =>
-        // numcodecs array->array filters lead the chain
-        val dn = mapper.createObjectNode()
-        dn.put("name", f.id)
-        val dc = mapper.createObjectNode()
-        filterFields(f, dc)
-        dn.set[ObjectNode]("configuration", dc)
-        codecs.add(dn)
-      }
-      val bytesCodec = mapper.createObjectNode()
-      bytesCodec.put("name", "bytes")
-      val bcfg = mapper.createObjectNode()
-      bcfg.put("endian", if (bigEndian) "big" else "little")
-      bytesCodec.set[ObjectNode]("configuration", bcfg)
-      codecs.add(bytesCodec)
-      shuffleElem.foreach { es =>
-        // byte-transpose by element size — HDF5's shuffle filter; applies
-        // after the bytes codec on encode, so decode unshuffles AFTER
-        // decompression (numcodecs "shuffle" analog)
-        val sh2 = mapper.createObjectNode()
-        sh2.put("name", "shuffle")
-        val scfg2 = mapper.createObjectNode(); scfg2.put("elementsize", es)
-        sh2.set[ObjectNode]("configuration", scfg2)
-        codecs.add(sh2)
-      }
-      gzipLevel.foreach { lvl =>
-        val gz = mapper.createObjectNode()
-        gz.put("name", "gzip")
-        val gcfg2 = mapper.createObjectNode(); gcfg2.put("level", lvl)
-        gz.set[ObjectNode]("configuration", gcfg2)
-        codecs.add(gz)
-      }
-      zlibLevel.foreach { lvl =>
-        // raw RFC-1950 zlib — what HDF5's deflate filter stores; scanned
-        // netCDF-4 chunk refs decode in place (numcodecs "zlib" analog)
-        val z = mapper.createObjectNode()
-        z.put("name", "zlib")
-        val zcfg = mapper.createObjectNode(); zcfg.put("level", lvl)
-        z.set[ObjectNode]("configuration", zcfg)
-        codecs.add(z)
-      }
-      zstdLevel.foreach { lvl =>
-        // zarr v3 registered zstd codec (the reference's blosc-zstd
-        // encoding fixture analog; zstd-jni ships with Spark)
-        val z = mapper.createObjectNode()
-        z.put("name", "zstd")
-        val zcfg = mapper.createObjectNode()
-        zcfg.put("level", lvl); zcfg.put("checksum", false)
-        z.set[ObjectNode]("configuration", zcfg)
-        codecs.add(z)
-      }
-      blosc.foreach { p =>
-        // zarr v3 registered blosc codec — the zarr v2 DEFAULT compressor's
-        // v3 form; the container does its own per-block shuffle
-        val b = mapper.createObjectNode()
-        b.put("name", "blosc")
-        val bcfg = mapper.createObjectNode()
-        bcfg.put("cname", p.cname); bcfg.put("clevel", p.clevel)
-        bcfg.put("shuffle",
-          if (p.bitShuffle) "bitshuffle"
-          else if (p.shuffle) "shuffle" else "noshuffle")
-        bcfg.put("typesize", dtype.byteSize)
-        bcfg.put("blocksize", p.blocksize)
-        b.set[ObjectNode]("configuration", bcfg)
-        codecs.add(b)
-      }
-      codecs
-    }
-    val codecs = shardShape match {
-      case None => innerCodecs
-      case Some(_) =>
-        val top = mapper.createArrayNode()
-        val shard = mapper.createObjectNode()
-        shard.put("name", "sharding_indexed")
-        val scfg = mapper.createObjectNode()
-        val ics = mapper.createArrayNode(); chunks.foreach(ics.add)
-        scfg.set[ObjectNode]("chunk_shape", ics)
-        scfg.set[ObjectNode]("codecs", innerCodecs)
-        val idxCodecs = mapper.createArrayNode()
-        val ib = mapper.createObjectNode(); ib.put("name", "bytes")
-        val ibc = mapper.createObjectNode(); ibc.put("endian", "little")
-        ib.set[ObjectNode]("configuration", ibc)
-        idxCodecs.add(ib)
-        val crc = mapper.createObjectNode(); crc.put("name", "crc32c")
-        idxCodecs.add(crc)
-        scfg.set[ObjectNode]("index_codecs", idxCodecs)
-        scfg.put("index_location", "end")
-        shard.set[ObjectNode]("configuration", scfg)
-        top.add(shard)
-        top
-    }
-    o.set[ObjectNode]("codecs", codecs)
-    dimensionNames.foreach { dn =>
-      val a = mapper.createArrayNode(); dn.foreach(a.add); o.set[ObjectNode]("dimension_names", a)
-    }
-    o.set[ObjectNode]("attributes", attrsObject(attrs))
-    mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(o)
-  }
-
   /** One group's zarr.json document — the scanner twin of initGroup. */
   def groupMetaDoc(attrs: Attrs): Array[Byte] = {
     val o = mapper.createObjectNode()
     o.put("zarr_format", 3)
     o.put("node_type", "group")
     o.set[ObjectNode]("attributes", attrsObject(attrs))
-    mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(o)
+    pretty(o)
   }
 
   // ---------- zarr v2 documents (the zarr-python classic layout) ----------
@@ -355,7 +202,7 @@ object ZarrStore {
 
   /** Parse a numcodecs filter JSON node (v2 `filters` entry keyed by `id`,
     * or a v3 codec `configuration` keyed by the codec `name`). */
-  def filterFromJson(id: String,
+  private def filterFromJson(id: String,
                      n: com.fasterxml.jackson.databind.JsonNode): NumFilter = {
     def dt = jreq(n, "dtype", s"filter '$id'").asText()
     def at = Option(n.get("astype")).filter(!_.isNull).map(_.asText())
@@ -374,7 +221,7 @@ object ZarrStore {
   }
 
   /** Fill `o` with the filter's numcodecs fields (everything but id/name). */
-  def filterFields(f: NumFilter, o: ObjectNode): Unit = {
+  private def filterFields(f: NumFilter, o: ObjectNode): Unit = {
     f match {
       case p: ScaleOffsetParams =>
         // numcodecs emits integral scale/offset as JSON ints
@@ -646,20 +493,94 @@ object ZarrStore {
     out.array()
   }
 
-  /** v2 JSON spells non-finite floats as strings ("NaN", "Infinity"). */
-  private def fillNodeV2(v: AttrValue): com.fasterxml.jackson.databind.JsonNode =
-    v match {
-      case AttrValue.ANum(d) if d.isNaN =>
-        mapper.getNodeFactory.textNode("NaN")
-      case AttrValue.ANum(d) if d.isPosInfinity =>
-        mapper.getNodeFactory.textNode("Infinity")
-      case AttrValue.ANum(d) if d.isNegInfinity =>
-        mapper.getNodeFactory.textNode("-Infinity")
-      case other => attrToNode(other)
-    }
+  // ---------- array metadata: one model; one parser and one renderer per format ----------
 
-  private[zarr] def fillFromNodeV2(
-      n: com.fasterxml.jackson.databind.JsonNode): AttrValue =
+  private type Node = com.fasterxml.jackson.databind.JsonNode
+
+  /** A chunk compressor. An array has at most one, after the bytes codec
+    * and the optional shuffle. */
+  sealed trait Compressor
+  object Compressor {
+    final case class Gzip(level: Int) extends Compressor
+    /** raw RFC-1950 zlib — what HDF5's deflate filter stores, so scanned
+      * netCDF-4 chunk refs decode in place (numcodecs "zlib") */
+    final case class Zlib(level: Int) extends Compressor
+    /** the zarr v3 registered zstd codec (zstd-jni ships with Spark) */
+    final case class Zstd(level: Int) extends Compressor
+    /** the zarr v2 default compressor; the container does its own
+      * per-block shuffle */
+    final case class Blosc(params: graft.zarr.Blosc.Params) extends Compressor
+
+    /** The one compressor among optional settings; two fail by name. */
+    def of(gzip: Option[Int] = None, zlib: Option[Int] = None,
+           zstd: Option[Int] = None,
+           blosc: Option[graft.zarr.Blosc.Params] = None): Option[Compressor] = {
+      val all: Seq[Compressor] =
+        Seq(gzip.map(Gzip), zlib.map(Zlib), zstd.map(Zstd), blosc.map(Blosc)).flatten
+      require(all.size <= 1, s"at most one compressor per array, got ${all.mkString(", ")}")
+      all.headOption
+    }
+  }
+
+  /** One array's metadata: the in-memory form every document format parses
+    * to and renders from (zarr-python's array-metadata model). `chunks` is
+    * the read-granularity (inner) chunk shape; when sharded, `shardShape`
+    * is the object/write granularity and a per-dim multiple of `chunks`.
+    * `dimNames` is what the document declares (v3 `dimension_names`, v2
+    * `_ARRAY_DIMENSIONS`), None when it declares none. The codec chain is
+    * [numFilter] → bytes (`bigEndian`) → [shuffle] → [compressor], or, with
+    * `gribVar`, the grib2 whole-message codec alone: the chunk object is a
+    * complete GRIB2 message and the named variable ("data" | "latitude" |
+    * "longitude") is extracted on read (the kerchunk scan_grib contract). */
+  final case class ArrayMeta(shape: Vector[Int], chunks: Vector[Int],
+                             dtype: DType, attrs: Attrs,
+                             dimNames: Option[Vector[String]] = None,
+                             compressor: Option[Compressor] = None,
+                             shardShape: Option[Vector[Int]] = None,
+                             fillValue: AttrValue = AttrValue.AInt(0),
+                             bigEndian: Boolean = false,
+                             gribVar: Option[String] = None,
+                             shuffleElem: Option[Int] = None,
+                             numFilter: Option[NumFilter] = None) {
+    /** storage-object granularity: shard if sharded, else chunk */
+    def grain: Vector[Int] = shardShape.getOrElse(chunks)
+    /** the declared dims, or `dim_<i>` when the document declares none */
+    def dimensionNames: Vector[String] =
+      dimNames.getOrElse(shape.indices.map(i => s"dim_$i").toVector)
+    def gzipLevel: Option[Int] = compressor.collect { case Compressor.Gzip(l) => l }
+    def zlibLevel: Option[Int] = compressor.collect { case Compressor.Zlib(l) => l }
+    def blosc: Option[Blosc.Params] = compressor.collect { case Compressor.Blosc(p) => p }
+  }
+
+  def pretty(n: Node): Array[Byte] =
+    mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(n)
+
+  private def ints(n: Node): Vector[Int] = n.elements().asScala.map(_.asInt()).toVector
+  private def strings(n: Node): Vector[String] =
+    n.elements().asScala.map(_.asText()).toVector
+  private def intArray(xs: Seq[Int]): ArrayNode = {
+    val a = mapper.createArrayNode(); xs.foreach(a.add(_)); a
+  }
+  private def strArray(xs: Seq[String]): ArrayNode = {
+    val a = mapper.createArrayNode(); xs.foreach(a.add); a
+  }
+  /** `{"name": name, "configuration": {...}}` — a v3 codec entry */
+  private def codec(name: String)(config: ObjectNode => Unit): ObjectNode = {
+    val c = mapper.createObjectNode(); c.put("name", name)
+    config(c.putObject("configuration")); c
+  }
+  private def optText(n: Node, field: String): Option[String] =
+    Option(n).flatMap(x => Option(x.get(field))).filter(!_.isNull).map(_.asText())
+
+  /** fill_value: both formats spell non-finite floats as strings. */
+  private def fillNode(v: AttrValue): Node = v match {
+    case AttrValue.ANum(d) if d.isNaN => mapper.getNodeFactory.textNode("NaN")
+    case AttrValue.ANum(d) if d.isPosInfinity => mapper.getNodeFactory.textNode("Infinity")
+    case AttrValue.ANum(d) if d.isNegInfinity => mapper.getNodeFactory.textNode("-Infinity")
+    case other => attrToNode(other)
+  }
+
+  private def fillFromNode(n: Node): AttrValue =
     if (n == null) AttrValue.AInt(0)
     else if (n.isTextual) n.asText() match {
       case "NaN" => AttrValue.ANum(Double.NaN)
@@ -669,80 +590,239 @@ object ZarrStore {
     }
     else nodeToAttr(n)
 
-  /** One array's `.zarray` document (zarr v2 spec): C order, "."-separated
-    * chunk keys, numcodecs-id compressor dict (at most one of gzip / zlib /
-    * zstd / blosc), optional shuffle filter. The writer twin of the v2
-    * scanner's closed compressor set (RefSet.fromV2Raw). */
-  def arrayMetaDocV2(shape: Vector[Int], chunks: Vector[Int],
-                     dtype: DType,
-                     fillValue: AttrValue = AttrValue.AInt(0),
-                     gzipLevel: Option[Int] = None,
-                     zlibLevel: Option[Int] = None,
-                     zstdLevel: Option[Int] = None,
-                     blosc: Option[Blosc.Params] = None,
-                     shuffleElem: Option[Int] = None,
-                     bigEndian: Boolean = false,
-                     numFilter: Option[NumFilter] = None): Array[Byte] = {
-    require(Seq(gzipLevel, zlibLevel, zstdLevel, blosc).count(_.isDefined) <= 1,
-      "zarr v2 takes at most one compressor")
+  /** One array's `zarr.json` document (v3 core + sharding spec). Shared by
+    * the store (createArray) and the kerchunk scanners, which inline the
+    * document into a RefSet without a disk group. */
+  def renderV3(m: ArrayMeta): Array[Byte] = {
     val o = mapper.createObjectNode()
-    o.put("zarr_format", 2)
-    val sh = mapper.createArrayNode(); shape.foreach(sh.add)
-    o.set[ObjectNode]("shape", sh)
-    val ch = mapper.createArrayNode(); chunks.foreach(ch.add)
-    o.set[ObjectNode]("chunks", ch)
-    o.put("dtype", dtypeNameV2(dtype, bigEndian))
-    o.put("order", "C")
-    o.set[ObjectNode]("fill_value", fillNodeV2(fillValue))
-    val comp: Option[ObjectNode] = (gzipLevel, zlibLevel, zstdLevel, blosc) match {
-      case (Some(lvl), _, _, _) =>
-        val c = mapper.createObjectNode()
-        c.put("id", "gzip"); c.put("level", lvl); Some(c)
-      case (_, Some(lvl), _, _) =>
-        val c = mapper.createObjectNode()
-        c.put("id", "zlib"); c.put("level", lvl); Some(c)
-      case (_, _, Some(lvl), _) =>
-        val c = mapper.createObjectNode()
-        c.put("id", "zstd"); c.put("level", lvl); Some(c)
-      case (_, _, _, Some(p)) =>
-        val c = mapper.createObjectNode()
-        c.put("id", "blosc"); c.put("cname", p.cname)
-        c.put("clevel", p.clevel)
-        c.put("shuffle", if (p.bitShuffle) 2 else if (p.shuffle) 1 else 0)
-        c.put("blocksize", p.blocksize); Some(c)
-      case _ => None
+    o.put("zarr_format", 3)
+    o.put("node_type", "array")
+    o.set[ObjectNode]("shape", intArray(m.shape))
+    o.put("data_type", dtypeName(m.dtype))
+    // with sharding the top-level chunk grid addresses SHARDS; inner chunks
+    // live in the sharding codec's configuration (zarr v3 sharding spec)
+    val grid = o.putObject("chunk_grid")
+    grid.put("name", "regular")
+    grid.putObject("configuration").set[ObjectNode]("chunk_shape", intArray(m.grain))
+    val cke = o.putObject("chunk_key_encoding")
+    cke.put("name", "default")
+    cke.putObject("configuration").put("separator", "/")
+    o.set[ObjectNode]("fill_value", fillNode(m.fillValue))
+    val inner = mapper.createArrayNode()
+    m.gribVar match {
+      case Some(v) => inner.add(codec("grib2")(_.put("var", v)))
+      case None =>
+        // numcodecs array->array filters lead the chain
+        m.numFilter.foreach(f => inner.add(codec(f.id)(filterFields(f, _))))
+        inner.add(codec("bytes")(_.put("endian", if (m.bigEndian) "big" else "little")))
+        // byte-transpose by element size (HDF5's shuffle filter) runs after
+        // the bytes codec on encode, so decode unshuffles after decompression
+        m.shuffleElem.foreach(es => inner.add(codec("shuffle")(_.put("elementsize", es))))
+        m.compressor.foreach(k => inner.add(k match {
+          case Compressor.Gzip(l) => codec("gzip")(_.put("level", l))
+          case Compressor.Zlib(l) => codec("zlib")(_.put("level", l))
+          case Compressor.Zstd(l) => codec("zstd") { c =>
+            c.put("level", l); c.put("checksum", false) }
+          case Compressor.Blosc(p) => codec("blosc") { c =>
+            c.put("cname", p.cname); c.put("clevel", p.clevel)
+            c.put("shuffle",
+              if (p.bitShuffle) "bitshuffle" else if (p.shuffle) "shuffle" else "noshuffle")
+            c.put("typesize", m.dtype.byteSize); c.put("blocksize", p.blocksize)
+          }
+        }))
     }
-    comp match {
-      case Some(c) => o.set[ObjectNode]("compressor", c)
-      case None => o.putNull("compressor")
-    }
-    val fs = mapper.createArrayNode()
-    numFilter.foreach { nf => // encode order: array filter, then shuffle
-      val f = mapper.createObjectNode()
-      f.put("id", nf.id); filterFields(nf, f)
-      fs.add(f)
-    }
-    shuffleElem.foreach { es =>
-      val f = mapper.createObjectNode()
-      f.put("id", "shuffle"); f.put("elementsize", es)
-      fs.add(f)
-    }
-    if (fs.isEmpty) o.putNull("filters")
-    else o.set[ObjectNode]("filters", fs)
-    o.put("dimension_separator", ".")
-    mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(o)
+    o.set[ObjectNode]("codecs", m.shardShape match {
+      case None => inner
+      case Some(_) =>
+        val index = mapper.createArrayNode()
+        index.add(codec("bytes")(_.put("endian", "little")))
+        index.addObject().put("name", "crc32c")
+        mapper.createArrayNode().add(codec("sharding_indexed") { c =>
+          c.set[ObjectNode]("chunk_shape", intArray(m.chunks))
+          c.set[ObjectNode]("codecs", inner)
+          c.set[ObjectNode]("index_codecs", index)
+          c.put("index_location", "end")
+        })
+    })
+    m.dimNames.foreach(d => o.set[ObjectNode]("dimension_names", strArray(d)))
+    o.set[ObjectNode]("attributes", attrsObject(m.attrs))
+    pretty(o)
   }
 
-  /** One array's `.zattrs` document: user attrs plus the xarray
-    * `_ARRAY_DIMENSIONS` convention (what makes the store xr.open_zarr-able). */
-  def zattrsDocV2(attrs: Attrs,
-                  dims: Option[Vector[String]] = None): Array[Byte] = {
-    val o = attrsObject(attrs)
-    dims.foreach { dn =>
-      val a = mapper.createArrayNode(); dn.foreach(a.add)
-      o.set[ObjectNode]("_ARRAY_DIMENSIONS", a)
+  /** A `zarr.json` array document -> ArrayMeta. What the store does not
+    * implement fails here by name: a chunk key encoding other than
+    * `default` with "/", a codec outside the closed set, and a shard
+    * index anywhere but a CRC32C-checked little-endian tail. */
+  def parseV3(n: Node, doc: String = "zarr.json"): ArrayMeta = {
+    require(jreq(n, "zarr_format", doc).asInt() == 3, s"$doc: zarr_format is not 3")
+    val grid = ints(jreq(jreq(jreq(n, "chunk_grid", doc), "configuration", doc),
+      "chunk_shape", doc))
+    val cke = jreq(n, "chunk_key_encoding", doc)
+    require(jreq(cke, "name", doc).asText() == "default" &&
+        optText(cke.get("configuration"), "separator").forall(_ == "/"),
+      s"$doc: chunk_key_encoding $cke is not supported ('default' with '/' is)")
+    def name(c: Node): String = jreq(c, "name", s"$doc codec").asText()
+    def cfg(c: Node): Node = jreq(c, "configuration", s"$doc codec '${name(c)}'")
+    val base = ArrayMeta(ints(jreq(n, "shape", doc)), grid,
+      dtypeFromName(jreq(n, "data_type", doc).asText()),
+      Option(n.get("attributes")).filter(!_.isNull).map(objectAttrs)
+        .getOrElse(Attrs.empty),
+      Option(n.get("dimension_names")).filter(!_.isNull).map(strings),
+      fillValue = fillFromNode(n.get("fill_value")))
+    val top = jreq(n, "codecs", doc).elements().asScala.toVector
+    val (meta, codecs) = top match {
+      case Vector(s) if name(s) == "sharding_indexed" =>
+        val sc = cfg(s)
+        val index = jreq(sc, "index_codecs", doc).elements().asScala.toVector
+        require(index.map(name) == Vector("bytes", "crc32c") &&
+            optText(index.head.get("configuration"), "endian").forall(_ == "little") &&
+            optText(sc, "index_location").forall(_ == "end"),
+          s"$doc: shard index ${sc.get("index_codecs")} at " +
+            s"${sc.get("index_location")} is not supported " +
+            "(bytes little-endian + crc32c at the end is)")
+        (base.copy(chunks = ints(jreq(sc, "chunk_shape", doc)), shardShape = Some(grid)),
+          jreq(sc, "codecs", doc).elements().asScala.toVector)
+      case _ => (base, top)
     }
-    mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(o)
+    codecs.foldLeft(meta) { (m, c) =>
+      def level: Int = jreq(cfg(c), "level", doc).asInt()
+      def compressed(k: Compressor): ArrayMeta = {
+        require(m.compressor.isEmpty, s"$doc: more than one compressor codec")
+        m.copy(compressor = Some(k))
+      }
+      name(c) match {
+        case "bytes" =>
+          m.copy(bigEndian = optText(c.get("configuration"), "endian").contains("big"))
+        case "shuffle" => m.copy(shuffleElem = Some(jreq(cfg(c), "elementsize", doc).asInt()))
+        case "gzip" => compressed(Compressor.Gzip(level))
+        case "zlib" => compressed(Compressor.Zlib(level))
+        case "zstd" => compressed(Compressor.Zstd(level))
+        case "blosc" =>
+          val cf = cfg(c)
+          val sh = optText(cf, "shuffle").getOrElse("shuffle")
+          compressed(Compressor.Blosc(Blosc.Params(
+            cname = optText(cf, "cname").getOrElse("lz4"),
+            clevel = Option(cf.get("clevel")).map(_.asInt()).getOrElse(5),
+            shuffle = sh == "shuffle",
+            blocksize = Option(cf.get("blocksize")).map(_.asInt()).getOrElse(0),
+            bitShuffle = sh == "bitshuffle")))
+        case "grib2" => m.copy(gribVar = Some(jreq(cfg(c), "var", doc).asText()))
+        case id @ ("delta" | "fixedscaleoffset" | "quantize") =>
+          m.copy(numFilter = Some(filterFromJson(id, cfg(c))))
+        case other => throw new IllegalArgumentException(
+          s"$doc: codec '$other' is not supported (supported: bytes, shuffle, " +
+            "gzip, zlib, zstd, blosc, grib2, delta, fixedscaleoffset, quantize, " +
+            "and sharding_indexed as the only top-level codec)")
+      }
+    }
+  }
+
+  /** One array's v2 documents (zarr v2 spec): the `.zarray` (C order,
+    * "."-separated chunk keys, numcodecs-id compressor and filters, or
+    * kerchunk's whole-message `grib` filter) and the `.zattrs` (user attrs
+    * plus the xarray `_ARRAY_DIMENSIONS` convention that makes the store
+    * xr.open_zarr-able). Returned as trees: the store writes them pretty,
+    * the kerchunk artifacts compact. */
+  def renderV2(m: ArrayMeta): (ObjectNode, ObjectNode) = {
+    require(m.shardShape.isEmpty,
+      "zarr v2 has no sharding_indexed — write a v3 store for sharded output")
+    val o = mapper.createObjectNode()
+    o.put("zarr_format", 2)
+    o.set[ObjectNode]("shape", intArray(m.shape))
+    o.set[ObjectNode]("chunks", intArray(m.chunks))
+    o.put("dtype", dtypeNameV2(m.dtype, m.bigEndian))
+    o.put("order", "C")
+    o.set[ObjectNode]("fill_value", fillNode(m.fillValue))
+    m.compressor match {
+      case None => o.putNull("compressor")
+      case Some(k) =>
+        val c = o.putObject("compressor")
+        k match {
+          case Compressor.Gzip(l) => c.put("id", "gzip").put("level", l)
+          case Compressor.Zlib(l) => c.put("id", "zlib").put("level", l)
+          case Compressor.Zstd(l) => c.put("id", "zstd").put("level", l)
+          case Compressor.Blosc(p) => // numcodecs blosc shuffle: 0 none, 1 byte, 2 bit
+            c.put("id", "blosc").put("cname", p.cname).put("clevel", p.clevel)
+              .put("shuffle", if (p.bitShuffle) 2 else if (p.shuffle) 1 else 0)
+              .put("blocksize", p.blocksize)
+        }
+    }
+    // numcodecs filters in ENCODE order: the array->array filter, then shuffle
+    val fs = mapper.createArrayNode()
+    m.gribVar match {
+      case Some(v) => fs.addObject().put("id", "grib").put("var", v)
+      case None =>
+        m.numFilter.foreach { f =>
+          val n = fs.addObject(); n.put("id", f.id); filterFields(f, n)
+        }
+        m.shuffleElem.foreach(es => fs.addObject().put("id", "shuffle").put("elementsize", es))
+    }
+    if (fs.isEmpty) o.putNull("filters") else o.set[ObjectNode]("filters", fs)
+    o.put("dimension_separator", ".")
+    val zattrs = attrsObject(m.attrs)
+    m.dimNames.foreach(d => zattrs.set[ObjectNode]("_ARRAY_DIMENSIONS", strArray(d)))
+    (o, zattrs)
+  }
+
+  /** A v2 `.zarray` (and `.zattrs`, when present) -> the ArrayMeta and the
+    * chunk-key separator. The compressor and filter sets are CLOSED:
+    * anything unrecognized fails here rather than decoding compressed bytes
+    * as raw garbage. The separator is reported, not judged: the native
+    * store reads only ".", the RefSet import maps either. */
+  def parseV2(za: Node, zattrs: Option[Node],
+              doc: String = ".zarray"): (ArrayMeta, String) = {
+    require(jreq(za, "zarr_format", doc).asInt() == 2, s"$doc: zarr_format is not 2")
+    optText(za, "order").foreach(o => require(o == "C",
+      s"zarr v2 order '$o' not supported (C-order only)"))
+    val sep = optText(za, "dimension_separator").getOrElse(".")
+    require(sep == "." || sep == "/", s"$doc: dimension_separator '$sep'")
+    val (dtype, big) = dtypeFromNameV2(jreq(za, "dtype", doc).asText())
+    val compressor = Option(za.get("compressor")).filter(!_.isNull).map { c =>
+      jreq(c, "id", s"$doc compressor").asText() match {
+        case "gzip" => Compressor.Gzip(jreq(c, "level", s"$doc gzip").asInt())
+        case "zlib" => Compressor.Zlib(jreq(c, "level", s"$doc zlib").asInt())
+        case "zstd" => Compressor.Zstd(Option(c.get("level")).map(_.asInt()).getOrElse(3))
+        case "blosc" =>
+          val sh = Option(c.get("shuffle")).map(_.asInt()).getOrElse(1)
+          Compressor.Blosc(Blosc.Params(
+            cname = optText(c, "cname").getOrElse("lz4"),
+            clevel = Option(c.get("clevel")).map(_.asInt()).getOrElse(5),
+            shuffle = sh == 1,
+            blocksize = Option(c.get("blocksize")).map(_.asInt()).getOrElse(0),
+            bitShuffle = sh == 2))
+        case id => throw new IllegalArgumentException(
+          s"zarr v2 compressor '$id' is not supported " +
+            "(supported: zlib, gzip, zstd, blosc[lz4/lz4hc/zlib/zstd/snappy])")
+      }
+    }
+    val filters = Option(za.get("filters")).filter(!_.isNull)
+      .map(_.elements().asScala.toVector).getOrElse(Vector.empty)
+    val ids = filters.map(f => jreq(f, "id", s"$doc filter").asText())
+    val arrayFilterIds = Set("delta", "fixedscaleoffset", "quantize")
+    ids.foreach(id => require(id == "shuffle" || id == "grib" || arrayFilterIds(id),
+      s"zarr v2 filter '$id' is not supported " +
+        "(supported: shuffle, grib, delta, fixedscaleoffset, quantize)"))
+    require(ids.count(arrayFilterIds) <= 1,
+      s"at most one array->array filter per array, got $ids")
+    // decode un-applies shuffle then the array filter, i.e. encode order
+    // [array filter, shuffle]
+    require(ids.indexWhere(arrayFilterIds) <= math.max(ids.indexOf("shuffle"), 0),
+      s"unsupported v2 filter order $ids (array filter before shuffle)")
+    def filter(p: String => Boolean): Option[(String, Node)] =
+      ids.zip(filters).find(f => p(f._1))
+    val meta = ArrayMeta(ints(jreq(za, "shape", doc)), ints(jreq(za, "chunks", doc)),
+      dtype,
+      zattrs.map(a => objectAttrs(a) - "_ARRAY_DIMENSIONS").getOrElse(Attrs.empty),
+      zattrs.flatMap(a => Option(a.get("_ARRAY_DIMENSIONS"))).filter(!_.isNull)
+        .map(strings),
+      compressor,
+      fillValue = fillFromNode(za.get("fill_value")),
+      bigEndian = big,
+      gribVar = filter(_ == "grib").map(f => jreq(f._2, "var", s"$doc grib").asText()),
+      shuffleElem = filter(_ == "shuffle")
+        .map(f => jreq(f._2, "elementsize", s"$doc shuffle").asInt()),
+      numFilter = filter(arrayFilterIds).map { case (id, f) => filterFromJson(id, f) })
+    (meta, sep)
   }
 }
 
@@ -785,18 +865,9 @@ final class ZarrGroup(val root: String,
     if (format == 2) {
       val g = mapper.createObjectNode()
       g.put("zarr_format", 2)
-      io.write(".zgroup", mapper.writerWithDefaultPrettyPrinter()
-        .writeValueAsBytes(g))
-      io.write(".zattrs", mapper.writerWithDefaultPrettyPrinter()
-        .writeValueAsBytes(ZarrStore.attrsObject(attrs)))
-    } else {
-      val o = mapper.createObjectNode()
-      o.put("zarr_format", 3)
-      o.put("node_type", "group")
-      o.set[ObjectNode]("attributes", ZarrStore.attrsObject(attrs))
-      io.write("zarr.json", mapper.writerWithDefaultPrettyPrinter()
-        .writeValueAsBytes(o))
-    }
+      io.write(".zgroup", pretty(g))
+      io.write(".zattrs", pretty(ZarrStore.attrsObject(attrs)))
+    } else io.write("zarr.json", groupMetaDoc(attrs))
 
   def groupAttrs: Attrs =
     if (format == 2)
@@ -863,8 +934,7 @@ final class ZarrGroup(val root: String,
       val root = mapper.readTree(io.read("zarr.json")).asInstanceOf[ObjectNode]
       if (root.has("consolidated_metadata")) {
         root.remove("consolidated_metadata")
-        io.write("zarr.json", mapper.writerWithDefaultPrettyPrinter()
-          .writeValueAsBytes(root))
+        io.write("zarr.json", pretty(root))
       }
     }
     invalidateConsolidated()
@@ -886,21 +956,34 @@ final class ZarrGroup(val root: String,
     * batch tags. */
   def setGroupAttrs(attrs: Attrs): Unit = {
     if (format == 2) {
-      io.write(".zattrs", mapper.writerWithDefaultPrettyPrinter()
-        .writeValueAsBytes(ZarrStore.attrsObject(attrs)))
+      io.write(".zattrs", pretty(ZarrStore.attrsObject(attrs)))
     } else {
       val root = mapper.readTree(io.read("zarr.json")).asInstanceOf[ObjectNode]
       root.set[ObjectNode]("attributes", ZarrStore.attrsObject(attrs))
-      io.write("zarr.json", mapper.writerWithDefaultPrettyPrinter()
-        .writeValueAsBytes(root))
+      io.write("zarr.json", pretty(root))
     }
     stripConsolidatedOnDisk()
   }
 
   // ---------- array metadata ----------
-  /** Create one array's metadata (no chunk data). `dimensionNames` carries
-    * the xarray dims (zarr v3 `dimension_names`); attrs/encoding are merged
-    * into `attributes`. */
+  /** Create one array's metadata (no chunk data): `meta` rendered as this
+    * store's document format. */
+  def createArray(name: String, meta: ArrayMeta): Unit = {
+    meta.shardShape.foreach { ss =>
+      require(ss.length == meta.chunks.length &&
+        ss.zip(meta.chunks).forall { case (s, c) => s % c == 0 },
+        s"shard shape $ss must be a per-dim multiple of chunk shape ${meta.chunks}")
+    }
+    if (format == 2) {
+      val (zarray, zattrs) = renderV2(meta)
+      io.write(s"$name/.zarray", pretty(zarray))
+      io.write(s"$name/.zattrs", pretty(zattrs))
+    } else io.write(s"$name/zarr.json", renderV3(meta))
+    stripConsolidatedOnDisk()
+  }
+
+  /** Create one array from its settings. `dimensionNames` carries the
+    * xarray dims (zarr v3 `dimension_names`, v2 `_ARRAY_DIMENSIONS`). */
   def createArray(name: String, shape: Vector[Int], chunks: Vector[Int],
                   dtype: DType, attrs: Attrs,
                   fillValue: AttrValue = AttrValue.AInt(0),
@@ -909,40 +992,21 @@ final class ZarrGroup(val root: String,
                   shardShape: Option[Vector[Int]] = None,
                   zstdLevel: Option[Int] = None,
                   blosc: Option[Blosc.Params] = None,
-                  numFilter: Option[ZarrStore.NumFilter] = None): Unit = {
-    shardShape.foreach { ss =>
-      require(ss.length == chunks.length &&
-        ss.zip(chunks).forall { case (s, c) => s % c == 0 },
-        s"shard shape $ss must be a per-dim multiple of chunk shape $chunks")
-    }
-    if (format == 2) {
-      require(shardShape.isEmpty,
-        "zarr v2 has no sharding_indexed — write a v3 store for sharded output")
-      io.write(s"$name/.zarray", ZarrStore.arrayMetaDocV2(
-        shape, chunks, dtype, fillValue, gzipLevel,
-        zstdLevel = zstdLevel, blosc = blosc, numFilter = numFilter))
-      io.write(s"$name/.zattrs", ZarrStore.zattrsDocV2(attrs, dimensionNames))
-    } else
-      io.write(s"$name/zarr.json", ZarrStore.arrayMetaDoc(
-        shape, chunks, dtype, attrs, fillValue, dimensionNames, gzipLevel,
-        shardShape, zstdLevel = zstdLevel, blosc = blosc,
-        numFilter = numFilter))
-    stripConsolidatedOnDisk()
-  }
+                  numFilter: Option[NumFilter] = None): Unit =
+    createArray(name, ArrayMeta(shape, chunks, dtype, attrs, dimensionNames,
+      Compressor.of(gzip = gzipLevel, zstd = zstdLevel, blosc = blosc),
+      shardShape, fillValue, numFilter = numFilter))
 
-  /** Resize one array in place (zarr-python's `Array.resize`): rewrite only
-    * `shape` in the array's own document (`zarr.json`, or `.zarray` in v2),
-    * so its grid, codecs, fill value and attributes stay as the chunks
-    * already written need them. The rank stays the same; chunks past a
-    * shrunk edge stay on disk. Strips consolidation, as `createArray` does. */
+  /** Resize one array in place (zarr-python's `Array.resize`): re-render
+    * its document with the new `shape`, so its grid, codecs, fill value and
+    * attributes stay as the chunks already written need them. The rank
+    * stays the same; chunks past a shrunk edge stay on disk. Strips
+    * consolidation, as `createArray` does. */
   def resize(name: String, shape: Vector[Int]): Unit = {
-    val key = if (format == 2) s"$name/.zarray" else s"$name/zarr.json"
-    val doc = mapper.readTree(io.read(key)).asInstanceOf[ObjectNode]
-    require(jreq(doc, "shape", key).size == shape.length,
-      s"$root/$key: resizing to $shape would change the rank")
-    val sh = doc.putArray("shape"); shape.foreach(sh.add(_))
-    io.write(key, mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(doc))
-    stripConsolidatedOnDisk()
+    val m = arrayMeta(name)
+    require(m.shape.length == shape.length,
+      s"$root/$name: resizing to $shape would change the rank")
+    createArray(name, m.copy(shape = shape))
   }
 
   /** dim -> (storage-object edge, length), as the arrays `names` carrying
@@ -960,186 +1024,17 @@ final class ZarrGroup(val root: String,
       dim -> layouts.head
     }
 
-  /** `chunks` is the read-granularity (inner) chunk shape; when sharded,
-    * `shardShape` is the object/write granularity and a per-dim multiple of
-    * `chunks`. */
-  final case class ArrayMeta(shape: Vector[Int], chunks: Vector[Int],
-                             dtype: DType, attrs: Attrs,
-                             dimensionNames: Vector[String],
-                             gzipLevel: Option[Int] = None,
-                             shardShape: Option[Vector[Int]] = None,
-                             fillValue: AttrValue = AttrValue.AInt(0),
-                             bigEndian: Boolean = false,
-                             gribVar: Option[String] = None,
-                             zlibLevel: Option[Int] = None,
-                             shuffleElem: Option[Int] = None,
-                             zstdLevel: Option[Int] = None,
-                             blosc: Option[Blosc.Params] = None,
-                             numFilter: Option[ZarrStore.NumFilter] = None) {
-    /** storage-object granularity: shard if sharded, else chunk */
-    def grain: Vector[Int] = shardShape.getOrElse(chunks)
-  }
-
-  /** v2 `.zarray`/`.zattrs` -> ArrayMeta. The compressor/filter dispatch is
-    * a CLOSED set (the fromV2Raw scanner's contract): anything unrecognized
-    * fails here rather than decoding compressed bytes as raw garbage. Only
-    * "."-separated chunk keys are supported natively — scan "/"-separated
-    * stores through RefSet.scanZarrV2Group. */
-  private def arrayMetaV2(name: String): ArrayMeta = {
-    val za = v2DocOpt(s"$name/.zarray").getOrElse(
-      throw new java.io.FileNotFoundException(s"$root/$name/.zarray"))
-    val doc = s"$name/.zarray"
-    require(jreq(za, "zarr_format", doc).asInt() == 2, s"$doc zarr_format")
-    val shape = jreq(za, "shape", doc).elements().asScala.map(_.asInt()).toVector
-    val chunks = jreq(za, "chunks", doc).elements().asScala.map(_.asInt()).toVector
-    Option(za.get("order")).map(_.asText()).foreach(o => require(o == "C",
-      s"zarr v2 order '$o' not supported (C-order only)"))
-    Option(za.get("dimension_separator")).map(_.asText()).foreach(s =>
-      require(s == ".", s"native v2 store requires '.'-separated chunk keys" +
-        s" (got '$s'); open '/'-separated stores via RefSet.scanZarrV2Group"))
-    val (dtype, big) = dtypeFromNameV2(jreq(za, "dtype", doc).asText())
-    val compNode = Option(za.get("compressor")).filter(!_.isNull)
-    val compId = compNode.map(c => jreq(c, "id", s"$doc compressor").asText())
-    compId.foreach(id => require(Set("zlib", "gzip", "zstd", "blosc")(id),
-      s"zarr v2 compressor '$id' is not supported " +
-        "(supported: zlib, gzip, zstd, blosc[lz4/lz4hc/zlib/zstd/snappy])"))
-    val gzip = compNode.filter(_ => compId.contains("gzip"))
-      .map(c => jreq(c, "level", s"$doc gzip").asInt())
-    val zlib = compNode.filter(_ => compId.contains("zlib"))
-      .map(c => jreq(c, "level", s"$doc zlib").asInt())
-    val zstd = compNode.filter(_ => compId.contains("zstd"))
-      .map(c => Option(c.get("level")).map(_.asInt()).getOrElse(3))
-    val blosc = compNode.filter(_ => compId.contains("blosc")).map { c =>
-      val sh = Option(c.get("shuffle")).map(_.asInt()).getOrElse(1)
-      Blosc.Params(
-        cname = Option(c.get("cname")).map(_.asText()).getOrElse("lz4"),
-        clevel = Option(c.get("clevel")).map(_.asInt()).getOrElse(5),
-        shuffle = sh == 1,
-        blocksize = Option(c.get("blocksize")).map(_.asInt()).getOrElse(0),
-        bitShuffle = sh == 2)
-    }
-    val filterNodes = Option(za.get("filters")).filter(!_.isNull)
-      .map(_.elements().asScala.toVector).getOrElse(Vector.empty)
-    val filterIds = filterNodes.map(f => jreq(f, "id", s"$doc filter").asText())
-    val arrayFilterIds = Set("delta", "fixedscaleoffset", "quantize")
-    filterIds.foreach(id =>
-      require(id == "shuffle" || arrayFilterIds(id),
-        s"zarr v2 filter '$id' is not supported " +
-          "(supported: shuffle, delta, fixedscaleoffset, quantize)"))
-    require(filterIds.count(arrayFilterIds) <= 1,
-      s"at most one array->array filter per array, got $filterIds")
-    // decode un-applies shuffle then the array filter, i.e. encode order
-    // [array filter, shuffle]
-    require(filterIds.indexWhere(arrayFilterIds) <=
-        math.max(filterIds.indexOf("shuffle"), 0),
-      s"unsupported v2 filter order $filterIds (array filter before shuffle)")
-    val shuffle = filterNodes.find(f =>
-        jreq(f, "id", s"$doc filter").asText() == "shuffle")
-      .map(f => jreq(f, "elementsize", s"$doc shuffle").asInt())
-    val numFilter = filterNodes
-      .find(f => arrayFilterIds(jreq(f, "id", s"$doc filter").asText()))
-      .map(f => ZarrStore.filterFromJson(jreq(f, "id", s"$doc filter").asText(), f))
-    val attrsNode = v2DocOpt(s"$name/.zattrs")
-    val dims = attrsNode.flatMap(a => Option(a.get("_ARRAY_DIMENSIONS")).map(
-        _.elements().asScala.map(_.asText()).toVector))
-      .getOrElse(shape.indices.map(i => s"dim_$i").toVector)
-    val attrs = attrsNode.map { a =>
-      val c = a.deepCopy[ObjectNode](); c.remove("_ARRAY_DIMENSIONS")
-      ZarrStore.objectAttrs(c)
-    }.getOrElse(Attrs.empty)
-    ArrayMeta(shape, chunks, dtype, attrs, dims, gzip, None,
-      fillFromNodeV2(za.get("fill_value")), big, None, zlib, shuffle,
-      zstd, blosc, numFilter)
-  }
-
-  def arrayMeta(name: String): ArrayMeta = {
-    if (format == 2) return arrayMetaV2(name)
-    val n = consolidated.flatMap(_.get(name))
-      .getOrElse(mapper.readTree(io.read(s"$name/zarr.json")))
-    val doc = s"$name/zarr.json"
-    val shape = jreq(n, "shape", doc).elements().asScala.map(_.asInt()).toVector
-    val gridChunks = jreq(jreq(jreq(n, "chunk_grid", doc), "configuration", doc),
-        "chunk_shape", doc).elements().asScala.map(_.asInt()).toVector
-    val dtype = dtypeFromName(jreq(n, "data_type", doc).asText())
-    val dims = Option(n.get("dimension_names"))
-      .map(_.elements().asScala.map(_.asText()).toVector)
-      .getOrElse(shape.indices.map(i => s"dim_$i").toVector)
-    def cName(c: com.fasterxml.jackson.databind.JsonNode): String =
-      jreq(c, "name", s"$doc codec").asText()
-    def cCfg(c: com.fasterxml.jackson.databind.JsonNode) =
-      jreq(c, "configuration", s"$doc codec")
-    def gzipOf(codecs: com.fasterxml.jackson.databind.JsonNode): Option[Int] =
-      Option(codecs).flatMap(
-        _.elements().asScala.find(c => cName(c) == "gzip")
-          .map(c => jreq(cCfg(c), "level", doc).asInt()))
-    def bigOf(codecs: com.fasterxml.jackson.databind.JsonNode): Boolean =
-      Option(codecs).flatMap(
-        _.elements().asScala.find(c => cName(c) == "bytes")
-          .flatMap(c => Option(c.get("configuration"))
-            .flatMap(cf => Option(cf.get("endian")).map(_.asText()))))
-        .contains("big")
-    def gribOf(codecs: com.fasterxml.jackson.databind.JsonNode): Option[String] =
-      Option(codecs).flatMap(
-        _.elements().asScala.find(c => cName(c) == "grib2")
-          .map(c => jreq(cCfg(c), "var", doc).asText()))
-    def zlibOf(codecs: com.fasterxml.jackson.databind.JsonNode): Option[Int] =
-      Option(codecs).flatMap(
-        _.elements().asScala.find(c => cName(c) == "zlib")
-          .map(c => jreq(cCfg(c), "level", doc).asInt()))
-    def shuffleOf(codecs: com.fasterxml.jackson.databind.JsonNode): Option[Int] =
-      Option(codecs).flatMap(
-        _.elements().asScala.find(c => cName(c) == "shuffle")
-          .map(c => jreq(cCfg(c), "elementsize", doc).asInt()))
-    def zstdOf(codecs: com.fasterxml.jackson.databind.JsonNode): Option[Int] =
-      Option(codecs).flatMap(
-        _.elements().asScala.find(c => cName(c) == "zstd")
-          .map(c => jreq(cCfg(c), "level", doc).asInt()))
-    def bloscOf(codecs: com.fasterxml.jackson.databind.JsonNode): Option[Blosc.Params] =
-      Option(codecs).flatMap(
-        _.elements().asScala.find(c => cName(c) == "blosc")
-          .map { c =>
-            val cf = cCfg(c)
-            val sh = Option(cf.get("shuffle")).map(_.asText()).getOrElse("shuffle")
-            Blosc.Params(
-              cname = Option(cf.get("cname")).map(_.asText()).getOrElse("lz4"),
-              clevel = Option(cf.get("clevel")).map(_.asInt()).getOrElse(5),
-              shuffle = sh == "shuffle",
-              blocksize = Option(cf.get("blocksize")).map(_.asInt()).getOrElse(0),
-              bitShuffle = sh == "bitshuffle")
-          })
-    def deltaOf(codecs: com.fasterxml.jackson.databind.JsonNode)
-        : Option[ZarrStore.NumFilter] =
-      Option(codecs).flatMap(
-        _.elements().asScala.find(c => Set("delta", "fixedscaleoffset",
-            "quantize")(cName(c)))
-          .map(c => ZarrStore.filterFromJson(
-            cName(c), c.get("configuration"))))
-    val sharding = Option(n.get("codecs")).flatMap(
-      _.elements().asScala.find(c => cName(c) == "sharding_indexed"))
-    val fill = Option(n.get("fill_value")).map(nodeToAttr)
-      .getOrElse(AttrValue.AInt(0))
-    // attributes is optional in v3 array docs
-    val arrAttrs = Option(n.get("attributes")).filter(!_.isNull)
-      .map(ZarrStore.objectAttrs).getOrElse(Attrs.empty)
-    sharding match {
-      case Some(sc) =>
-        val cfg = cCfg(sc)
-        val inner = jreq(cfg, "chunk_shape", doc).elements().asScala
-          .map(_.asInt()).toVector
-        ArrayMeta(shape, inner, dtype, arrAttrs,
-          dims, gzipOf(cfg.get("codecs")), Some(gridChunks), fill,
-          bigOf(cfg.get("codecs")), gribOf(cfg.get("codecs")),
-          zlibOf(cfg.get("codecs")), shuffleOf(cfg.get("codecs")),
-          zstdOf(cfg.get("codecs")), bloscOf(cfg.get("codecs")),
-          deltaOf(cfg.get("codecs")))
-      case None =>
-        ArrayMeta(shape, gridChunks, dtype, arrAttrs, dims,
-          gzipOf(n.get("codecs")), None, fill, bigOf(n.get("codecs")),
-          gribOf(n.get("codecs")), zlibOf(n.get("codecs")),
-          shuffleOf(n.get("codecs")), zstdOf(n.get("codecs")),
-          bloscOf(n.get("codecs")), deltaOf(n.get("codecs")))
-    }
-  }
+  def arrayMeta(name: String): ArrayMeta =
+    if (format == 2) {
+      val key = s"$name/.zarray"
+      val zarray = v2DocOpt(key).getOrElse(
+        throw new java.io.FileNotFoundException(s"$root/$key"))
+      val (meta, sep) = parseV2(zarray, v2DocOpt(s"$name/.zattrs"), key)
+      require(sep == ".", s"native v2 store requires '.'-separated chunk keys" +
+        s" (got '$sep'); open '/'-separated stores via RefSet.scanZarrV2Group")
+      meta
+    } else parseV3(consolidated.flatMap(_.get(name))
+      .getOrElse(mapper.readTree(io.read(s"$name/zarr.json"))), s"$name/zarr.json")
 
   // ---------- chunk IO ----------
   private def chunkKey(name: String, chunkIdx: Vector[Int]): String =
@@ -1154,7 +1049,7 @@ final class ZarrGroup(val root: String,
 
   /** Encode one chunk through the FULL declared codec chain (the mirror of
     * decodeChunk): bytes codec with declared endian, then shuffle, then
-    * gzip or zlib. Writes into a grib2-codec array are impossible (the
+    * the compressor. Writes into a grib2-codec array are impossible (the
     * chunk object would have to be a GRIB message) and rejected. */
   private def encodeChunk(arr: NDArray, meta: ArrayMeta): Array[Byte] = {
     require(meta.gribVar.isEmpty,
@@ -1187,17 +1082,15 @@ final class ZarrGroup(val root: String,
       System.arraycopy(bytes, n * es, out, n * es, bytes.length - n * es)
       bytes = out
     }
-    meta.blosc match {
-      case Some(p) => return Blosc.compress(bytes, meta.dtype.byteSize, p)
-      case None =>
-    }
-    (meta.gzipLevel, meta.zlibLevel, meta.zstdLevel) match {
-      case (Some(lvl), _, _) =>
+    meta.compressor match {
+      case None => bytes
+      case Some(Compressor.Blosc(p)) => Blosc.compress(bytes, meta.dtype.byteSize, p)
+      case Some(Compressor.Gzip(lvl)) =>
         val bos = new java.io.ByteArrayOutputStream()
         val gz = new java.util.zip.GZIPOutputStream(bos) { `def`.setLevel(lvl) }
         gz.write(bytes); gz.close()
         bos.toByteArray
-      case (None, Some(lvl), _) =>
+      case Some(Compressor.Zlib(lvl)) =>
         val d = new java.util.zip.Deflater(lvl)
         d.setInput(bytes); d.finish()
         val bos = new java.io.ByteArrayOutputStream(bytes.length / 2 + 64)
@@ -1205,16 +1098,14 @@ final class ZarrGroup(val root: String,
         while (!d.finished()) bos.write(tmp, 0, d.deflate(tmp))
         d.end()
         bos.toByteArray
-      case (None, None, Some(lvl)) =>
+      case Some(Compressor.Zstd(lvl)) =>
         com.github.luben.zstd.Zstd.compress(bytes, lvl)
-      case _ => bytes
     }
   }
 
   /** Decode one `meta.chunks`-shaped chunk through `meta`'s codec chain. */
   private def decodeChunk(raw: Array[Byte], meta: ArrayMeta): NDArray = {
-    import meta.{dtype, gzipLevel, bigEndian, gribVar, zlibLevel, shuffleElem,
-      zstdLevel, blosc, numFilter}
+    import meta.{dtype, bigEndian, gribVar, shuffleElem, numFilter}
     val shape = meta.chunks
     gribVar.foreach { v =>
       // grib2 whole-message codec: the chunk object is a complete GRIB2
@@ -1236,13 +1127,14 @@ final class ZarrGroup(val root: String,
     // numcodecs filter stages may widen elements, never multiply them
     val maxChunkBytes =
       (NDArray.sizeOf(shape).toLong * 8 + 16).min(Int.MaxValue.toLong).toInt
-    val bytes = if (blosc.isDefined) Blosc.decompress(raw, maxChunkBytes)
-    else (gzipLevel, zlibLevel, zstdLevel) match {
-      case (Some(_), _, _) =>
+    val bytes = meta.compressor match {
+      case None => raw
+      case Some(Compressor.Blosc(_)) => Blosc.decompress(raw, maxChunkBytes)
+      case Some(Compressor.Gzip(_)) =>
         val in = new java.util.zip.GZIPInputStream(
           new java.io.ByteArrayInputStream(raw))
         try in.readAllBytes() finally in.close()
-      case (None, Some(_), _) =>
+      case Some(Compressor.Zlib(_)) =>
         val inf = new java.util.zip.Inflater()
         inf.setInput(raw)
         val bos = new java.io.ByteArrayOutputStream(raw.length * 4)
@@ -1255,10 +1147,9 @@ final class ZarrGroup(val root: String,
         }
         inf.end()
         bos.toByteArray
-      case (None, None, Some(_)) =>
+      case Some(Compressor.Zstd(_)) =>
         com.github.luben.zstd.Zstd.decompress(raw,
           NDArray.sizeOf(shape) * dtype.byteSize)
-      case _ => raw
     }
     val bytes2 = shuffleElem match {
       case Some(es) => // inverse byte-transpose (HDF5 shuffle filter)
@@ -1560,8 +1451,7 @@ final class ZarrGroup(val root: String,
       val o = mapper.createObjectNode()
       o.put("zarr_consolidated_format", 1)
       o.set[ObjectNode]("metadata", metaNode)
-      io.write(".zmetadata", mapper.writerWithDefaultPrettyPrinter()
-        .writeValueAsBytes(o))
+      io.write(".zmetadata", pretty(o))
       invalidateConsolidated()
       return
     }
@@ -1576,8 +1466,7 @@ final class ZarrGroup(val root: String,
     cons.put("must_understand", false)
     cons.set[ObjectNode]("metadata", metaNode)
     rootNode.set[ObjectNode]("consolidated_metadata", cons)
-    io.write("zarr.json", mapper.writerWithDefaultPrettyPrinter()
-      .writeValueAsBytes(rootNode))
+    io.write("zarr.json", pretty(rootNode))
     invalidateConsolidated()
   }
 
@@ -1595,8 +1484,9 @@ final class ZarrGroup(val root: String,
           val nChunks = (m.shape.head + m.chunks.head - 1) / m.chunks.head
           (0 until nChunks).foreach(i => io.deleteRecursive(s"$n/$i"))
         } else io.deleteRecursive(s"$n/c") // drop old chunks
-        createArray(n, m.shape, m.shape, m.dtype, m.attrs,
-          dimensionNames = Some(m.dimensionNames))
+        // the coord keeps its codec, fill value and byte order; only its
+        // grid becomes one (unsharded) chunk
+        createArray(n, m.copy(chunks = m.shape, shardShape = None))
         writeRegion(n, Vector.fill(m.shape.length)(0), data)
       }
     }

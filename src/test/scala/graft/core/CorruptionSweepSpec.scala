@@ -473,6 +473,24 @@ class CorruptionSweepSpec extends AnyFunSuite {
     assert(failed > 0, "no corruption failed — the sweep is vacuous")
   }
 
+  test("grib2: a corrupt grid size fails against the message before any allocation") {
+    // byte 72 of the ensemble sweep's first message lies in Nj: at 0xFF the
+    // grid passes the 2^27-point ceiling, so latLonArrays and decode would
+    // size their arrays from it unless the message's own counts bound it
+    val dir = tmpDir
+    val pa = s"$dir/ens.grib2"
+    graft.grib.Grib2.writeSimple(pa,
+      Array.tabulate(40)(i => (i % 7).toDouble), 8, 5,
+      la1 = 30.0, lo1 = 10.0, dLat = 0.5, dLon = 0.5,
+      discipline = 0, category = 0, number = 0,
+      refTimeEpochSec = 1600000000L, ensemble = Some((3, 9, 30)))
+    val bytes = Files.readAllBytes(Paths.get(pa))
+    bytes(72) = 0xFF.toByte
+    Files.write(Paths.get(pa), bytes)
+    val e = intercept[IllegalArgumentException](graft.grib.Grib2.readGroups(pa))
+    assert(e.getMessage.contains("but section 3 declares 40"), e.getMessage)
+  }
+
   /** Zarr stores are directories (JSON metadata + chunk objects), so the
     * sweep runs per store file: every byte of every metadata document and
     * a strided sample of every chunk payload, for BOTH formats (v3

@@ -128,8 +128,9 @@ class ZarrStoreSpec extends AnyFunSuite {
     // sharded + zstd inner codec via the meta doc path
     val noise = Array.fill(4 * 30)(rng.nextDouble())
     graft.zarr.StoreIO.forRoot(dir).write("b/zarr.json",
-      ZarrStore.arrayMetaDoc(Vector(4, 30), Vector(2, 30), DType.F8,
-        Map.empty, shardShape = Some(Vector(4, 30)), zstdLevel = Some(3)))
+      ZarrStore.renderV3(ZarrStore.ArrayMeta(Vector(4, 30), Vector(2, 30),
+        DType.F8, Map.empty, compressor = Some(ZarrStore.Compressor.Zstd(3)),
+        shardShape = Some(Vector(4, 30)))))
     g.writeRegion("b", Vector(0, 0), NDArray.ofDoubles(Vector(4, 30), noise))
     assert(g.readArray("b").data.asInstanceOf[Array[Double]].sameElements(noise))
     assert(g.readRegion("b", Vector(1, 5), Vector(2, 10))
@@ -242,6 +243,90 @@ class ZarrStoreSpec extends AnyFunSuite {
     assert(g.readArray("time").sameElements(data))
     assert(g.chunkExists("time", Vector(0)))
     assert(!g.chunkExists("time", Vector(4)))
+  }
+
+  test("consolidateDimensionCoordinates keeps codec, fill and byte order (zstd v3, blosc v2)") {
+    Seq(3 -> ZarrStore.Compressor.Zstd(3),
+        2 -> ZarrStore.Compressor.Blosc(Blosc.Params("lz4", 5, shuffle = true))
+    ).foreach { case (format, codec) =>
+      val root = tmp()
+      val g = ZarrGroup(root, format)
+      g.initGroup(Attrs.empty)
+      g.createArray("time", ZarrStore.ArrayMeta(Vector(10), Vector(2), DType.I8,
+        Map("units" -> AttrValue("days since 2000-01-01")), Some(Vector("time")),
+        Some(codec), fillValue = AttrValue.AInt(-1), bigEndian = true))
+      val data = NDArray(DType.I8, Vector(10), Array.tabulate(10)(_.toLong * 3))
+      g.writeRegion("time", Vector(0), data)
+      val before = g.arrayMeta("time")
+      g.consolidateDimensionCoordinates()
+      val reopened = ZarrGroup(root)
+      assert(reopened.arrayMeta("time") == before.copy(chunks = Vector(10)), s"v$format")
+      assert(reopened.readArray("time").sameElements(data), s"v$format")
+    }
+  }
+
+  /** Write a 10-step float array, then let `edit` rewrite its zarr.json. */
+  private def editedV3(edit: com.fasterxml.jackson.databind.node.ObjectNode => Unit,
+                       shardShape: Option[Vector[Int]] = None): ZarrGroup = {
+    val root = tmp()
+    val g = ZarrGroup(root)
+    g.initGroup(Attrs.empty)
+    g.createArray("v", Vector(10), Vector(2), DType.F8, Attrs.empty,
+      dimensionNames = Some(Vector("t")), shardShape = shardShape)
+    g.writeRegion("v", Vector(0),
+      NDArray(DType.F8, Vector(10), Array.tabulate(10)(_ + 1.0)))
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val path = java.nio.file.Paths.get(root, "v", "zarr.json")
+    val doc = mapper.readTree(path.toFile)
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    edit(doc)
+    Files.write(path, mapper.writeValueAsBytes(doc))
+    ZarrGroup(root)
+  }
+
+  test("a '.'-separated chunk key encoding fails by name instead of reading fill") {
+    // zarr-python's `separator: "."` layout: keys c.0, c.1, ... — read with
+    // "/" keys every chunk looks missing and the array reads as zeros
+    val g = editedV3(_.get("chunk_key_encoding").get("configuration")
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+      .put("separator", "."))
+    val root = java.nio.file.Paths.get(g.root, "v")
+    (0 until 5).foreach(i =>
+      Files.move(root.resolve(s"c/$i"), root.resolve(s"c.$i")))
+    val e = intercept[IllegalArgumentException](g.readArray("v"))
+    assert(e.getMessage.contains("chunk_key_encoding"), e.getMessage)
+    val e2 = intercept[IllegalArgumentException](editedV3(
+      _.get("chunk_key_encoding").asInstanceOf[
+        com.fasterxml.jackson.databind.node.ObjectNode].put("name", "v2"))
+      .arrayMeta("v"))
+    assert(e2.getMessage.contains("chunk_key_encoding"), e2.getMessage)
+  }
+
+  test("a codec outside the closed set fails by name instead of being skipped") {
+    val g = editedV3(_.get("codecs")
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ArrayNode]
+      .insertObject(0).put("name", "transpose")
+      .putObject("configuration").putArray("order").add(0))
+    val e = intercept[IllegalArgumentException](g.readArray("v"))
+    assert(e.getMessage.contains("'transpose' is not supported"), e.getMessage)
+  }
+
+  test("a shard index other than bytes-little + crc32c at the end fails by name") {
+    def shardCfg(doc: com.fasterxml.jackson.databind.node.ObjectNode) =
+      doc.get("codecs").get(0).get("configuration")
+        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    val edits: Seq[com.fasterxml.jackson.databind.node.ObjectNode => Unit] = Seq(
+      d => shardCfg(d).put("index_location", "start"),
+      d => shardCfg(d).get("index_codecs").get(0).get("configuration")
+        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+        .put("endian", "big"),
+      d => shardCfg(d).get("index_codecs")
+        .asInstanceOf[com.fasterxml.jackson.databind.node.ArrayNode].remove(1))
+    edits.foreach { edit =>
+      val g = editedV3(edit, shardShape = Some(Vector(4)))
+      val e = intercept[IllegalArgumentException](g.readArray("v"))
+      assert(e.getMessage.contains("shard index"), e.getMessage)
+    }
   }
 
   test("a zero-dimensional array reads back its one chunk, v3 and v2") {

@@ -147,11 +147,11 @@ class ZarrV2WriteSpec extends AnyFunSuite {
     // createArray doesn't emit filters; hand-write the doc the way h5py-
     // converted stores carry it, then exercise write+read through ArrayMeta
     Files.createDirectories(Paths.get(root, "v"))
-    Files.write(Paths.get(root, "v", ".zarray"), ZarrStore.arrayMetaDocV2(
-      Vector(4), Vector(2), DType.I8, zlibLevel = Some(6),
-      shuffleElem = Some(8)))
-    Files.write(Paths.get(root, "v", ".zattrs"),
-      ZarrStore.zattrsDocV2(Attrs.empty, Some(Vector("v"))))
+    val (zarray, zattrs) = ZarrStore.renderV2(ZarrStore.ArrayMeta(Vector(4),
+      Vector(2), DType.I8, Attrs.empty, Some(Vector("v")),
+      Some(ZarrStore.Compressor.Zlib(6)), shuffleElem = Some(8)))
+    Files.write(Paths.get(root, "v", ".zarray"), ZarrStore.pretty(zarray))
+    Files.write(Paths.get(root, "v", ".zattrs"), ZarrStore.pretty(zattrs))
     val data = NDArray(DType.I8, Vector(4), Array(1L, -2L, 3L, -4L))
     g.writeRegion("v", Vector(0), data)
     assert(ZarrGroup(root).readArray("v").sameElements(data))
