@@ -2,7 +2,8 @@ package graft.core
 
 /** Kryo registration list for the cube pipeline's shuffle payloads.
   *
-  * The engine moves fragments through `Encoders.kryo` binary columns; with
+  * The engine moves fragments through `Encoders.kryo` binary columns and
+  * the rechunk's Kryo RDD shuffle (`Pipelines.rechunk`); with
   * the classes registered, Kryo writes small class ids instead of fully
   * qualified class names per record. An array's record is what
   * [[NDArray]] writes: a file-backed array that has not loaded writes its

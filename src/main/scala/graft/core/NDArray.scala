@@ -139,7 +139,10 @@ final case class FileRows(path: String, begin: Long, rowBytes: Long,
   * long as it may be. Every other array's Kryo record carries its data:
   * loaded arrays, arrays derived from others, closure-deferred arrays
   * (which load first, so the closure never leaves the JVM that built it).
-  * Java serialization always loads first and carries the data.
+  * Java serialization always loads first and carries the data. The rechunk
+  * shuffle (`Pipelines.rechunk`) is Kryo by construction, whatever
+  * `spark.serializer` says, and its reduce side consumes pieces through
+  * `assign`, which reads a file-backed piece without loading it.
   */
 final class NDArray private (private var _dtype: DType,
                              private var _shape: Vector[Int],
@@ -227,11 +230,16 @@ final class NDArray private (private var _dtype: DType,
     new NDArray(dtype, outShape, out)
   }
 
-  /** Write `block` into this array at offset `starts` (region write). */
+  /** Write `block` into this array at offset `starts` (region write). An
+    * unloaded file-backed `block` reads its rows for this copy alone and
+    * stays a reference: consuming a piece does not load it. */
   def assign(starts: Vector[Int], block: NDArray): Unit = {
     require(block.ndim == ndim)
+    val r = if (block._data == null) block.rows else null
+    val src = if (r != null) NDArray.checked(block.shape, r.read(block.dtype, block.shape.head))
+      else block.data
     NDArray.copyRegion(
-      src = block.data, srcShape = block.shape, srcStart = Vector.fill(ndim)(0),
+      src = src, srcShape = block.shape, srcStart = Vector.fill(ndim)(0),
       dst = data, dstShape = shape, dstStart = starts,
       region = block.shape)
   }

@@ -281,7 +281,6 @@ object CombineReferences {
   def writeReferenceParquetV2(spark: org.apache.spark.sql.SparkSession,
                               rs: RefSet, path: String,
                               recordSize: Int = 10000): Unit = {
-    import spark.implicits._
     require(recordSize > 0, "recordSize must be positive")
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val entries = RefSet.toV2Entries(rs)
@@ -346,10 +345,11 @@ object CombineReferences {
       if (fs.exists(rootPath)) fs.delete(rootPath, true)
       fs.mkdirs(rootPath)
 
-    rows.toDF("component", "rec", "row", "path", "offset", "size", "raw")
-      .coalesce(1)
-      .sortWithinPartitions("component", "rec", "row")
-      .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
+    // the rows are on the driver already: sort them here, so that each
+    // (component, record) run is contiguous, and write them in one task
+    val sorted = rows.sortBy(r => (r._1, r._2, r._3))
+    spark.sparkContext.parallelize(sorted, 1)
+      .foreachPartition { it =>
         val conf = new org.apache.hadoop.conf.Configuration(false)
         bConf.value.foreach { case (k, v) => conf.set(k, v) }
         // no .crc sidecars in the artifact (fsspec expects refs.N.parq
@@ -379,8 +379,8 @@ object CombineReferences {
           writer.close(); writer = null
         }
         try {
-          it.foreach { r =>
-            val key = (r.getString(0), r.getInt(1))
+          it.foreach { case (component, rec, row, refPath, offset, size, raw) =>
+            val key = (component, rec)
             if (key != cur) {
               close()
               cur = key; nextRow = 0
@@ -391,14 +391,12 @@ object CombineReferences {
                 .builder(outputFileOn(taskFs, file))
                 .withConf(conf).withType(schema).build()
             }
-            val row = r.getInt(2)
             (nextRow until row).foreach(_ => writer.write(nullRow()))
             val g = factory.newGroup()
-            if (!r.isNullAt(3)) g.add("path", r.getString(3))
-            g.add("offset", r.getLong(4)); g.add("size", r.getLong(5))
-            if (!r.isNullAt(6)) g.add("raw",
-              org.apache.parquet.io.api.Binary.fromConstantByteArray(
-                r.getAs[Array[Byte]](6)))
+            if (refPath != null) g.add("path", refPath)
+            g.add("offset", offset); g.add("size", size)
+            if (raw != null) g.add("raw",
+              org.apache.parquet.io.api.Binary.fromConstantByteArray(raw))
             writer.write(g)
             nextRow = row + 1
           }

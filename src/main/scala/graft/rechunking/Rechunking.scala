@@ -5,9 +5,10 @@ import graft.core._
 /** The rechunk shuffle kernel (rechunking.py:23-242):
   * `splitFragment` slices each indexed fragment against the target chunk
   * grid and keys the pieces by target-chunk group; after the shuffle
-  * (`Pipelines.rechunk`: repartition by group key, then sort within each
-  * partition), `combineFragments` reassembles each group into one
-  * contiguous fragment.
+  * (`Pipelines.rechunk`: a Kryo RDD shuffle hashed by group key, each
+  * reduce partition sorted by key), `combineFragments` reassembles each
+  * group into one contiguous fragment. It reads each piece through
+  * `NDArray.assign`, so a file-backed piece stays a reference.
   *
   * GroupKey is a sorted tuple of ("dim", chunkIndex) pairs plus the merge-dim
   * positions, so groups are homogeneous in all merge dimensions.

@@ -6,8 +6,10 @@ import graft.combiners.SchemaCombine
 import graft.patterns.{FilePattern, FileType}
 import graft.rechunking.Rechunking
 import graft.zarr.{ZarrGroup, ZarrStore}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
+import org.apache.spark.serializer.KryoSerializer
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.functions.col
 
 /** A fragment about to enter the rechunk shuffle exceeds the kryo
   * serializer's write-buffer ceiling — it would otherwise fail later and
@@ -34,7 +36,8 @@ final class FragmentExceedsSerializerBufferException(
   * schema alone), the shuffle would regroup nothing and `storeToZarr`
   * writes each piece in the task that split it: no shuffle at all.
   *
-  * Scale notes: fragment payloads move through Kryo-encoded binary columns;
+  * Scale notes: fragment payloads move through Kryo-encoded binary columns
+  * and, in the rechunk, a Kryo-serialized RDD shuffle;
   * the only all-to-one step is the schema merge: at most partitions × outer
   * positions accumulators of ~1 KB each, at any combine depth. When chunks
   * are shared, the rechunk shuffle — the reference's acknowledged hotspot
@@ -203,25 +206,29 @@ object Pipelines {
     * runs whether or not the groups regroup anything (`storeToZarr` skips
     * it when they would not).
     *
-    * The reduce side has `defaultParallelism` partitions, sized by work
-    * like `createItems` and `scanZarrStore`, not by bytes: a piece of a
-    * file-backed array crosses the shuffle as a byte-range reference of a
-    * few dozen bytes, and AQE would coalesce such a shuffle into one task
-    * that then reads and writes every chunk alone. A shuffle with an
-    * explicit partition count is one AQE leaves alone. Each partition is
-    * sorted by group key and combined one group at a time, as `mapGroups`
-    * would. */
+    * The shuffle is an RDD shuffle with `defaultParallelism` reduce
+    * partitions, sized by work like `createItems` and `scanZarrStore`, not
+    * by bytes. Its records are Kryo-serialized whatever `spark.serializer`
+    * says, so a piece of a file-backed array crosses it as a byte-range
+    * reference of a few dozen bytes (Java serialization would load it
+    * first). The reduce side sorts the deserialized pieces by group key as
+    * objects, with no memory page per task, and combines one group at a
+    * time, as `mapGroups` would. Combining reads a referenced piece's bytes
+    * without keeping them in the piece (`NDArray.assign`), so the sorter's
+    * buffer holds references and a task holds one group's bytes at a
+    * time. */
   def rechunk(frags: Dataset[(Index, Fragment)],
               targetChunks: Option[Map[String, Int]],
-              schema: Option[CubeSchema]): Dataset[(Index, Fragment)] = {
-    val spark = frags.sparkSession
-    val split = guardedSplit(spark, targetChunks, schema)
-    frags
-      .flatMap { case (idx, ds) =>
-        split(idx, ds).map { case (k, v) => (Rechunking.groupKeyString(k), v) }
-      }(Encoders.tuple(Encoders.STRING, Encoders.kryo[(Index, Fragment)]))
-      .repartition(spark.sparkContext.defaultParallelism, col("_1"))
-      .sortWithinPartitions("_1")
+              schema: Option[CubeSchema]): RDD[(Index, Fragment)] = {
+    val sc = frags.sparkSession.sparkContext
+    val split = guardedSplit(frags.sparkSession, targetChunks, schema)
+    val keyed = frags.rdd.flatMap { case (idx, ds) =>
+      split(idx, ds).map { case (k, v) => (Rechunking.groupKeyString(k), v) }
+    }
+    new ShuffledRDD[String, (Index, Fragment), (Index, Fragment)](
+        keyed, new HashPartitioner(sc.defaultParallelism))
+      .setKeyOrdering(Ordering.String)
+      .setSerializer(new KryoSerializer(sc.getConf))
       .mapPartitions { it =>
         val pieces = it.buffered
         new Iterator[(Index, Fragment)] {
@@ -233,7 +240,7 @@ object Pipelines {
             Rechunking.combineFragments(group.result())
           }
         }
-      }(Encoders.kryo[(Index, Fragment)])
+      }
   }
 
   /** `Rechunking.splitFragment` with a deploy-time guard (SCALE_r6 finding

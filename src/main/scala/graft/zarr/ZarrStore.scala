@@ -1274,7 +1274,11 @@ final class ZarrGroup(val root: String,
           val hi = math.min(lo + cs, meta.shape(k))
           Slc(lo - starts(k), hi - starts(k))
         }.toVector
-        val piece = block.slice(slices)
+        // a block that is exactly this object is encoded as it is: no
+        // encoder writes into its input
+        val piece =
+          if (slices.zip(block.shape).forall { case (s, n) => s.start == 0 && s.stop == n }) block
+          else block.slice(slices)
         // v3 stores full-size objects; remainder objects at the array edge
         // are padded with fill beyond the edge for spec fidelity.
         val toWrite =

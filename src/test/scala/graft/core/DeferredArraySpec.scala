@@ -86,6 +86,26 @@ class DeferredArraySpec extends AnyFunSuite {
     intercept[java.nio.file.NoSuchFileException](arr.data)
   }
 
+  test("combining file-backed pieces reads them without loading them") {
+    val (_, arr, eager) = rowFile(64, 8)
+    val t = Dimension("t", CombineOp.Concat)
+    val bounds = Vector(0, 5, 12, 30, 64)
+    val pieces = bounds.zip(bounds.tail).map { case (a, b) =>
+      val piece = arr.slice(Vector(Slc(a, b), Slc(0, 3)))
+      (Index.of(t -> Pos.indexed(a, 64)),
+        Fragment(Map("t" -> (b - a), "c" -> 3), Map.empty,
+          Map("v" -> Variable(Vector("t", "c"), piece))))
+    }
+    val references = pieces.map(_._2.recordBytes)
+    assert(references.forall(_ < 128), references)
+    val (idx, combined) = graft.rechunking.Rechunking.combineFragments(pieces.reverse)
+    assert(idx == pieces.head._1)
+    assert(combined.dataVars("v").data.sameElements(eager))
+    // every piece is still its reference: consuming it kept no bytes
+    assert(pieces.map(_._2.recordBytes) == references)
+    assert(pieces.forall(p => kryoRecord(p._2.dataVars("v").data) < 128))
+  }
+
   test("a non-leading slice loads the file-backed array") {
     val (path, arr, eager) = rowFile(4, 8)
     val cols = Vector(Slc(0, 4), Slc(1, 2))

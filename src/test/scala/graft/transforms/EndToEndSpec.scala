@@ -639,7 +639,7 @@ class EndToEndSpec extends AnyFunSuite {
       val loaded = frags.map { case (idx, f) =>
         f.allVars.valuesIterator.foreach(_.data.data); (idx, f)
       }(Encoders.kryo[(Index, Fragment)])
-      val (_, stages) = labelledRun("storeToZarr: rechunk shuffle + write") {
+      val (jobs, stages) = labelledRun("storeToZarr: rechunk shuffle + write") {
         Pipelines.storeToZarr(frags, pattern.combineDimKeys, s"$dir/refs.zarr", Map("time" -> 8))
       }
       Pipelines.storeToZarr(loaded, pattern.combineDimKeys, s"$dir/bytes.zarr", Map("time" -> 8))
@@ -655,6 +655,11 @@ class EndToEndSpec extends AnyFunSuite {
       val written = map.head.taskMetrics.shuffleWriteMetrics.bytesWritten
       assert(written < 1024L * 2 * files, s"$written shuffle bytes for ${2 * files} fragments")
       assert(reduce.head.numTasks == spark.sparkContext.defaultParallelism)
+      // one job of two stages, and a reduce side that holds references:
+      // no sort page per task
+      assert(jobs == 1, stages.map(_.name))
+      val peak = reduce.head.taskMetrics.peakExecutionMemory
+      assert(peak < (1L << 20), s"$peak bytes of reduce-side execution memory")
     }
   }
 

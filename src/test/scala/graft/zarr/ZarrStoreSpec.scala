@@ -364,6 +364,55 @@ class ZarrStoreSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](g.resize("foo", Vector(8)))
   }
 
+  test("a block that is exactly one object is encoded in place, not copied") {
+    // every encoder reads its input: the block keeps its values, and the
+    // object holds the same bytes as one written from a sliced copy
+    def store(meta: ZarrStore.ArrayMeta, block: NDArray): Map[String, Seq[Byte]] = {
+      val root = tmp()
+      val g = ZarrGroup(root)
+      g.initGroup(Attrs.empty)
+      g.createArray("v", meta)
+      g.writeRegion("v", Vector.fill(meta.shape.length)(0), block)
+      val dir = java.nio.file.Paths.get(root)
+      val files = Files.walk(dir.resolve("v"))
+      try files.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(f => dir.relativize(f).toString -> Files.readAllBytes(f).toSeq).toMap
+      finally files.close()
+    }
+    val doubles = Array.tabulate(8 * 6)(i => math.sin(i) * 100)
+    val longs = Array.tabulate(8 * 6)(i => i.toLong * i)
+    Seq(
+      ZarrStore.ArrayMeta(Vector(8, 6), Vector(8, 6), DType.F8, Attrs.empty) -> doubles,
+      ZarrStore.ArrayMeta(Vector(8, 6), Vector(8, 6), DType.F8, Attrs.empty,
+        compressor = Some(ZarrStore.Compressor.Zstd(3)), shuffleElem = Some(8)) -> doubles,
+      ZarrStore.ArrayMeta(Vector(8, 6), Vector(8, 6), DType.F8, Attrs.empty,
+        numFilter = Some(ZarrStore.QuantizeParams(2, "<f8", "<f8"))) -> doubles,
+      ZarrStore.ArrayMeta(Vector(8, 6), Vector(8, 6), DType.I8, Attrs.empty,
+        numFilter = Some(ZarrStore.DeltaParams("<i8", "<i8"))) -> longs,
+      ZarrStore.ArrayMeta(Vector(8, 6), Vector(2, 3), DType.F8, Attrs.empty,
+        shardShape = Some(Vector(8, 6))) -> doubles
+    ).foreach { case (meta, values) =>
+      val block = NDArray(meta.dtype, meta.shape, values)
+      val whole = meta.shape.map(Slc(0, _))
+      val (copy, before) = (block.slice(whole), block.slice(whole))
+      assert(store(meta, block) == store(meta, copy), meta)
+      assert(block.sameElements(before), meta)
+    }
+    // the write allocates the encoded object, not a second copy of the block
+    val big = NDArray.ofDoubles(Vector(256, 1024), Array.tabulate(256 * 1024)(_.toDouble))
+    val g = ZarrGroup(tmp())
+    g.initGroup(Attrs.empty)
+    Seq("warm", "v").foreach(g.createArray(_, big.shape, big.shape, DType.F8, Attrs.empty))
+    g.writeRegion("warm", Vector(0, 0), big)
+    val threads = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val allocated0 = threads.getCurrentThreadAllocatedBytes
+    g.writeRegion("v", Vector(0, 0), big)
+    val allocated = threads.getCurrentThreadAllocatedBytes - allocated0
+    val blockBytes = big.size * 8L
+    assert(allocated < blockBytes * 3 / 2, s"$allocated bytes allocated for a $blockBytes-byte block")
+  }
+
   test("PosixIO publishes an object only when its write completes") {
     val root = tmp()
     val io = new PosixIO(root)
